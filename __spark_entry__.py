@@ -29,7 +29,7 @@ from fastie_spark.derive import (
 )
 from fastie_spark.fixtures import NER_LABELS, PREDICATES
 from fastie_spark.linking import link_triples
-from fastie_spark.pipeline import run_extraction
+from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
 from fastie_spark.textops import REGISTRY
 
@@ -55,10 +55,9 @@ def _kg(spark: SparkSession, sf_dir: str) -> dict:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     vocab, toks = derived_vocab(spark, docs)
     pages = docs_as_pages(docs)
-    ext = run_extraction(spark, pages, vocab, persist=True)  # one UDF pass
-    mentions = ext["mentions"]
-    triples = ext["triples"].persist()  # feeds linking chain repeatedly
-    events = ext["events"]
+    # one persisted UDF pass; mentions/triples/events are filters over it
+    ext = run_extraction_fused(spark, pages, vocab, from_html=False)
+    mentions, triples, events = ext["mentions"], ext["triples"], ext["events"]
 
     linker = local_df(
         spark, derived_linker_rows(toks),

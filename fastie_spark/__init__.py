@@ -23,7 +23,7 @@ the Spark UDFs):
 spark-side:
     session.py       SparkSession builder (AQE, Arrow, shuffle tuning)
     text_extract.py  html -> text byte-identical extraction stage
-    pipeline.py      chunk -> tokenize -> score -> decode -> rejoin stages
+    pipeline.py      fused extract -> chunk -> tokenize -> score -> decode stage
     linking.py       broadcast-dict entity linking + normalization
     cc.py            connected-components canonicalization (large/small star)
     materialize.py   nodes/edges/provenance writes + snapshot manifest

@@ -1,33 +1,27 @@
-"""Extraction pipeline: pages -> chunks -> (tokenize+score+decode) -> rejoin.
+"""Extraction pipeline: pages -> (extract, chunk, tokenize, score, decode,
+rejoin) -> mention/triple/event rows.
 
-Spark-first design notes (the judge-facing architecture rationale):
+Spark-first design notes:
 
-- **Chunking is relational** (no UDF): fixed-window ``auto_splitter``
-  semantics (split_sentence=False — reference default,
-  /root/reference/fastie/models/named_entity_recognition/global_pointer/
-  decode_utils.py:70-106) become ``sequence + transform + substring +
-  explode``; ``char_base = chunk_idx * 510`` reproduces the J1 rejoin shift
-  (cumulative chunk char length) exactly, because fixed windows make the
-  cumulative sum closed-form. Catalyst codegens the whole stage.
-
-- **Tokenize + score + decode are fused into ONE mapInPandas stage.** The
-  token ids / offset maps / score grids never become DataFrame columns — they
-  are intermediate per-chunk state inside the Arrow batch, so nothing
-  O(L) or O(L^2) is ever shuffled. The stage's output is already the small
-  mention/triple/event relation. At 100 TB this is the difference between
-  shuffling kilobytes per doc and shuffling nothing but results.
+- **One per-document stage.** html->text, fixed-window chunking (P6),
+  space masking (P3), tokenize (T1), score and decode (M1/M8/M14) all run
+  inside ONE ``mapInArrow`` stage, one row per page in. The token ids /
+  offset maps / score grids never become DataFrame columns — they are
+  intermediate per-doc state inside the Arrow batch, so nothing O(L) or
+  O(L^2) is ever shuffled. The stage's output is already the small
+  mention/triple/event relation.
 
 - **Explicit url-hash repartition** before the heavy stage (input_hint):
-  co-locates all chunks of a url, sizes tasks evenly, and makes the
-  downstream per-url dedup/groupBy cheap.
+  sizes tasks evenly; it is the plan's only exchange, and a source already
+  bucketed by url can skip it (``repartition=False``).
 
-- **Chunk rejoin**: mention offsets are shifted by ``char_base`` inside the
-  UDF (J1). Mentions need no dedup (chunks cover disjoint char ranges and
-  each chunk's decode already returns a set, so a global mention tuple can
-  arise only once). Triples keep reference J2 semantics (plain set union
-  per url, offsets dropped) = one ``dropDuplicates`` shuffle on
-  (url, subj, pred, obj). Events are decoded on chunk 0 only — the
-  reference event driver truncates instead of chunking
+- **Chunk rejoin happens in the doc loop.** Mention offsets are shifted by
+  the chunk's cumulative char offset (J1). Mentions need no dedup (chunks
+  cover disjoint char ranges and each chunk's decode already returns a
+  set). Triples keep reference J2 semantics (plain set union per url,
+  offsets dropped) as an in-memory set per doc, so no dedup shuffle is
+  needed. Events are decoded on the first ``max_length - 2`` chars only —
+  the reference event driver truncates instead of chunking
   (.../event_extraction/gplinker/decode_utils.py:104-136).
 """
 
@@ -36,22 +30,18 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .decoders import (
-    event_decode_cells,
     event_decode_from_argus,
     event_set2json,
-    gp_decode_cells,
     gplinker_decode_cells,
 )
 from .scorer import DictScorer, Vocab
 from .tokenizer import encode_meta as encode
 
 MAX_LENGTH = 512  # reference default (decode_utils.py:124)
-CHUNK_LEN = MAX_LENGTH - 2  # max_predict_len (decode_utils.py:132)
 
 EXTRACT_SCHEMA = (
     "url string, kind string, label string, start long, end long, "
@@ -72,23 +62,6 @@ def repartition_by_url(df: DataFrame, num_partitions: int | None = None) -> Data
     return df.repartition(F.xxhash64("url"))
 
 
-def chunk_pages(pages: DataFrame, chunk_len: int = CHUNK_LEN) -> DataFrame:
-    """Relational P6 chunker: (url, chunk_idx, char_base, chunk_text)."""
-    chunks = F.expr(
-        f"""
-        transform(
-          sequence(0, greatest(cast(ceil(length(text) / {chunk_len}.0) as int), 1) - 1),
-          i -> struct(
-            i as chunk_idx,
-            substring(text, i * {chunk_len} + 1, {chunk_len}) as chunk_text,
-            cast(i * {chunk_len} as long) as char_base))
-        """
-    )
-    return pages.select(
-        "url", F.explode(chunks).alias("c")
-    ).select("url", "c.chunk_idx", "c.char_base", "c.chunk_text")
-
-
 def _event_key(url: str, etype: str, trigger: str, args: list) -> str:
     # separators are C0 controls >0 so the exact same concatenation is
     # reproducible in DuckDB (chr(0) is not representable in its VARCHAR)
@@ -96,88 +69,6 @@ def _event_key(url: str, etype: str, trigger: str, args: list) -> str:
         f"{r}\x1e{a}" for r, a in sorted(args)
     )
     return hashlib.md5((url + "\x1d" + canon).encode("utf-8")).hexdigest()
-
-
-def make_extract_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
-                    do_events: bool = True):
-    """Fused tokenize+score+decode mapInPandas function. The scorer and
-    label maps are built once per PYTHON WORKER (executor_init worker cache
-    keyed by vocab fingerprint — the Spark analogue of per-worker model
-    load), so repeated tasks on a reused worker pay zero init."""
-    from .executor_init import get_or_build
-
-    cache_key = f"dict_scorer|{vocab.fingerprint()}|{max_length}"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer, ner_id2label, re_id2pred, event_id2label = get_or_build(
-            cache_key,
-            lambda: (
-                DictScorer(vocab, max_length),
-                dict(enumerate(vocab.ner_labels())),
-                dict(enumerate(vocab.predicates())),
-                dict(enumerate(vocab.event_labels())),
-            ),
-        )
-
-        for pdf in batches:
-            rows = []
-            for url, chunk_idx, char_base, chunk in zip(
-                pdf["url"], pdf["chunk_idx"], pdf["char_base"], pdf["chunk_text"]
-            ):
-                masked = chunk.replace(" ", "-")  # P3
-                enc = encode(masked, max_length)
-                l, mapping = enc["seq_len"], enc["offset_mapping"]
-
-                # M1 mentions (offsets shifted by char_base = J1 rejoin)
-                for lbl, s, e, surf in gp_decode_cells(
-                    scorer.ner_cells(masked), l, chunk, mapping, ner_id2label
-                ):
-                    rows.append(
-                        (url, "mention", lbl, s + char_base, e + char_base,
-                         surf, None, None, None, None, None, None, None, None)
-                    )
-
-                # M8 triples
-                ent, head, tail = scorer.re_cells(masked)
-                for pred, subj, obj in gplinker_decode_cells(
-                    ent, head, tail, l, chunk, mapping, re_id2pred
-                ):
-                    rows.append(
-                        (url, "triple", None, None, None, None,
-                         subj, pred, obj, None, None, None, None, None)
-                    )
-
-                # M14/M15 events — reference truncates, never chunks
-                if do_events and chunk_idx == 0:
-                    argu, eh, et = scorer.event_cells(masked)
-                    events = event_decode_cells(
-                        argu, eh, et, l, chunk, mapping, event_id2label
-                    )
-                    for ev in event_set2json(events):
-                        args = [(a["role"], a["argument"]) for a in ev["arguments"]]
-                        key = _event_key(url, ev["event_type"], ev.get("trigger"), args)
-                        for role, arg in args:
-                            rows.append(
-                                (url, "event", None, None, None, None,
-                                 None, None, None, ev["event_type"],
-                                 ev.get("trigger"), role, arg, key)
-                            )
-                        if not args:  # trigger-only event still exists
-                            rows.append(
-                                (url, "event", None, None, None, None,
-                                 None, None, None, ev["event_type"],
-                                 ev.get("trigger"), None, None, key)
-                            )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "kind", "label", "start", "end", "surface",
-                    "subj", "pred", "obj", "event_type", "trigger", "role",
-                    "argument", "event_key",
-                ],
-            )
-
-    return fn
 
 
 def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
@@ -188,14 +79,13 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     space-mask (P3), tokenize (T1), score, decode (M1/M8/M14), chunk-rejoin
     (J1/J2) — all inside ONE Arrow batch pass, one row per page in.
     Returns (setup, process): setup() resolves the per-worker scorer ctx,
-    process(urls, srcs, ctx) -> row tuples; the mapInPandas / mapInArrow
-    wrappers below share them.
+    process(urls, srcs, ctx) -> row tuples; make_fused_doc_arrow_fn wraps
+    them in the mapInArrow boundary.
 
     Why fused: each extra python stage costs a JVM<->Arrow boundary and a
     scheduler barrier, and the J2 per-doc set union becomes a free in-memory
     dedup here (urls are unique, so no global dedup shuffle is needed at
-    all). The relational chunker in chunk_pages stays available as a
-    standalone operator; this is the throughput path for the e2e job.
+    all).
 
     Model init is per-PYTHON-WORKER, not per task: the scorer + label maps
     are built lazily through executor_init.get_or_build keyed by the vocab
@@ -227,9 +117,10 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
         return get_or_build(cache_key, build, init_acc)
 
     def process(urls, srcs, ctx) -> list:
-        """The per-doc extract->score->decode loop over one batch; shared by
-        the pandas (make_fused_doc_fn) and arrow (make_fused_doc_arrow_fn)
-        wrappers so the two boundaries cannot drift semantically."""
+        """The per-doc extract->score->decode loop over one batch of
+        (url, html) or (url, text) values; returns EXTRACT_SCHEMA row
+        tuples. A page that yields no text (null, undecodable html) yields
+        no rows."""
         scorer, ner_id2label, re_id2pred, event_id2label = ctx
         # affix-free vocabularies take the fused scorer fast paths
         # (mentions_fast always valid; triples_fast needs the gate — see
@@ -237,134 +128,101 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
         # grid-build + decode, output-identical by the parity tests
         fast_re = scorer._affix_free
         rows = []
-        if True:
-            for url, src in zip(urls, srcs):
-                if from_html:
-                    try:
-                        text = extract_text_py(src)
-                    except (UnicodeDecodeError, ValueError, TypeError,
-                            AttributeError):
-                        # real crawls carry garbage bytes; a poison page must
-                        # not kill the task — it just yields no extractions
-                        # (the byte-identity contract applies to well-formed
-                        # pages and is asserted separately in tests)
-                        continue
-                else:
-                    text = src
-                if split_sentence:
-                    chunks, _ = auto_splitter([text], max_length - 2, True)
-                else:
-                    chunks = split_one(text, max_length - 2)
-                bases = char_bases(chunks)
-                if do_events:
-                    # reference event driver truncates the DOC (no chunking,
-                    # decode_utils.py:104-136) — independent of chunk mode.
-                    # Only the first max_length-2 chars are decodable (the
-                    # scorer truncation-filters spans to that prefix and
-                    # seq_len caps there), so mask and scan ONLY the prefix:
-                    # identical cells at a fraction of the matcher work on
-                    # long docs. Running the event pass FIRST also makes its
-                    # masked text equal chunk 0's (fixed-window mode), so
-                    # the chunk loop's first occurrence scan is served from
-                    # the scorer memo instead of re-scanning.
-                    masked = text[: max_length - 2].replace(" ", "-")
-                    enc = encode(masked, max_length)
-                    l, mapping = enc["seq_len"], enc["offset_mapping"]
-                    # fused event path: argus come out of the scorer already
-                    # decoded (event_views), skipping the per-cell label
-                    # split + dead bound checks of the generic decode
-                    argus, eh, et = scorer.event_views(masked)
-                    for ev in event_set2json(
-                        event_decode_from_argus(argus, eh, et, text, mapping)
-                    ):
-                            args = [(a["role"], a["argument"])
-                                    for a in ev["arguments"]]
-                            key = _event_key(url, ev["event_type"],
-                                             ev.get("trigger"), args)
-                            for role, arg in args:
-                                rows.append(
-                                    (url, "event", None, None, None, None,
-                                     None, None, None, ev["event_type"],
-                                     ev.get("trigger"), role, arg, key)
-                                )
-                            if not args:  # trigger-only event still exists
-                                rows.append(
-                                    (url, "event", None, None, None, None,
-                                     None, None, None, ev["event_type"],
-                                     ev.get("trigger"), None, None, key)
-                                )
-                doc_triples: set = set()
-                for chunk, base in zip(chunks, bases):
-                    masked = chunk.replace(" ", "-")
-                    enc = encode(masked, max_length)
-                    l, mapping = enc["seq_len"], enc["offset_mapping"]
-                    for lbl, s, e, surf in scorer.mentions_fast(
-                        masked, chunk, mapping, ner_id2label
-                    ):
+        for url, src in zip(urls, srcs):
+            if from_html:
+                try:
+                    text = extract_text_py(src)
+                except (UnicodeDecodeError, ValueError, TypeError,
+                        AttributeError):
+                    # real crawls carry garbage bytes; a poison page must
+                    # not kill the task — it just yields no extractions
+                    # (the byte-identity contract applies to well-formed
+                    # pages and is asserted separately in tests)
+                    continue
+            elif src is None:  # nullable text (streaming, api) — no rows
+                continue
+            else:
+                text = src
+            if split_sentence:
+                chunks, _ = auto_splitter([text], max_length - 2, True)
+            else:
+                chunks = split_one(text, max_length - 2)
+            bases = char_bases(chunks)
+            if do_events:
+                # reference event driver truncates the DOC (no chunking,
+                # decode_utils.py:104-136) — independent of chunk mode.
+                # Only the first max_length-2 chars are decodable (the
+                # scorer truncation-filters spans to that prefix and
+                # seq_len caps there), so mask and scan ONLY the prefix:
+                # identical cells at a fraction of the matcher work on
+                # long docs. Running the event pass FIRST also makes its
+                # masked text equal chunk 0's (fixed-window mode), so
+                # the chunk loop's first occurrence scan is served from
+                # the scorer memo instead of re-scanning.
+                masked = text[: max_length - 2].replace(" ", "-")
+                mapping = encode(masked, max_length)["offset_mapping"]
+                # fused event path: argus come out of the scorer already
+                # decoded (event_views), skipping the per-cell label
+                # split + dead bound checks of the generic decode
+                argus, eh, et = scorer.event_views(masked)
+                for ev in event_set2json(
+                    event_decode_from_argus(argus, eh, et, text, mapping)
+                ):
+                    etype, trigger = ev["event_type"], ev.get("trigger")
+                    args = [(a["role"], a["argument"])
+                            for a in ev["arguments"]]
+                    key = _event_key(url, etype, trigger, args)
+                    # a trigger-only event still exists: one null-role row
+                    for role, arg in args or [(None, None)]:
                         rows.append(
-                            (url, "mention", lbl, s + base, e + base, surf,
-                             None, None, None, None, None, None, None, None)
+                            (url, "event", None, None, None, None, None,
+                             None, None, etype, trigger, role, arg, key)
                         )
-                    if fast_re:
-                        doc_triples |= scorer.triples_fast(
-                            masked, chunk, mapping, re_id2pred
-                        )
-                    else:
-                        ent, head, tail = scorer.re_cells(masked)
-                        doc_triples |= gplinker_decode_cells(
-                            ent, head, tail, l, chunk, mapping, re_id2pred
-                        )
-                for pred, subj, obj in doc_triples:  # J2 union done in-doc
+            doc_triples: set = set()
+            for chunk, base in zip(chunks, bases):
+                masked = chunk.replace(" ", "-")
+                enc = encode(masked, max_length)
+                l, mapping = enc["seq_len"], enc["offset_mapping"]
+                for lbl, s, e, surf in scorer.mentions_fast(
+                    masked, chunk, mapping, ner_id2label
+                ):
                     rows.append(
-                        (url, "triple", None, None, None, None,
-                         subj, pred, obj, None, None, None, None, None)
+                        (url, "mention", lbl, s + base, e + base, surf,
+                         None, None, None, None, None, None, None, None)
                     )
+                if fast_re:
+                    doc_triples |= scorer.triples_fast(
+                        masked, chunk, mapping, re_id2pred
+                    )
+                else:
+                    ent, head, tail = scorer.re_cells(masked)
+                    doc_triples |= gplinker_decode_cells(
+                        ent, head, tail, l, chunk, mapping, re_id2pred
+                    )
+            for pred, subj, obj in doc_triples:  # J2 union done in-doc
+                rows.append(
+                    (url, "triple", None, None, None, None,
+                     subj, pred, obj, None, None, None, None, None)
+                )
         return rows
 
     return setup, process
 
 
-_EXTRACT_COLS = [
-    "url", "kind", "label", "start", "end", "surface",
-    "subj", "pred", "obj", "event_type", "trigger", "role",
-    "argument", "event_key",
-]
-
-
-def make_fused_doc_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
-                      do_events: bool = True, from_html: bool = True,
-                      split_sentence: bool = False, vocab_bc=None,
-                      init_acc=None):
-    """mapInPandas wrapper over _fused_doc_processor (see its docstring).
-    Kept for API compatibility; the e2e job uses the arrow wrapper below,
-    which skips the pandas intermediate on both sides of the boundary."""
-    setup, process = _fused_doc_processor(
-        vocab, max_length=max_length, do_events=do_events,
-        from_html=from_html, split_sentence=split_sentence,
-        vocab_bc=vocab_bc, init_acc=init_acc,
-    )
-    src_col = "html" if from_html else "text"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = setup()
-        for pdf in batches:
-            rows = process(pdf["url"], pdf[src_col], ctx)
-            yield pd.DataFrame(rows, columns=_EXTRACT_COLS)
-
-    return fn
+# (name, ddl type) of each EXTRACT_SCHEMA column
+_EXTRACT_FIELDS = [f.split() for f in EXTRACT_SCHEMA.split(", ")]
 
 
 def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
                             do_events: bool = True, from_html: bool = True,
                             split_sentence: bool = False, vocab_bc=None,
                             init_acc=None):
-    """mapInArrow wrapper over the SAME per-doc processor: input columns are
+    """mapInArrow wrapper over the per-doc processor: input columns are
     read straight off the Arrow record batch and output rows become Arrow
     arrays directly — no pandas block building on either side (guide-§4
     Python-boundary cost; measured ~35 ms per 58k output rows for the
     DataFrame construction alone, plus the serializer's pandas->arrow
-    conversion on top). Row content is byte-identical to the pandas
-    wrapper because both call one `process`."""
+    conversion on top)."""
     import pyarrow as pa
 
     setup, process = _fused_doc_processor(
@@ -373,10 +231,9 @@ def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
         vocab_bc=vocab_bc, init_acc=init_acc,
     )
     src_col = "html" if from_html else "text"
-    types = [
-        pa.int64() if c in ("start", "end") else pa.string()
-        for c in _EXTRACT_COLS
-    ]
+    names = [name for name, _ in _EXTRACT_FIELDS]
+    types = [pa.int64() if t == "long" else pa.string()
+             for _, t in _EXTRACT_FIELDS]
 
     def fn(batches) -> Iterator["pa.RecordBatch"]:
         ctx = setup()
@@ -386,13 +243,10 @@ def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
                 batch.column(src_col).to_pylist(),
                 ctx,
             )
-            cols = (
-                list(zip(*rows)) if rows
-                else [[] for _ in _EXTRACT_COLS]
-            )
+            cols = list(zip(*rows)) if rows else [[] for _ in names]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(v, type=t) for v, t in zip(cols, types)],
-                names=_EXTRACT_COLS,
+                names=names,
             )
 
     return fn
@@ -412,9 +266,10 @@ def run_extraction_fused(
     broadcast_vocab: bool = False,
     init_acc=None,
 ) -> dict:
-    """Fused-stage variant of run_extraction. pages needs (url, html) when
-    from_html else (url, text). Triples come out already per-doc-deduped
-    (J2), so no dropDuplicates shuffle. split_sentence enables the P5
+    """pages -> {'mentions','triples','events','_raw'} DataFrames through
+    the one fused mapInArrow stage. pages needs (url, html) when from_html
+    else (url, text). Triples come out already per-doc-deduped (J2), so
+    there is no dedup shuffle. split_sentence enables the P5
     sentence-level auto_splitter chunking (reference flag, default off).
 
     repartition=False skips the explicit url-hash shuffle: the fused stage
@@ -450,30 +305,3 @@ def run_extraction_fused(
     events = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
     return {"mentions": mentions, "triples": triples, "events": events, "_raw": raw}
 
-
-def run_extraction(
-    spark: SparkSession,
-    pages: DataFrame,
-    vocab: Vocab,
-    num_partitions: int | None = None,
-    do_events: bool = True,
-    persist: bool = True,
-) -> dict:
-    """pages(url, text[, html...]) -> {'mentions','triples','events'} DFs."""
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    chunks = chunk_pages(repartition_by_url(pages.select("url", "text"), parts))
-    raw = chunks.mapInPandas(
-        make_extract_fn(vocab, do_events=do_events), schema=EXTRACT_SCHEMA
-    )
-    if persist:
-        raw = raw.persist()
-
-    mentions = raw.filter(F.col("kind") == "mention").select(*MENTION_COLS)
-    # J2: per-url set union == dedup on the full triple key
-    triples = (
-        raw.filter(F.col("kind") == "triple")
-        .select(*TRIPLE_COLS)
-        .dropDuplicates(TRIPLE_COLS)
-    )
-    events = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
-    return {"mentions": mentions, "triples": triples, "events": events, "_raw": raw}

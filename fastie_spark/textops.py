@@ -108,8 +108,9 @@ FROM documents
 
 
 def chunk_explode(spark, sf_dir):
-    """The chunker itself, relationally (doc_id, chunk_idx, char_base,
-    chunk_len). At scale this is the explode feeding the fused UDF stage."""
+    """The P6 fixed-window chunker as a relation (doc_id, chunk_idx,
+    char_base, chunk_len): sequence+substring, no UDF. The fused extraction
+    stage chunks in-loop with the same windows (chunking.split_one)."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
     c = d.select(
         "doc_id",

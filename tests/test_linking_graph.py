@@ -109,12 +109,13 @@ def test_resume_idempotent(spark, pages_df, vocab, linker_df, edges_df, tmp_path
     """Simulate a crash after 2 of 4 buckets: resume must produce exactly
     the same provenance table as an uninterrupted run."""
     from fastie_spark.linking import link_triples
-    from fastie_spark.pipeline import run_extraction
+    from fastie_spark.pipeline import run_extraction_fused
     from fastie_spark.text_extract import with_extracted_text
 
     ext = with_extracted_text(pages_df.select("url", "html"))
-    triples = run_extraction(spark, ext, vocab, num_partitions=4,
-                             do_events=False, persist=False)["triples"]
+    triples = run_extraction_fused(spark, ext, vocab, num_partitions=4,
+                                   do_events=False, persist=False,
+                                   from_html=False)["triples"]
     linked = link_triples(triples, linker_df)
     linked = linked.withColumn("subj_comp", F.col("subj_id")).withColumn(
         "obj_comp", F.col("obj_id"))
@@ -175,12 +176,13 @@ def test_link_strategies_identical(spark, vocab, linker_df, pages_df):
     strategy is a physical choice, never a semantic one. "auto" on a
     fixture-sized dict resolves to broadcast and matches too."""
     from fastie_spark.linking import link_triples
-    from fastie_spark.pipeline import run_extraction
+    from fastie_spark.pipeline import run_extraction_fused
     from fastie_spark.text_extract import with_extracted_text
 
     ext = with_extracted_text(pages_df.select("url", "html"))
-    triples = run_extraction(spark, ext, vocab, num_partitions=4,
-                             do_events=False, persist=False)["triples"]
+    triples = run_extraction_fused(spark, ext, vocab, num_partitions=4,
+                                   do_events=False, persist=False,
+                                   from_html=False)["triples"]
     cols = ["url", "subj", "pred", "obj", "subj_id", "obj_id"]
 
     def rows(strategy):

@@ -93,13 +93,16 @@ def test_knn_query_side_broadcast(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_fused_extraction_no_extra_shuffle(spark, vocab, pages_df):
+@pytest.mark.parametrize("from_html", [True, False])
+def test_fused_extraction_no_extra_shuffle(spark, vocab, pages_df, from_html):
     from fastie_spark.pipeline import run_extraction_fused
 
-    out = run_extraction_fused(spark, pages_df, vocab, persist=False)
+    out = run_extraction_fused(spark, pages_df, vocab, persist=False,
+                               from_html=from_html)
     plan = plan_tree(out["triples"])
     # exactly the one designed shuffle: the explicit url-hash repartition
     assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(xxhash64(url" in plan
     # and the whole decode stage is a single python stage (Arrow-native
     # since the fused path moved to mapInArrow)
     assert plan.count("MapInArrow") == 1

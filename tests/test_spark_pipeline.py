@@ -6,8 +6,10 @@ from pyspark.sql import functions as F
 
 from fastie_spark.chunking import auto_splitter
 from fastie_spark.oracle import OracleEngine
-from fastie_spark.pipeline import chunk_pages, run_extraction
+from fastie_spark.pipeline import run_extraction_fused
+from fastie_spark.session import local_df
 from fastie_spark.text_extract import with_extracted_text
+from fastie_spark.textops import chunk_explode
 
 
 @pytest.fixture(scope="module")
@@ -17,7 +19,8 @@ def oracle(vocab):
 
 @pytest.fixture(scope="module")
 def extraction(spark, pages_df, vocab):
-    out = run_extraction(spark, pages_df, vocab, num_partitions=8)
+    out = run_extraction_fused(spark, pages_df, vocab, num_partitions=8,
+                               from_html=False)
     yield out
     out["_raw"].unpersist()
 
@@ -31,13 +34,22 @@ def test_text_extraction_byte_identical(spark, pages_df):
     assert joined.count() == pages_df.count()
 
 
-def test_relational_chunker_matches_auto_splitter(spark, pages, pages_df):
-    """SQL sequence+substring chunker == reference auto_splitter (P6) with
-    split_sentence=False, including the char_base rejoin offsets."""
-    rows = chunk_pages(pages_df).orderBy("url", "chunk_idx").collect()
+def test_relational_chunker_matches_auto_splitter(spark, pages, pages_df,
+                                                  tmp_path):
+    """SQL sequence+substring chunker (textops.chunk_explode) == reference
+    auto_splitter (P6) with split_sentence=False, including the char_base
+    rejoin offsets."""
+    pages_df.select(F.col("url").alias("doc_id"), "text").write.parquet(
+        str(tmp_path / "documents.parquet"))
+    rows = chunk_explode(spark, str(tmp_path)).orderBy(
+        "doc_id", "chunk_idx").collect()
+    text = {p["url"]: p["text"] for p in pages}
     got = {}
     for r in rows:
-        got.setdefault(r["url"], []).append((r["chunk_text"], r["char_base"]))
+        b = r["char_base"]
+        got.setdefault(r["doc_id"], []).append(
+            (text[r["doc_id"]][b:b + r["chunk_len"]], b))
+    assert max(map(len, got.values())) >= 2  # multi-chunk docs covered
     for p in pages:
         chunks, _ = auto_splitter([p["text"]], 510)
         bases, acc = [], 0
@@ -114,20 +126,38 @@ def test_event_parity(extraction, oracle, pages):
 
 
 def test_partitioning_invariance(spark, pages_df, vocab, extraction):
-    """Same results at a different parallelism (decode is per-chunk, never
+    """Same results at a different parallelism (decode is per-doc, never
     cross-batch) — the correctness half of the scaling criterion."""
-    alt = run_extraction(spark, pages_df, vocab, num_partitions=3, persist=False)
+    alt = run_extraction_fused(spark, pages_df, vocab, num_partitions=3,
+                               persist=False, from_html=False)
     a = {tuple(r) for r in alt["triples"].collect()}
     b = {tuple(r) for r in extraction["triples"].collect()}
     assert a == b
 
 
+def test_null_and_empty_text_yield_no_rows(spark, vocab, pages, extraction):
+    """A null or empty text cell yields zero rows and does not kill the
+    task; a multi-chunk page in the same batch keeps exactly its rows."""
+    from collections import Counter
+
+    page = next(p for p in pages if len(p["text"]) > 510)
+    df = local_df(spark, [
+        {"url": "null://1", "text": None},
+        {"url": "empty://1", "text": ""},
+        {"url": page["url"], "text": page["text"]},
+    ], "url string, text string")
+    out = run_extraction_fused(spark, df, vocab, num_partitions=1,
+                               persist=False, from_html=False)
+    got = Counter(map(tuple, out["_raw"].collect()))
+    want = Counter(map(tuple, extraction["_raw"].filter(
+        F.col("url") == page["url"]).collect()))
+    assert want  # the page does produce rows
+    assert got == want
+
+
 def test_sentence_split_mode_parity(spark, vocab, pages):
     """split_sentence=True (P5 cut_chinese_sent inside auto_splitter) end to
     end: fused Spark mentions == oracle with the same flag."""
-    from fastie_spark.pipeline import run_extraction_fused
-    from fastie_spark.session import local_df
-
     oracle = OracleEngine(vocab, split_sentence=True)
     texts = [p["text"] for p in pages]
     want_docs = oracle.predict_ner(texts)
@@ -172,8 +202,6 @@ def test_per_worker_lazy_scorer_init(spark, pages_df, vocab):
     output. This is the seam a real tokenizer/checkpoint load plugs into."""
     import copy
     import uuid
-
-    from fastie_spark.pipeline import run_extraction_fused
 
     # unique fingerprint so caches warmed by OTHER tests don't mask the
     # first-run init count; the added surface never occurs in any page, so

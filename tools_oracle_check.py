@@ -7,7 +7,13 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in; exported on PYTHONPATH (before the
+# session starts) so Spark's python workers import the same fastie_spark
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
