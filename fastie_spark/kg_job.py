@@ -10,14 +10,20 @@ logic inside the fused Arrow UDF.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .cc import canonicalize, connected_components
 from .linking import link_mentions, link_triples
 from .materialize import build_graph_tables, materialize_snapshot
-from .pipeline import run_extraction_fused
+from .pipeline import (
+    EVENT_COLS,
+    MENTION_COLS,
+    TRIPLE_COLS,
+    run_extraction_fused,
+)
 from .scorer import Vocab
 
 
@@ -27,20 +33,19 @@ def run_kg_job(
     vocab: Vocab,
     linker: DataFrame,
     alias_edges: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     snapshot_id: str = "snap-000",
-    num_partitions: int | None = None,
     n_buckets: int = 8,
     repartition: bool = True,
 ) -> dict:
-    """Returns dict with stage DataFrames and summary counts/timings."""
-    from pyspark.sql import Observation
-
+    """Extract, link, canonicalize and materialize ``pages`` into
+    ``out_dir`` (provenance snapshot + nodes + edges). Returns the stage
+    DataFrames and summary counts/timings. The extraction persist is owned
+    here and released before returning."""
     t0 = time.time()
 
     stages = run_extraction_fused(
-        spark, pages, vocab, num_partitions=num_partitions, from_html=True,
-        repartition=repartition,
+        spark, pages, vocab, from_html=True, repartition=repartition
     )
     # per-kind counts ride along with the FIRST action that scans the raw
     # extraction output (observe = CollectMetrics; filters are not pushed
@@ -52,8 +57,6 @@ def run_kg_job(
         F.sum((F.col("kind") == "triple").cast("long")).alias("triple"),
         F.sum((F.col("kind") == "event").cast("long")).alias("event"),
     )
-    from .pipeline import EVENT_COLS, MENTION_COLS, TRIPLE_COLS
-
     mentions_raw = raw.filter(F.col("kind") == "mention").select(*MENTION_COLS)
     triples_raw = raw.filter(F.col("kind") == "triple").select(*TRIPLE_COLS)
     events_raw = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
@@ -73,71 +76,52 @@ def run_kg_job(
         mentions_linked, components, "entity_id", "entity_comp"
     )
 
-    result = {
-        "mentions": mentions_linked,
-        "triples": triples_linked,
-        "events": events_raw,
-    }
+    graph = build_graph_tables(triples_linked, mentions_linked)
 
-    if out_dir is not None:
-        # ONE extract-only action (count over the observed raw) fills the
-        # persist and carries the kind counts as CollectMetrics. The three
-        # sinks — provenance, nodes, edges — are then all independent jobs
-        # over the hot cache, so they run from ONE 3-thread pool (guide-
-        # style overlap of independent jobs): each is a cache scan + its
-        # own small shuffle/write, and the later jobs' tasks back-fill
-        # executors freed by the earlier jobs' tails. Deterministic
-        # single-compute: the cache is complete BEFORE any sink starts, so
-        # no sink can race another into recomputing extraction partitions.
-        # (Previously the provenance write doubled as the fill and nodes+
-        # edges waited for all of it; measured 6.93 -> 6.47 s at 600k docs.)
+    def _write(name, df):
+        # no coalesce: it capped the FINAL aggregation stage (not just the
+        # file write) at 8 tasks; AQE's partition coalescing already
+        # right-sizes the post-shuffle partition count for these small
+        # tables, so the plain write keeps the agg at full parallelism and
+        # still emits few files (measured: nodes write 1.15s plain vs 3.5s
+        # coalesced on the 600k-doc bench)
+        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
+
+    # ONE extract-only action (count over the observed raw) fills the
+    # persist and carries the kind counts as CollectMetrics. The three sinks
+    # — provenance, nodes, edges — are then all independent jobs over the
+    # hot cache, so they run from ONE 3-thread pool (guide-style overlap of
+    # independent jobs): each is a cache scan + its own small
+    # shuffle/write, and the later jobs' tasks back-fill executors freed by
+    # the earlier jobs' tails. Deterministic single-compute: the cache is
+    # complete BEFORE any sink starts, so no sink can race another into
+    # recomputing extraction partitions. (Previously the provenance write
+    # doubled as the fill and nodes+edges waited for all of it; measured
+    # 6.93 -> 6.47 s at 600k docs.)
+    try:
         raw.count()
-        graph = build_graph_tables(triples_linked, mentions_linked)
-        sunk: dict = {}
-
-        def _prov():
-            sunk["manifest"] = materialize_snapshot(
-                triples_linked, out_dir, snapshot_id, n_buckets=n_buckets
-            )
-
-        def _write(name, df):
-            # no coalesce: it capped the FINAL aggregation stage (not just
-            # the file write) at 8 tasks; AQE's partition coalescing
-            # already right-sizes the post-shuffle partition count for
-            # these small tables, so the plain write keeps the agg at full
-            # parallelism and still emits few files (measured: nodes write
-            # 1.15s plain vs 3.5s coalesced on the 600k-doc bench)
-            df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [
-                pool.submit(_prov),
+                pool.submit(materialize_snapshot, triples_linked, out_dir,
+                            snapshot_id, n_buckets=n_buckets),
                 pool.submit(_write, "nodes", graph["nodes"]),
                 pool.submit(_write, "edges", graph["edges"]),
             ]
-            for f in futs:
-                f.result()
-        manifest = sunk["manifest"]
-        result["manifest"] = manifest
+            manifest = [f.result() for f in futs][0]
+    finally:
+        stages["_raw"].unpersist()
+    # the count/write actions above already flowed every raw row through
+    # the observe node — obs.get is a metadata fetch, not another job
+    counts = {k: int(v) for k, v in obs.get.items() if v and int(v) > 0}
+    return {
+        "mentions": mentions_linked,
+        "triples": triples_linked,
+        "events": events_raw,
+        "nodes": graph["nodes"],
+        "edges": graph["edges"],
+        "manifest": manifest,
         # per-bucket lineage counts already paid for the pass — reuse
-        result["n_triples"] = sum(
-            b["triples"] for b in manifest["buckets"].values()
-        )
-    else:
-        triples_linked = triples_linked.persist()
-        result["triples"] = triples_linked
-        graph = build_graph_tables(triples_linked, mentions_linked)
-        result["n_triples"] = triples_linked.count()
-    result["nodes"] = graph["nodes"]
-    result["edges"] = graph["edges"]
-
-    # the write/count action above already flowed every raw row through the
-    # observe node — obs.get is a metadata fetch, not another job
-    result["counts"] = {
-        k: int(v) for k, v in obs.get.items() if v and int(v) > 0
+        "n_triples": sum(b["triples"] for b in manifest["buckets"].values()),
+        "counts": counts,
+        "wall_sec": time.time() - t0,
     }
-    result["wall_sec"] = time.time() - t0
-    stages["_raw"].unpersist()
-    return result

@@ -117,6 +117,8 @@ def make_multi_decoder_fn(vocab: Vocab, max_length: int = MAX_LENGTH):
         for pdf in batches:
             rows = []
             for url, text in zip(pdf["url"], pdf["text"]):
+                if text is None:  # nullable text, as in the fused loop
+                    continue
                 chunks = split_one(text, max_length - 2)
                 bases = char_bases(chunks)
                 doc_triples: dict = {}

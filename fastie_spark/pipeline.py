@@ -272,6 +272,10 @@ def run_extraction_fused(
     there is no dedup shuffle. split_sentence enables the P5
     sentence-level auto_splitter chunking (reference flag, default off).
 
+    persist=True returns ``_raw`` persisted and hands its ownership to the
+    caller, which unpersists it or registers it with
+    textops.track_cache (see textops.release_caches for the rule).
+
     repartition=False skips the explicit url-hash shuffle: the fused stage
     is per-document, so co-location is not needed for correctness — only
     for task sizing when the source's own splits are skewed. With a

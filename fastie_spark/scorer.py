@@ -612,6 +612,30 @@ class DictScorer:
         return grid
 
 
+def _mapped_spans(scorer: DictScorer, masked_text: str, mapping) -> dict:
+    """{surface: [(s_tok, e_tok), ...]} for every vocab occurrence in
+    masked_text whose char span aligns to token boundaries under an HF-style
+    offset_mapping ((0, 0) entries are special tokens). Spans keep the
+    occurrence order; surfaces with no aligned occurrence are absent."""
+    start_lut: dict = {}
+    end_lut: dict = {}
+    for i, (cs, ce) in enumerate(mapping):
+        if cs == 0 and ce == 0:
+            continue
+        start_lut.setdefault(cs, i)
+        end_lut[ce] = i
+    present: dict = {}
+    for surf, starts in scorer._occ_map(masked_text).items():
+        spans = [
+            (start_lut[st], end_lut[st + len(surf)])
+            for st in starts
+            if st in start_lut and st + len(surf) in end_lut
+        ]
+        if spans:
+            present[surf] = spans
+    return present
+
+
 def ner_cells_mapped(scorer: DictScorer, masked_text: str, mapping) -> set:
     """M1 grid cells under an ARBITRARY HF-style offset_mapping — the
     tokenizer seam (SURVEY.md §2.3 T1/T2). An occurrence fires the cell
@@ -620,24 +644,10 @@ def ner_cells_mapped(scorer: DictScorer, masked_text: str, mapping) -> set:
     token-square grid, which is exactly a real span model's constraint.
     With the char tokenizer's mapping this reduces bit-for-bit to
     DictScorer.ner_cells (parity pytest-gated)."""
-    start_lut: dict = {}
-    end_lut: dict = {}
-    for i, (cs, ce) in enumerate(mapping):
-        if cs == 0 and ce == 0:
-            continue
-        start_lut.setdefault(cs, i)
-        end_lut[ce] = i
-    occ = scorer._occ_map(masked_text)
+    present = _mapped_spans(scorer, masked_text, mapping)
     cells = set()
     for surf, lids in scorer._ent_lids.items():
-        starts = occ.get(surf)
-        if not starts:
-            continue
-        for st in starts:
-            s_tok = start_lut.get(st)
-            e_tok = end_lut.get(st + len(surf))
-            if s_tok is None or e_tok is None:
-                continue
+        for s_tok, e_tok in present.get(surf, ()):
             for lid in lids:
                 cells.add((lid, s_tok, e_tok))
     return cells
@@ -651,25 +661,7 @@ def re_cells_mapped(scorer: DictScorer, masked_text: str, mapping):
     token coordinates through the mapping; occurrences that don't align to
     token boundaries are unrepresentable (a real span model's constraint).
     Reduces bit-for-bit to re_cells on the char tokenizer's mapping."""
-    start_lut: dict = {}
-    end_lut: dict = {}
-    for i, (cs, ce) in enumerate(mapping):
-        if cs == 0 and ce == 0:
-            continue
-        start_lut.setdefault(cs, i)
-        end_lut[ce] = i
-    occ = scorer._occ_map(masked_text)
-
-    def tok_spans(surf):
-        out = []
-        for st in occ.get(surf, ()):
-            s_tok = start_lut.get(st)
-            e_tok = end_lut.get(st + len(surf))
-            if s_tok is not None and e_tok is not None:
-                out.append((s_tok, e_tok))
-        return out
-
-    present = {s: sp for s in occ if (sp := tok_spans(s))}
+    present = _mapped_spans(scorer, masked_text, mapping)
     ent, head, tail = set(), set(), set()
     for surf, spans in present.items():
         if surf in scorer._subj_surfaces:
@@ -702,30 +694,13 @@ def event_cells_mapped(scorer: DictScorer, masked_text: str, mapping):
     boundaries are unrepresentable (a real span model's constraint).
     Reduces bit-for-bit to event_cells on the char tokenizer's mapping
     (parity pytest-gated)."""
-    start_lut: dict = {}
-    end_lut: dict = {}
-    for i, (cs, ce) in enumerate(mapping):
-        if cs == 0 and ce == 0:
-            continue
-        start_lut.setdefault(cs, i)
-        end_lut[ce] = i
-    occ = scorer._occ_map(masked_text)
-
-    def tok_spans(surf):
-        out = []
-        for st in occ.get(surf, ()):
-            s_tok = start_lut.get(st)
-            e_tok = end_lut.get(st + len(surf))
-            if s_tok is not None and e_tok is not None:
-                out.append((s_tok, e_tok))
-        return out
-
+    present = _mapped_spans(scorer, masked_text, mapping)
     argu, head, tail = set(), set(), set()
     for etype, args in scorer._masked_events:
         occ_first = []
         for role, arg in args:
             lid = scorer.event_label2id[f"{etype}@{role}"]
-            spans = tok_spans(arg)
+            spans = present.get(arg, ())
             for h, t in spans:
                 argu.add((lid, h, t))
             if spans:

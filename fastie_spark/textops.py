@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .linking import _FW_DST, _FW_SRC
+
 CHUNK = 510  # max_length - 2, the reference chunk width
 _TOKEN_RE = r"[\p{L}\p{N}]+"
 _PUNCT_RE = r"[\.,;:!\?。，；：！？]"
@@ -28,19 +30,33 @@ _SALTS = ["s0", "s1", "s2", "s3"]
 _LIVE_CACHES: list = []
 
 
-def _track_cache(df: DataFrame) -> DataFrame:
-    """Register a persisted intermediate for release_caches()."""
+def track_cache(df: DataFrame) -> DataFrame:
+    """Register a persisted frame for release_caches(); returns it."""
     _LIVE_CACHES.append(df)
     return df
 
 
 def release_caches() -> None:
-    """Unpersist every intermediate persisted by registry operators
-    (source_profile, curate_corpus). Those operators return LAZY frames, so
-    they cannot unpersist before the caller materializes; a long-lived
-    driver running many registry queries in one session (bench.py, the
-    driver's 40+-query parity sweep) calls this between queries so cached
-    relations don't accumulate for the session lifetime."""
+    """Unpersist every frame registered with track_cache().
+
+    The one cache-lifetime rule: the function that calls ``persist()``
+    either unpersists before it returns (cc.connected_components' ``sym``,
+    kg_job's ``_raw``), or it returns a lazy frame over the persist and
+    registers the persist here. ``run_extraction_fused(persist=True)`` is
+    the one hand-off: it returns ``_raw`` persisted, and the caller owns
+    it (kg_job unpersists it; the driver's ``_kg`` registers it).
+    Registered today: the near-dup ``per_doc`` and ``sig`` tables,
+    ``source_profile``'s ``fine`` table, the ``_curate_base`` projection,
+    and ``_kg``'s ``_raw`` and ``linked``. A long-lived driver running many
+    queries in one session (bench.py, the parity sweeps) calls this
+    between queries so cached relations don't accumulate for the session
+    lifetime.
+
+    There is no per-invocation handle: Spark's CacheManager keys entries
+    by plan, so two equal persisted plans share one entry, and unpersisting
+    either releases both whatever handle the Python side holds. No caller
+    that persists runs concurrently (the server path runs with
+    ``persist=False``)."""
     while _LIVE_CACHES:
         df = _LIVE_CACHES.pop()
         try:
@@ -509,13 +525,14 @@ def _band_components(sig):
     )
     from pyspark import StorageLevel
 
-    # per_doc is consumed THREE times — connected_components' size probe,
-    # its edge collect, and the final component join — and each consumer
-    # would otherwise replay the bands->reps->join->groupBy chain (two
-    # 2x-corpus-row shuffles; measured as the dominant curate cost once
-    # the signature was cheap). It is two longs per banded doc, so a
-    # DISK_ONLY persist makes every reuse a ~30 ms cache scan.
-    per_doc = _track_cache(
+    # per_doc is consumed twice — connected_components' bounded edge fetch
+    # (one toPandas that is also its size probe) and the final component
+    # join — and each consumer would otherwise replay the bands->reps->
+    # join->groupBy chain (two 2x-corpus-row shuffles; measured as the
+    # dominant curate cost once the signature was cheap). It is two longs
+    # per banded doc, so a DISK_ONLY persist makes every reuse a ~30 ms
+    # cache scan.
+    per_doc = track_cache(
         mem.groupBy("doc_id").agg(
             F.min("rep").alias("r1"), F.max("rep").alias("r2")
         ).persist(StorageLevel.DISK_ONLY)
@@ -571,7 +588,7 @@ def near_dup_clusters(spark, sf_dir):
     # so without the cache Catalyst would run the full md5-minhash corpus
     # pass per branch (measured 3x wall at sf0.1); DISK_ONLY of 4x32-char
     # hashes per doc is a few % of corpus bytes
-    sig = _track_cache(
+    sig = track_cache(
         minhash_signature(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
     )
     comp = _band_components(sig)
@@ -770,10 +787,6 @@ FROM documents
 
 
 # ------------------------------------------------------------ P4: dbc2sbc
-_FW_SRC = "".join(chr(c + 0xFEE0) for c in range(0x21, 0x7F))
-_FW_DST = "".join(chr(c) for c in range(0x21, 0x7F))
-
-
 def dbc2sbc_norm(spark, sf_dir):
     """Full-width -> half-width normalization as a codegen translate (the
     P4 dbc2sbc semantics over the 0x21-0x7e block; the reference's
@@ -1306,7 +1319,7 @@ def source_profile(spark, sf_dir):
     # registry queries (bench, parity sweeps) call that between queries.
     from pyspark import StorageLevel
 
-    fine = _track_cache(
+    fine = track_cache(
         d.filter(F.col("source").isNotNull())
         .groupBy("source", F.md5("text").alias("h"), "lang")
         .agg(
@@ -1408,7 +1421,7 @@ def _curate_base(d):
     n_chars = F.length("text")
     n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(_PUNCT_RE), 0))
     ascii_n = F.length(F.regexp_replace(F.col("text"), _ASCII_RE, ""))
-    return _track_cache(
+    return track_cache(
         d.select(
             "doc_id", "source", "lang",
             F.lower(F.col("text")).alias("norm"),

@@ -20,11 +20,11 @@ the ideographic-space gate in dbc2sbc).
 
 from __future__ import annotations
 
-import math
 import re
 
-from .chunking import cut_chinese_sent
+from .chunking import auto_splitter
 from .decoders import dbc2sbc, get_span
+from .linking import _FW_DST, _FW_SRC
 from .scorer import Vocab, find_all
 
 POSITION_PROB = 0.5  # reference default, decode_utils.py:198
@@ -175,31 +175,6 @@ class UIEScorer:
 # --------------------------------------------------------------------------
 # M16: single-stage predict (shared by oracle and the Spark UDF)
 # --------------------------------------------------------------------------
-def _auto_splitter(input_texts, max_text_len, split_sentence=False):
-    # decode_utils.py:350-386 — identical shape to chunking.auto_splitter
-    input_mapping: dict = {}
-    short_input_texts: list = []
-    cnt_short = 0
-    for cnt_org, text in enumerate(input_texts):
-        sens = cut_chinese_sent(text) if split_sentence else [text]
-        for sen in sens:
-            lens = len(sen)
-            if lens <= max_text_len:
-                short_input_texts.append(sen)
-                input_mapping.setdefault(cnt_org, []).append(cnt_short)
-                cnt_short += 1
-            else:
-                short_input_texts.extend(
-                    sen[i : i + max_text_len] for i in range(0, lens, max_text_len)
-                )
-                short_idx = cnt_short
-                cnt_short += math.ceil(lens / max_text_len)
-                input_mapping.setdefault(cnt_org, []).extend(
-                    range(short_idx, cnt_short)
-                )
-    return short_input_texts, input_mapping
-
-
 def get_bool_ids_greater_than_prob(probs, limit):
     return [(i, p) for i, p in enumerate(probs) if p > limit]
 
@@ -223,7 +198,7 @@ def single_stage_predict(inputs: list, scorer: UIEScorer,
         max_prompt_len = len(max(prompts))
     max_predict_len = max_length - max_prompt_len - 3
 
-    short_texts, input_mapping = _auto_splitter(
+    short_texts, input_mapping = auto_splitter(
         input_texts, max_predict_len, split_sentence=split_sentence
     )
     short_prompts = []
@@ -350,10 +325,6 @@ def _uie_level_fn(vocab: Vocab, maxp_by_path: dict, max_length: int,
             )
 
     return fn
-
-
-_FW_SRC = "".join(chr(c + 0xFEE0) for c in range(0x21, 0x7F))
-_FW_DST = "".join(chr(c) for c in range(0x21, 0x7F))
 
 
 def _dbc2sbc_col(col):

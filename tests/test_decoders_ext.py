@@ -167,10 +167,20 @@ def multi_rows(vocab, pages):
 
     from fastie_spark.multi_decoder import make_multi_decoder_fn
 
-    pdf = pd.DataFrame([{"url": p["url"], "text": p["text"]} for p in pages])
+    # NULL and empty text are supported inputs (the driver's documents
+    # table is nullable); they must flow through with no rows
+    pdf = pd.DataFrame(
+        [{"url": p["url"], "text": p["text"]} for p in pages]
+        + [{"url": "u-null", "text": None}, {"url": "u-empty", "text": ""}]
+    )
     fn = make_multi_decoder_fn(vocab)
     out = pd.concat(list(fn(iter([pdf]))))
     return out
+
+
+def test_null_and_empty_text_yield_no_rows(multi_rows):
+    assert len(multi_rows) > 0
+    assert not multi_rows["url"].isin(["u-null", "u-empty"]).any()
 
 
 def _sets(df, kind, cols):

@@ -33,6 +33,25 @@ def test_entry_smoke(spark):
     assert len(rows) > 100  # flagship actually extracts triples
 
 
+def test_release_caches_ends_kg_memo(spark):
+    """_kg registers its persists with release_caches(): releasing them is
+    visible in the JVM (storage level NONE), and the next _kg call rebuilds
+    live caches with the same rows instead of reusing the released memo."""
+    from pyspark import StorageLevel
+
+    from fastie_spark.textops import release_caches
+
+    kg = entrymod._kg(spark, SF_DIR)
+    before = sorted(map(tuple, kg["triples"].collect()))
+    release_caches()
+    for k in ("linked", "_raw"):
+        assert kg[k].storageLevel == StorageLevel.NONE, k
+    again = entrymod._kg(spark, SF_DIR)
+    for k in ("linked", "_raw"):
+        assert again[k].storageLevel != StorageLevel.NONE, k
+    assert sorted(map(tuple, again["triples"].collect())) == before
+
+
 KG_KEYS = [
     "extract_mentions", "extract_triples", "link_triples",
     "canonical_components", "graph_edges", "classify_docs", "spo_convert",
