@@ -4,8 +4,8 @@ engine with the query/data-processing capabilities of xusenlinzy/FastIE.
 NOT a port: the reference (/root/reference) is a PyTorch/transformers
 train+infer framework; this package re-expresses its *inference/decode
 semantics* (GlobalPointer, W2NER, GPLinker, CasRel, event clique decoding,
-UIE span extraction — see SURVEY.md §2.4) as vectorized pandas/Arrow UDF
-stages over Spark DataFrames, and adds the Spark-side KG composition the
+UIE span extraction — see SURVEY.md §2.4) as batched mapInArrow stages
+over Spark DataFrames, and adds the Spark-side KG composition the
 north rule mandates: entity linking, union-find canonicalization, graph
 materialization, checkpoint/lineage.
 
@@ -21,8 +21,8 @@ the Spark UDFs):
     fixtures.py    seeded synthetic pages/vocab/linker/alias tables
 
 spark-side:
-    session.py       SparkSession builder (AQE, Arrow, shuffle tuning)
-    text_extract.py  html -> text byte-identical extraction stage
+    session.py       SparkSession builder + the one Arrow stage boundary
+    text_extract.py  html -> text byte-identical extraction (fused stage)
     pipeline.py      fused extract -> chunk -> tokenize -> score -> decode stage
     linking.py       broadcast-dict entity linking + normalization
     cc.py            connected-components canonicalization (large/small star)

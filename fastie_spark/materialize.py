@@ -124,7 +124,6 @@ def materialize_snapshot(
     if todo:
         from pyspark.sql import Observation
 
-        spark = triples_linked.sparkSession
         pending = prov.filter(F.col(BUCKET_COL).isin(todo))
         # per-bucket lineage counts ride the write action itself as
         # CollectMetrics (one sum per pending bucket) instead of a second
@@ -144,22 +143,20 @@ def materialize_snapshot(
         # dynamic partition overwrite = idempotent per-bucket commit: a crash
         # between data write and manifest update just rewrites those buckets
         # on resume instead of appending duplicates (MERGE-like semantics,
-        # the parquet stand-in for an Iceberg replacePartitions commit).
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                # partitioned by (snapshot, bucket): dynamic overwrite only
-                # replaces THIS snapshot's bucket dirs, so crash-replay is
-                # idempotent and earlier snapshots are never clobbered; one
-                # task per bucket -> one file per partition
-                pending.repartition(len(todo), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy("snapshot_id", BUCKET_COL)
-                .parquet(prov_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # the parquet stand-in for an Iceberg replacePartitions commit). A
+        # writer option, not the session conf: the nodes/edges writes that
+        # run_kg_job runs beside this one share the session.
+        (
+            # partitioned by (snapshot, bucket): dynamic overwrite only
+            # replaces THIS snapshot's bucket dirs, so crash-replay is
+            # idempotent and earlier snapshots are never clobbered; one
+            # task per bucket -> one file per partition
+            pending.repartition(len(todo), F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("snapshot_id", BUCKET_COL)
+            .parquet(prov_dir)
+        )
         # obs.get blocks on the finished write action — a metadata fetch,
         # not another job. A zero-row pending set produces NO metrics row
         # at all (the observed plan never executes a task), and obs.get

@@ -10,9 +10,6 @@ partitioning-invariant.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .decoders import gp_decode_cells, gplinker_decode_cells, w2ner_decode_grid
@@ -29,6 +26,7 @@ from .decoders_ext import (
 )
 from .pipeline import MAX_LENGTH, repartition_by_url
 from .scorer import DictScorer, Vocab
+from .session import arrow_map_fn
 from .tokenizer import encode_meta as encode
 
 MULTI_SCHEMA = (
@@ -96,8 +94,8 @@ def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str, base: int,
     return rows
 
 
-def make_ids(vocab: Vocab) -> dict:
-    scorer = DictScorer(vocab)
+def make_ids(scorer: DictScorer) -> dict:
+    vocab = scorer.vocab
     return {
         "ner": dict(enumerate(vocab.ner_labels())),
         "w2ner": dict(enumerate(["NONE", "NNW"] + vocab.ner_labels())),
@@ -109,40 +107,39 @@ def make_ids(vocab: Vocab) -> dict:
 
 
 def make_multi_decoder_fn(vocab: Vocab, max_length: int = MAX_LENGTH):
+    """mapInArrow fn: (url, text) batches -> MULTI_SCHEMA batches."""
     from .chunking import char_bases, split_one
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         scorer = DictScorer(vocab, max_length)
-        ids = make_ids(vocab)
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if text is None:  # nullable text, as in the fused loop
-                    continue
-                chunks = split_one(text, max_length - 2)
-                bases = char_bases(chunks)
-                doc_triples: dict = {}
-                for chunk, base in zip(chunks, bases):
-                    for r in decode_chunk_all(scorer, ids, chunk, base, max_length):
-                        if r[1] == "triple":  # J2: per-doc set union per decoder
-                            doc_triples.setdefault(r[0], set()).add(r[6:9])
-                        else:
-                            rows.append((url, *r))
-                for dec, spoes in doc_triples.items():
-                    for subj, pred, obj in spoes:
-                        rows.append((url, dec, "triple", None, None, None,
-                                     None, subj, pred, obj))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "decoder", "kind", "label", "start", "end",
-                         "surface", "subj", "pred", "obj"],
-            )
+        return scorer, make_ids(scorer)
 
-    return fn
+    def process(ctx, urls, texts) -> list:
+        scorer, ids = ctx
+        rows = []
+        for url, text in zip(urls, texts):
+            if text is None:  # nullable text, as in the fused loop
+                continue
+            chunks = split_one(text, max_length - 2)
+            bases = char_bases(chunks)
+            doc_triples: dict = {}
+            for chunk, base in zip(chunks, bases):
+                for r in decode_chunk_all(scorer, ids, chunk, base, max_length):
+                    if r[1] == "triple":  # J2: per-doc set union per decoder
+                        doc_triples.setdefault(r[0], set()).add(r[6:9])
+                    else:
+                        rows.append((url, *r))
+            for dec, spoes in doc_triples.items():
+                for subj, pred, obj in spoes:
+                    rows.append((url, dec, "triple", None, None, None,
+                                 None, subj, pred, obj))
+        return rows
+
+    return arrow_map_fn(["url", "text"], MULTI_SCHEMA, process, setup)
 
 
 def run_multi_decoder(spark: SparkSession, pages: DataFrame, vocab: Vocab,
                       num_partitions: int | None = None) -> DataFrame:
     parts = num_partitions or spark.sparkContext.defaultParallelism
     src = repartition_by_url(pages.select("url", "text"), parts)
-    return src.mapInPandas(make_multi_decoder_fn(vocab), schema=MULTI_SCHEMA)
+    return src.mapInArrow(make_multi_decoder_fn(vocab), schema=MULTI_SCHEMA)

@@ -16,6 +16,11 @@ Compressed containers (JPEG/PNG/MP3/MP4) still raise NotImplementedError —
 entropy decoding is a genuine lib dependency; swapping PIL/libav in changes
 only ``decode_media``, every DataFrame contract stays.
 
+Each Spark operator is one ``mapInArrow`` stage over (media_id, payload)
+through the engine's shared Arrow boundary (session.arrow_map_fn): the
+payload bytes arrive as Python ``bytes`` and rows leave as typed Arrow
+arrays, with no pandas block on either side.
+
 Feature math is integer-exact: means/RMS come from integer byte/sample sums
 divided in double, so the Spark operators and the DuckDB byte-slicing
 oracles (__spark_entry__ image_stats / audio_stats) are bit-identical.
@@ -24,11 +29,11 @@ oracles (__spark_entry__ image_stats / audio_stats) are bit-identical.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import arrow_map_fn, local_df
 
 MAGIC = b"FMM0"
 
@@ -371,25 +376,28 @@ def decode_media(payload: bytes) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Spark operators (mapInPandas over BinaryType — Arrow batches)
+# Spark operators (mapInArrow over BinaryType payloads)
 # ---------------------------------------------------------------------------
+def _map_media(media: DataFrame, ddl: str, rows_of) -> DataFrame:
+    """One Arrow stage over (media_id, payload): rows_of(media_id,
+    decoded) yields the ``ddl`` row tuples of one decoded payload."""
+
+    def process(_, mids, payloads) -> list:
+        return [row for mid, payload in zip(mids, payloads)
+                for row in rows_of(mid, decode_media(payload))]
+
+    return media.mapInArrow(
+        arrow_map_fn(["media_id", "payload"], ddl, process), ddl)
+
+
 def parse_meta(media: DataFrame) -> DataFrame:
     """binary -> typed metadata columns (container header parse)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                rows.append((int(mid), d["kind"], d["fmt"], d["width"],
-                             d["height"], d["sample_rate"], d["n_frames"],
-                             d["n_bytes"]))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "fmt", "width", "height",
-                               "sample_rate", "n_frames", "payload_len"],
-            )
+    def rows_of(mid, d):
+        yield (mid, d["kind"], d["fmt"], d["width"], d["height"],
+               d["sample_rate"], d["n_frames"], d["n_bytes"])
 
-    return media.mapInPandas(fn, schema=META_DDL)
+    return _map_media(media, META_DDL, rows_of)
 
 
 def image_features(media: DataFrame) -> DataFrame:
@@ -397,87 +405,64 @@ def image_features(media: DataFrame) -> DataFrame:
     channel bytes. Integer-sum formulation => bit-identical to the SQL
     oracle's byte arithmetic (sum/n and sqrt(sumsq/n - mean^2) in double)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                if d["kind"] != "image":
-                    continue
-                px = d["pixels"]
-                flat = px.reshape(-1).astype(np.int64)
-                n = int(flat.size)
-                s = int(flat.sum())
-                sq = int((flat * flat).sum())
-                mean = s / n
-                var = sq / n - mean * mean
-                rows.append(
-                    (int(mid), d["width"], d["height"],
-                     int(px.shape[0] * px.shape[1]), mean,
-                     float(np.sqrt(max(var, 0.0))))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_pixels",
-                               "mean_brightness", "std_brightness"],
-            )
+    def rows_of(mid, d):
+        if d["kind"] != "image":
+            return
+        px = d["pixels"]
+        flat = px.reshape(-1).astype(np.int64)
+        n = int(flat.size)
+        s = int(flat.sum())
+        sq = int((flat * flat).sum())
+        mean = s / n
+        var = sq / n - mean * mean
+        yield (mid, d["width"], d["height"], int(px.shape[0] * px.shape[1]),
+               mean, float(np.sqrt(max(var, 0.0))))
 
-    return media.mapInPandas(
-        fn, schema="media_id long, width int, height int, n_pixels long, "
-                   "mean_brightness double, std_brightness double"
-    )
+    return _map_media(
+        media, "media_id long, width int, height int, n_pixels long, "
+               "mean_brightness double, std_brightness double", rows_of)
 
 
 def resize_image(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize on the decoded pixels; re-encodes in the
     SAME container format so downstream stages see the original contract."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                if d["kind"] != "image":
-                    continue
-                px = d["pixels"]
-                h, w = px.shape[0], px.shape[1]
-                yi = np.arange(out_h) * h // out_h
-                xi = np.arange(out_w) * w // out_w
-                small = px[np.ix_(yi, xi)]
-                if d["fmt"] == "bmp":
-                    out = encode_bmp(small)
-                elif d["fmt"] == "ppm":
-                    out = encode_ppm(small)
-                elif d["fmt"] == "pgm":
-                    out = encode_pgm(small)
-                else:  # fmm0 grayscale
-                    out = (MAGIC + b"i"
-                           + struct.pack(">HHIH", out_w, out_h,
-                                         d["sample_rate"], d["n_frames"])
-                           + small.tobytes())
-                rows.append((int(mid), out))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def rows_of(mid, d):
+        if d["kind"] != "image":
+            return
+        px = d["pixels"]
+        h, w = px.shape[0], px.shape[1]
+        yi = np.arange(out_h) * h // out_h
+        xi = np.arange(out_w) * w // out_w
+        small = px[np.ix_(yi, xi)]
+        if d["fmt"] == "bmp":
+            out = encode_bmp(small)
+        elif d["fmt"] == "ppm":
+            out = encode_ppm(small)
+        elif d["fmt"] == "pgm":
+            out = encode_pgm(small)
+        else:  # fmm0 grayscale
+            out = (MAGIC + b"i"
+                   + struct.pack(">HHIH", out_w, out_h,
+                                 d["sample_rate"], d["n_frames"])
+                   + small.tobytes())
+        yield (mid, out)
 
-    return media.mapInPandas(fn, schema="media_id long, payload binary")
+    return _map_media(media, "media_id long, payload binary", rows_of)
 
 
 def frame_sample(media: DataFrame, every_k: int = 4) -> DataFrame:
     """Video frame sampling: decode the container's frame list and keep
     every k-th -> exploded (media_id, frame_idx, frame) rows."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                if d["kind"] != "video" or not d.get("frames"):
-                    continue
-                for fi in range(0, len(d["frames"]), every_k):
-                    rows.append((int(mid), fi, d["frames"][fi]))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
+    def rows_of(mid, d):
+        if d["kind"] != "video" or not d.get("frames"):
+            return
+        for fi in range(0, len(d["frames"]), every_k):
+            yield (mid, fi, d["frames"][fi])
 
-    return media.mapInPandas(
-        fn, schema="media_id long, frame_idx int, frame binary"
-    )
+    return _map_media(media, "media_id long, frame_idx int, frame binary",
+                      rows_of)
 
 
 def audio_features(media: DataFrame, frame_len: int = 400) -> DataFrame:
@@ -488,33 +473,25 @@ def audio_features(media: DataFrame, frame_len: int = 400) -> DataFrame:
     yields two rows with channel 0/1 — frame_len counts per-channel
     samples, matching what a mono resample of that channel would give."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                if d["kind"] != "audio":
-                    continue
-                ch = d.get("n_channels", 1)
-                planes = d["samples"].reshape(-1, ch)
-                for c in range(ch):
-                    x = planes[:, c].astype(np.float64) / 32768.0
-                    n = len(x) // frame_len
-                    rms = [
-                        float(np.sqrt(np.mean(
-                            x[i * frame_len:(i + 1) * frame_len] ** 2)))
-                        for i in range(n)
-                    ]
-                    peak = float(np.abs(x).max()) if len(x) else 0.0
-                    rows.append((int(mid), c, rms, peak))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "channel", "rms", "peak"]
-            )
+    def rows_of(mid, d):
+        if d["kind"] != "audio":
+            return
+        ch = d.get("n_channels", 1)
+        planes = d["samples"].reshape(-1, ch)
+        for c in range(ch):
+            x = planes[:, c].astype(np.float64) / 32768.0
+            n = len(x) // frame_len
+            rms = [
+                float(np.sqrt(np.mean(
+                    x[i * frame_len:(i + 1) * frame_len] ** 2)))
+                for i in range(n)
+            ]
+            peak = float(np.abs(x).max()) if len(x) else 0.0
+            yield (mid, c, rms, peak)
 
-    return media.mapInPandas(
-        fn, schema="media_id long, channel int, rms array<double>, "
-                   "peak double"
-    )
+    return _map_media(
+        media, "media_id long, channel int, rms array<double>, peak double",
+        rows_of)
 
 
 def audio_stats(media: DataFrame) -> DataFrame:
@@ -526,46 +503,33 @@ def audio_stats(media: DataFrame) -> DataFrame:
     stereo clips."""
     import math
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_media(payload)
-                if d["kind"] != "audio":
-                    continue
-                ch = d.get("n_channels", 1)
-                x = d["samples"].astype(np.int64)
-                n = int(x.size)
-                sq = int((x * x).sum())
-                rms = math.sqrt(sq / n) / 32768.0 if n else 0.0
-                peak = int(np.abs(x).max()) if n else 0
-                planes = x.reshape(-1, ch)
-                per_ch = []
-                for c in range(ch):
-                    csq = int((planes[:, c] * planes[:, c]).sum())
-                    cn = planes.shape[0]
-                    per_ch.append(
-                        round(math.sqrt(csq / cn) / 32768.0, 6) if cn else 0.0
-                    )
-                rows.append((int(mid), d["sample_rate"], ch, n, rms, peak,
-                             per_ch))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "sample_rate", "n_channels",
-                               "n_samples", "rms", "peak_abs",
-                               "rms_per_channel"],
+    def rows_of(mid, d):
+        if d["kind"] != "audio":
+            return
+        ch = d.get("n_channels", 1)
+        x = d["samples"].astype(np.int64)
+        n = int(x.size)
+        sq = int((x * x).sum())
+        rms = math.sqrt(sq / n) / 32768.0 if n else 0.0
+        peak = int(np.abs(x).max()) if n else 0
+        planes = x.reshape(-1, ch)
+        per_ch = []
+        for c in range(ch):
+            csq = int((planes[:, c] * planes[:, c]).sum())
+            cn = planes.shape[0]
+            per_ch.append(
+                round(math.sqrt(csq / cn) / 32768.0, 6) if cn else 0.0
             )
+        yield (mid, d["sample_rate"], ch, n, rms, peak, per_ch)
 
-    return media.mapInPandas(
-        fn, schema="media_id long, sample_rate int, n_channels int, "
-                   "n_samples long, rms double, peak_abs long, "
-                   "rms_per_channel array<double>"
-    )
+    return _map_media(
+        media, "media_id long, sample_rate int, n_channels int, "
+               "n_samples long, rms double, peak_abs long, "
+               "rms_per_channel array<double>", rows_of)
 
 
 def media_df(spark: SparkSession, n: int = 60, seed: int = 42,
              real: bool = False) -> DataFrame:
-    from .session import local_df
-
     rows = build_real_media_rows(n, seed) if real else build_media_rows(n, seed)
     return local_df(spark, rows, MEDIA_DDL)
 

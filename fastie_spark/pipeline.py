@@ -28,7 +28,6 @@ Spark-first design notes:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +38,7 @@ from .decoders import (
     gplinker_decode_cells,
 )
 from .scorer import DictScorer, Vocab
+from .session import arrow_map_fn
 from .tokenizer import encode_meta as encode
 
 MAX_LENGTH = 512  # reference default (decode_utils.py:124)
@@ -79,7 +79,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     space-mask (P3), tokenize (T1), score, decode (M1/M8/M14), chunk-rejoin
     (J1/J2) — all inside ONE Arrow batch pass, one row per page in.
     Returns (setup, process): setup() resolves the per-worker scorer ctx,
-    process(urls, srcs, ctx) -> row tuples; make_fused_doc_arrow_fn wraps
+    process(ctx, urls, srcs) -> row tuples; make_fused_doc_arrow_fn wraps
     them in the mapInArrow boundary.
 
     Why fused: each extra python stage costs a JVM<->Arrow boundary and a
@@ -116,7 +116,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
 
         return get_or_build(cache_key, build, init_acc)
 
-    def process(urls, srcs, ctx) -> list:
+    def process(ctx, urls, srcs) -> list:
         """The per-doc extract->score->decode loop over one batch of
         (url, html) or (url, text) values; returns EXTRACT_SCHEMA row
         tuples. A page that yields no text (null, undecodable html) yields
@@ -209,47 +209,20 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     return setup, process
 
 
-# (name, ddl type) of each EXTRACT_SCHEMA column
-_EXTRACT_FIELDS = [f.split() for f in EXTRACT_SCHEMA.split(", ")]
-
-
 def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
                             do_events: bool = True, from_html: bool = True,
                             split_sentence: bool = False, vocab_bc=None,
                             init_acc=None):
-    """mapInArrow wrapper over the per-doc processor: input columns are
-    read straight off the Arrow record batch and output rows become Arrow
-    arrays directly — no pandas block building on either side (guide-§4
-    Python-boundary cost; measured ~35 ms per 58k output rows for the
-    DataFrame construction alone, plus the serializer's pandas->arrow
-    conversion on top)."""
-    import pyarrow as pa
-
+    """The per-doc processor behind the one Arrow boundary
+    (session.arrow_map_fn): (url, html) or (url, text) batches in,
+    EXTRACT_SCHEMA batches out."""
     setup, process = _fused_doc_processor(
         vocab, max_length=max_length, do_events=do_events,
         from_html=from_html, split_sentence=split_sentence,
         vocab_bc=vocab_bc, init_acc=init_acc,
     )
     src_col = "html" if from_html else "text"
-    names = [name for name, _ in _EXTRACT_FIELDS]
-    types = [pa.int64() if t == "long" else pa.string()
-             for _, t in _EXTRACT_FIELDS]
-
-    def fn(batches) -> Iterator["pa.RecordBatch"]:
-        ctx = setup()
-        for batch in batches:
-            rows = process(
-                batch.column("url").to_pylist(),
-                batch.column(src_col).to_pylist(),
-                ctx,
-            )
-            cols = list(zip(*rows)) if rows else [[] for _ in names]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(v, type=t) for v, t in zip(cols, types)],
-                names=names,
-            )
-
-    return fn
+    return arrow_map_fn(["url", src_col], EXTRACT_SCHEMA, process, setup)
 
 
 def run_extraction_fused(

@@ -1,19 +1,17 @@
-"""html -> text extraction stage (byte-identical per-url contract).
+"""html -> text extraction (byte-identical per-url contract).
 
 The input_hint requires the pipeline to *extract* text from the html column
 and that the extraction be byte-identical per url versus the reference
 extraction (here: the fixture template inverse — fixtures.wrap_html).
-Implemented as an Arrow-vectorized pandas UDF (no per-row Python at the
-Spark API level); tests assert ``extracted == text`` for every row.
+``extract_text_py`` runs inside the fused per-doc Arrow stage
+(pipeline.run_extraction_fused with from_html=True); tests assert
+``extract_text_py(html) == text`` for every fixture page and that the html
+and text paths extract the same rows.
 """
 
 from __future__ import annotations
 
 import html as html_mod
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _OPEN = "<article>"
 _CLOSE = "</article>"
@@ -28,26 +26,3 @@ def extract_text_py(raw: bytes) -> str:
     if i == -1 or j == -1 or j < i:
         return ""
     return html_mod.unescape(s[i + len(_OPEN) : j])
-
-
-def _extract_udf():
-    # constructed lazily: pandas_udf parses its DDL type against the active
-    # session, so the decorator can't run at import time
-    @F.pandas_udf("string")
-    def udf(html: pd.Series) -> pd.Series:
-        def safe(b):
-            try:
-                return extract_text_py(b)
-            except (UnicodeDecodeError, ValueError, TypeError, AttributeError):
-                return ""  # poison/null page -> empty extraction, not a dead task
-
-        return html.map(safe)
-
-    return udf
-
-
-def with_extracted_text(pages: DataFrame, out_col: str = "text") -> DataFrame:
-    """Replace/attach the text column from html. The pipeline consumes the
-    *extracted* text (not the stored text column), so the byte-identity
-    invariant is load-bearing, not decorative."""
-    return pages.withColumn(out_col, _extract_udf()(F.col("html")))

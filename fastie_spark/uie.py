@@ -26,6 +26,7 @@ from .chunking import auto_splitter
 from .decoders import dbc2sbc, get_span
 from .linking import _FW_DST, _FW_SRC
 from .scorer import Vocab, find_all
+from .session import arrow_map_fn
 
 POSITION_PROB = 0.5  # reference default, decode_utils.py:198
 MAX_LENGTH = 512
@@ -287,9 +288,10 @@ def uie_auto_joiner(short_results, short_inputs, input_mapping):
 # lexicographic-max prompt (the reference's max_predict_len quirk) is
 # collected to the driver (one tiny agg per node).
 # --------------------------------------------------------------------------
+# one row per extracted span of a BFS level; path = the schema node
 UIE_ROW_SCHEMA = (
     "url string, parent string, span string, start long, end long, "
-    "probability double"
+    "probability double, path string"
 )
 
 
@@ -299,32 +301,28 @@ def _uie_level_fn(vocab: Vocab, maxp_by_path: dict, max_length: int,
     path, and the per-node lexicographic-max prompt (the reference
     max_predict_len quirk) is looked up from the broadcast-sized
     maxp_by_path dict — node count never adds stages or jobs."""
-    def fn(batches):
-        import pandas as pd
+    def setup():
+        return UIEScorer(vocab, max_length)
 
-        scorer = UIEScorer(vocab, max_length)
-        for pdf in batches:
-            rows = []
-            for url, text, prompt, parent, path in zip(
-                pdf["url"], pdf["text"], pdf["prompt"], pdf["parent"],
-                pdf["path"]
-            ):
-                res = single_stage_predict(
-                    [{"text": text, "prompt": prompt}],
-                    scorer, max_length, split_sentence, position_prob,
-                    max_prompt_len=len(maxp_by_path[path]),
-                )[0]
-                for r in res:
-                    rows.append(
-                        (url, parent, r.get("text"), r.get("start"),
-                         r.get("end"), r["probability"], path)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "parent", "span", "start", "end",
-                               "probability", "path"],
-            )
+    def process(scorer, urls, texts, prompts, parents, paths) -> list:
+        rows = []
+        for url, text, prompt, parent, path in zip(
+            urls, texts, prompts, parents, paths
+        ):
+            res = single_stage_predict(
+                [{"text": text, "prompt": prompt}],
+                scorer, max_length, split_sentence, position_prob,
+                max_prompt_len=len(maxp_by_path[path]),
+            )[0]
+            for r in res:
+                rows.append(
+                    (url, parent, r.get("text"), r.get("start"),
+                     r.get("end"), r["probability"], path)
+                )
+        return rows
 
-    return fn
+    return arrow_map_fn(["url", "text", "prompt", "parent", "path"],
+                        UIE_ROW_SCHEMA, process, setup)
 
 
 def _dbc2sbc_col(col):
@@ -413,7 +411,6 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
             raw = F.concat(F.col("span"), F.lit("的" + child_name))
         return _dbc2sbc_col(raw)
 
-    out_schema = UIE_ROW_SCHEMA + ", path string"
     level_dirs: list = []
     # level state: node_by_path for subtree bookkeeping; root prompts are
     # literal constants (their max over a constant column is the constant),
@@ -444,7 +441,7 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
                     if p in node_by_path}
             if not kept:
                 break
-            level_out = spark.read.schema(out_schema).parquet(ldir)
+            level_out = spark.read.schema(UIE_ROW_SCHEMA).parquet(ldir)
             level_dirs.append(ldir)
         else:
             # ---- assemble the level frame (url, text, prompt, parent, path)
@@ -478,13 +475,13 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
             # The parquet write is reliable-storage lineage truncation: child
             # levels and the final union replay from files (a localCheckpoint
             # would strand the corpus-sized result on executor-local storage).
-            out = frame.mapInPandas(
+            out = frame.mapInArrow(
                 _uie_level_fn(vocab, maxp_by_path, max_length, split_sentence,
                               position_prob),
-                schema=out_schema,
+                schema=UIE_ROW_SCHEMA,
             )
             out.write.mode("overwrite").parquet(ldir)
-            level_out = spark.read.schema(out_schema).parquet(ldir)
+            level_out = spark.read.schema(UIE_ROW_SCHEMA).parquet(ldir)
             level_dirs.append(ldir)
             # commit AFTER the parquet write: a crash mid-write leaves no
             # manifest, so restart recomputes the level (never reads a
@@ -522,8 +519,8 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
         level_idx += 1
 
     if not level_dirs:
-        return spark.createDataFrame([], out_schema)
-    result = spark.read.schema(out_schema).parquet(*level_dirs)
+        return spark.createDataFrame([], UIE_ROW_SCHEMA)
+    result = spark.read.schema(UIE_ROW_SCHEMA).parquet(*level_dirs)
     return result.select(
         "url", "path", "parent", "span", "start", "end", "probability"
     )

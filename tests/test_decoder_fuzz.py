@@ -39,7 +39,7 @@ def vocab_and_text(draw):
 def test_decoder_matrix_invariants(vt):
     vocab, text = vt
     scorer = DictScorer(vocab)
-    ids = make_ids(vocab)
+    ids = make_ids(scorer)
 
     rows1 = decode_chunk_all(scorer, ids, text, 0)
     rows2 = decode_chunk_all(scorer, ids, text, 0)

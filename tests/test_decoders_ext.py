@@ -162,20 +162,20 @@ def test_filter_clashed_priority_order():
 # cross-decoder consistency on the synthetic corpus
 # ---------------------------------------------------------------------------
 @pytest.fixture(scope="module")
-def multi_rows(vocab, pages):
-    import pandas as pd
+def multi_rows(spark, vocab, pages):
+    # spark: the stage parses its DDL output schema through a live session
+    import pyarrow as pa
 
     from fastie_spark.multi_decoder import make_multi_decoder_fn
 
     # NULL and empty text are supported inputs (the driver's documents
     # table is nullable); they must flow through with no rows
-    pdf = pd.DataFrame(
-        [{"url": p["url"], "text": p["text"]} for p in pages]
-        + [{"url": "u-null", "text": None}, {"url": "u-empty", "text": ""}]
-    )
+    batch = pa.RecordBatch.from_pydict({
+        "url": [p["url"] for p in pages] + ["u-null", "u-empty"],
+        "text": [p["text"] for p in pages] + [None, ""],
+    })
     fn = make_multi_decoder_fn(vocab)
-    out = pd.concat(list(fn(iter([pdf]))))
-    return out
+    return pa.Table.from_batches(list(fn(iter([batch])))).to_pandas()
 
 
 def test_null_and_empty_text_yield_no_rows(multi_rows):

@@ -110,12 +110,10 @@ def test_resume_idempotent(spark, pages_df, vocab, linker_df, edges_df, tmp_path
     the same provenance table as an uninterrupted run."""
     from fastie_spark.linking import link_triples
     from fastie_spark.pipeline import run_extraction_fused
-    from fastie_spark.text_extract import with_extracted_text
 
-    ext = with_extracted_text(pages_df.select("url", "html"))
-    triples = run_extraction_fused(spark, ext, vocab, num_partitions=4,
+    triples = run_extraction_fused(spark, pages_df, vocab, num_partitions=4,
                                    do_events=False, persist=False,
-                                   from_html=False)["triples"]
+                                   from_html=True)["triples"]
     linked = link_triples(triples, linker_df)
     linked = linked.withColumn("subj_comp", F.col("subj_id")).withColumn(
         "obj_comp", F.col("obj_id"))
@@ -177,12 +175,10 @@ def test_link_strategies_identical(spark, vocab, linker_df, pages_df):
     fixture-sized dict resolves to broadcast and matches too."""
     from fastie_spark.linking import link_triples
     from fastie_spark.pipeline import run_extraction_fused
-    from fastie_spark.text_extract import with_extracted_text
 
-    ext = with_extracted_text(pages_df.select("url", "html"))
-    triples = run_extraction_fused(spark, ext, vocab, num_partitions=4,
+    triples = run_extraction_fused(spark, pages_df, vocab, num_partitions=4,
                                    do_events=False, persist=False,
-                                   from_html=False)["triples"]
+                                   from_html=True)["triples"]
     cols = ["url", "subj", "pred", "obj", "subj_id", "obj_id"]
 
     def rows(strategy):

@@ -109,6 +109,39 @@ def test_fused_extraction_no_extra_shuffle(spark, vocab, pages_df, from_html):
     assert "MapInPandas" not in plan
 
 
+def test_python_stages_cross_one_arrow_boundary(spark, vocab, pages_df,
+                                                monkeypatch, tmp_path):
+    """Every per-row Python stage is a mapInArrow stage: the multi-decoder,
+    the media operators and each UIE BFS level (read off the frame each
+    level checkpoint writes, since the result reads back from parquet)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from fastie_spark.multi_decoder import run_multi_decoder
+    from fastie_spark.multimodal import ensure_media_parquet, image_features
+    from fastie_spark.uie import run_uie_spark
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, *a, **k):
+        written.append(plan_tree(self._df))
+        return real_parquet(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    subj, pred, _ = vocab.relation_vocab[0]
+    run_uie_spark(spark, pages_df, vocab,
+                  {dict(vocab.entity_vocab)[subj]: [pred]},
+                  work_dir=str(tmp_path / "uie"))
+    assert len(written) == 2  # one checkpoint per BFS level
+    media = spark.read.parquet(ensure_media_parquet())
+    for plan in written + [
+        plan_tree(run_multi_decoder(spark, pages_df, vocab)),
+        plan_tree(image_features(media)),
+    ]:
+        assert plan.count("MapInArrow") == 1
+        assert "MapInPandas" not in plan
+
+
 def test_corpus_filter_single_scan_for_predicates(spark):
     """corpus_filter computes quality + lang-id in the same projection —
     the plan must show exactly two scans of documents (per-row side +

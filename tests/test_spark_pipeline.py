@@ -1,6 +1,8 @@
 """Spark pipeline vs single-process oracle parity (the BASELINE P/R gate),
 byte-identical text extraction, and relational-chunker equivalence."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,7 +10,7 @@ from fastie_spark.chunking import auto_splitter
 from fastie_spark.oracle import OracleEngine
 from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
-from fastie_spark.text_extract import with_extracted_text
+from fastie_spark.text_extract import extract_text_py
 from fastie_spark.textops import chunk_explode
 
 
@@ -25,13 +27,21 @@ def extraction(spark, pages_df, vocab):
     out["_raw"].unpersist()
 
 
-def test_text_extraction_byte_identical(spark, pages_df):
-    """input_hint per-row invariant: extracted text == stored text, every url."""
-    ext = with_extracted_text(pages_df.select("url", "html"), out_col="text2")
-    joined = pages_df.join(ext, "url")
-    n_bad = joined.filter(F.col("text") != F.col("text2")).count()
-    assert n_bad == 0
-    assert joined.count() == pages_df.count()
+def test_text_extraction_byte_identical(spark, vocab, pages, pages_df):
+    """input_hint per-row invariant: extracted text == stored text, every
+    url; and the fused stage's html path extracts exactly the rows of its
+    text path."""
+    for p in pages:
+        assert extract_text_py(p["html"]) == p["text"], p["url"]
+
+    def rows(from_html):
+        raw = run_extraction_fused(spark, pages_df, vocab, persist=False,
+                                   from_html=from_html)["_raw"]
+        return Counter(tuple(r) for r in raw.collect())
+
+    from_text = rows(False)
+    assert sum(from_text.values()) > 0
+    assert rows(True) == from_text
 
 
 def test_relational_chunker_matches_auto_splitter(spark, pages, pages_df,
