@@ -14,7 +14,7 @@ SURVEY.md §0); semantics specified by SURVEY.md §7.1 step 7:
 - dictionary side is broadcast (linker dicts are small relative to
   mentions); a broadcast hash join has no shuffle and therefore no skew
   problem on the probe side — Zipf-heavy head entities cost nothing extra.
-  Skew handling (AQE skew-join + salting) is reserved for the shuffling
+  Skew handling (AQE skew-join) is reserved for the shuffling
   self-joins in cc.py where it actually matters.
 """
 
@@ -161,11 +161,16 @@ def dense_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
 
 
 def _sign_band(start: int, n_bits: int) -> Column:
-    """Sign-bit band over dense dims [start, start+n_bits) — the
-    axis-aligned random-hyperplane LSH of textops.emb_near_dup
-    (textops.py:604), minus the NULL sentinel (dense vectors have none)."""
+    """Sign-bit band over embedding dims [start, start+n_bits) of column
+    ``v`` — the axis-aligned analogue of a random-hyperplane LSH band,
+    shared by link_by_embedding and textops.emb_near_dup. Missing/NULL
+    dims map to a sentinel bit so short vectors band identically in Spark
+    (concat_ws would skip NULLs) and DuckDB (|| would propagate NULL);
+    dense vectors have no NULL dims and never hit it."""
     return F.concat_ws("", *[
-        (F.element_at("v", start + i + 1) > 0).cast("int").cast("string")
+        F.coalesce(
+            (F.element_at("v", start + i + 1) > 0).cast("int"), F.lit(9)
+        ).cast("string")
         for i in range(n_bits)
     ])
 

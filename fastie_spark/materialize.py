@@ -55,35 +55,19 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, p)  # atomic watermark update
 
 
-def build_graph_tables(triples_linked: DataFrame, mentions_linked: DataFrame,
-                       skew_safe: bool = False) -> dict:
-    """Aggregate canonicalized triples/mentions into nodes + edges.
-
-    skew_safe: route the surfaces collect_set through the two-stage salted
-    aggregation (skew.salted_collect_set) — for Zipf-heavy corpora where a
-    head entity's surface set would otherwise concentrate in one task's
-    aggregation buffer. Off by default (one shuffle beats two below that
-    regime; AQE handles the rest)."""
-    base = mentions_linked.filter(F.col("entity_comp").isNotNull())
-    if skew_safe:
-        from .skew import salted_collect_set
-
-        stats = base.groupBy(F.col("entity_comp").alias("component")).agg(
+def build_graph_tables(triples_linked: DataFrame,
+                       mentions_linked: DataFrame) -> dict:
+    """Aggregate canonicalized triples/mentions into nodes + edges."""
+    nodes = (
+        mentions_linked.filter(F.col("entity_comp").isNotNull())
+        .groupBy(F.col("entity_comp").alias("component"))
+        .agg(
             F.count("*").alias("n_mentions"),
+            F.slice(F.sort_array(F.collect_set("surface")), 1, 8)
+            .alias("surfaces"),
             F.min("label").alias("entity_type"),
         )
-        surf = salted_collect_set(
-            base.select(F.col("entity_comp").alias("component"), "surface",
-                        "url"),
-            "component", "surface", unique_col="url", max_items=8,
-        ).withColumnRenamed("surface_set", "surfaces")
-        nodes = stats.join(surf, "component")
-    else:
-        nodes = base.groupBy(F.col("entity_comp").alias("component")).agg(
-            F.count("*").alias("n_mentions"),
-            F.slice(F.sort_array(F.collect_set("surface")), 1, 8).alias("surfaces"),
-            F.min("label").alias("entity_type"),
-        )
+    )
     edges = (
         triples_linked.filter(
             F.col("subj_comp").isNotNull() & F.col("obj_comp").isNotNull()

@@ -1,17 +1,20 @@
-"""Incremental / streaming ingestion of the pages table.
+"""Continuous KG construction over a stream of page files.
 
 The reference is a batch framework (SURVEY.md §2.8: no streaming
 counterpart), but the north rule requires snapshot-checkpointed incremental
-runs. Realized with Structured Streaming:
+runs. ``run_streaming_kg_pipeline`` is the one streaming composition,
+realized with Structured Streaming:
 
 - ``readStream`` file source over the pages directory (new parquet files =
   new crawl snapshots),
+- ``stateful.dedup_stream_ttl`` drops in-TTL re-deliveries before any
+  extraction work,
 - ``foreachBatch`` runs the SAME batch extraction+linking pipeline per
   micro-batch (epoch = snapshot), writing through
-  materialize.materialize_snapshot — whose dynamic-partition-overwrite +
-  manifest commit makes replayed epochs idempotent, giving effectively-once
-  output on top of the streaming checkpoint's at-least-once replay,
-- watermarked tumbling-window mention rates as the windowed-agg example.
+  materialize.materialize_snapshot — whose per-(snapshot, bucket)
+  overwrite + manifest commit makes replayed epochs idempotent, giving
+  effectively-once output on top of the streaming checkpoint's
+  at-least-once replay.
 """
 
 from __future__ import annotations
@@ -27,45 +30,6 @@ from ..scorer import Vocab
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-
-def run_incremental_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    vocab: Vocab,
-    linker: DataFrame,
-    n_buckets: int = 8,
-) -> None:
-    """Process all currently-available page files exactly once (per the
-    streaming checkpoint), appending linked triples to the provenance table
-    one snapshot per epoch. Call again later to pick up new files only."""
-    stream = spark.readStream.schema(PAGES_DDL).parquet(input_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        stages = run_extraction_fused(
-            spark, batch_df, vocab, from_html=True, persist=False
-        )
-        # strategy pinned: the stream's linker dict is static and
-        # broadcast-sized; "auto"'s probe job would re-run every micro-batch
-        linked = link_triples(
-            stages["triples"], linker, strategy="broadcast"
-        ).withColumn(
-            "subj_comp", F.col("subj_id")
-        ).withColumn("obj_comp", F.col("obj_id"))
-        materialize_snapshot(
-            linked, out_dir, snapshot_id=f"epoch-{epoch_id:06d}",
-            n_buckets=n_buckets,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_streaming_kg_pipeline(
@@ -120,6 +84,8 @@ def run_streaming_kg_pipeline(
             spark, batch_df.select("url", "text"), vocab, from_html=False,
             persist=False,
         )
+        # strategy pinned: the stream's linker dict is static and
+        # broadcast-sized; "auto"'s probe job would re-run every micro-batch
         linked = link_triples(
             stages["triples"], linker, strategy="broadcast"
         ).withColumn("subj_comp", F.col("subj_id")).withColumn(
@@ -138,14 +104,3 @@ def run_streaming_kg_pipeline(
     q.awaitTermination()
     return q  # terminated; recentProgress carries per-batch metrics
 
-
-def mention_rate(pages_stream: DataFrame, window: str = "1 minute",
-                 watermark: str = "2 minutes") -> DataFrame:
-    """Watermarked tumbling-window page counts by lang (the windowed-agg
-    streaming shape: late rows beyond the watermark are dropped)."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window), "lang")
-        .agg(F.count("*").alias("n_pages"),
-             F.sum(F.length("text")).alias("n_chars"))
-    )

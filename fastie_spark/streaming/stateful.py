@@ -1,119 +1,24 @@
-"""Custom stateful streaming operator: cross-batch url dedup
-(applyInPandasWithState — the SURVEY.md §2.8 'custom stateful operator'
-slot; no reference counterpart, required by the streaming surface).
+"""Custom stateful streaming operator: cross-batch url dedup with an
+event-time TTL (applyInPandasWithState — the SURVEY.md §2.8 'custom
+stateful operator' slot; no reference counterpart, required by the
+streaming surface).
 
 A crawl stream re-delivers urls (recrawls, mirror copies). This operator
-keys the stream by a url-hash shard and keeps a per-shard state of seen
-url hashes, emitting only first-seen pages downstream — the streaming
-analogue of dedup_exact, with bounded state per shard (hashes, not pages).
+keys the stream by a url-hash shard and keeps a per-shard url -> last
+sighting map, emitting a page only when its url was not seen within the
+TTL. State expires with the watermark, so it is bounded by the distinct
+urls per TTL window, not by the stream's lifetime. It is the dedup stage
+of ``incremental.run_streaming_kg_pipeline``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-OUT_DDL = "url string, text string, lang string"
-STATE_DDL = "seen array<string>"
 N_SHARDS = 64
-
-
-def _dedup_fn(
-    key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    seen = set(state.get[0]) if state.exists else set()
-    out = []
-    for pdf in pdfs:
-        for url, text, lang in zip(pdf["url"], pdf["text"], pdf["lang"]):
-            if url is None:  # poison row: drop, never into state
-                continue
-            if url not in seen:
-                seen.add(url)
-                out.append((url, text, lang))
-    state.update((sorted(seen),))
-    yield pd.DataFrame(out, columns=["url", "text", "lang"])
-
-
-def dedup_stream(pages_stream: DataFrame) -> DataFrame:
-    """Streaming first-seen url filter. Shard by url hash so state is
-    distributed and each task's state stays small; within a shard the state
-    is the sorted list of seen urls (swap for a bloom/sketch at true scale —
-    the operator contract stays identical)."""
-    sharded = pages_stream.select(
-        "url", "text", "lang",
-        F.pmod(F.xxhash64("url"), F.lit(N_SHARDS)).alias("shard"),
-    )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=OUT_DDL,
-        stateStructType=STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bounded-state variant: Bloom-filter state per shard (the true-scale path).
-# ---------------------------------------------------------------------------
-BLOOM_STATE_DDL = "bits binary, n long"
-
-
-def make_bloom_dedup_fn(m_bits: int, k: int):
-    """Per-shard Bloom-filter first-seen filter. State is a FIXED-SIZE bit
-    array (m_bits) + insert count, so per-shard state no longer grows with
-    the stream (the exact-set variant above keeps every url). Trade-off:
-    false positives — a never-seen url can be dropped with probability
-    ~(1 - e^(-k*n/m))^k; at 10^12 urls over enough shards that is the
-    standard dedup-at-scale contract. No false negatives: a re-delivered
-    url is always suppressed. Hash = md5(url) sliced into k indexes,
-    engine-portable and deterministic."""
-    import hashlib
-
-    if m_bits <= 0 or m_bits % 8 != 0:
-        raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
-    if not 1 <= k <= 4:
-        # k indexes are 4-byte slices of the 16-byte md5 digest; k > 4 would
-        # silently read past the digest and degrade to constant-0 indexes
-        raise ValueError(f"k must be in [1, 4], got {k}")
-    n_bytes = m_bits // 8
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            got = state.get
-            bits = bytearray(got[0])
-            n = int(got[1])
-        else:
-            bits = bytearray(n_bytes)
-            n = 0
-        out = []
-        for pdf in pdfs:
-            for url, text, lang in zip(pdf["url"], pdf["text"], pdf["lang"]):
-                if url is None:
-                    continue
-                h = hashlib.md5(url.encode("utf-8")).digest()
-                idxs = [
-                    int.from_bytes(h[i * 4 : (i + 1) * 4], "little") % m_bits
-                    for i in range(k)
-                ]
-                if all(bits[i >> 3] >> (i & 7) & 1 for i in idxs):
-                    continue  # seen (or false positive)
-                for i in idxs:
-                    bits[i >> 3] |= 1 << (i & 7)
-                n += 1
-                out.append((url, text, lang))
-        state.update((bytes(bits), n))
-        yield pd.DataFrame(out, columns=["url", "text", "lang"])
-
-    return fn
-
-
-# ---------------------------------------------------------------------------
-# TTL variant: event-time-expiring state (recrawl-freshness semantics).
-# ---------------------------------------------------------------------------
 TTL_OUT_DDL = "url string, text string, lang string, warc_ts timestamp"
 TTL_STATE_DDL = "urls array<string>, ts array<long>"  # epoch millis
 
@@ -193,20 +98,3 @@ def dedup_stream_ttl(pages_stream: DataFrame, ttl: str = "1 hour",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def dedup_stream_bloom(pages_stream: DataFrame, m_bits: int = 1 << 20,
-                       k: int = 4) -> DataFrame:
-    """Streaming first-seen url filter with O(1) per-shard state (Bloom
-    bits instead of the exact url set) — same operator contract as
-    dedup_stream, bounded memory at any stream length."""
-    sharded = pages_stream.select(
-        "url", "text", "lang",
-        F.pmod(F.xxhash64("url"), F.lit(N_SHARDS)).alias("shard"),
-    )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        make_bloom_dedup_fn(m_bits, k),
-        outputStructType=OUT_DDL,
-        stateStructType=BLOOM_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

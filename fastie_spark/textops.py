@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .linking import _FW_DST, _FW_SRC
+from .linking import _FW_DST, _FW_SRC, _sign_band
 
 CHUNK = 510  # max_length - 2, the reference chunk width
 _TOKEN_RE = r"[\p{L}\p{N}]+"
@@ -441,48 +441,14 @@ FROM b a JOIN b b2 ON a.band = b2.band AND a.doc_id < b2.doc_id
 """
 
 
-def _band_star_edges(sig):
-    """Reduce each LSH band bucket to a STAR on the bucket's min doc_id.
-
-    Every member of a band bucket is a mutual near-dup candidate — the
-    bucket is a complete graph — but connected components only need the
-    bucket to be CONNECTED, and the star (bucket-min -> each member) gives
-    exactly the same components as the complete graph. Edge count drops
-    from sum(|bucket|^2)/2 to sum(|bucket| - 1): on templated/boilerplate
-    web corpora giant buckets are the NORM (measured: 50k synthesized
-    pages -> a 1,061-doc bucket, ~3M pairwise candidates), so the star
-    reduction is the difference between linear work and a quadratic
-    self-join blowup at 100 TB. One window shuffle keyed band; no join.
-
-    sig: frame with doc_id + mh0..mh3 signature columns."""
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.concat_ws("|", F.lit("0"), "mh0", "mh1"),
-                F.concat_ws("|", F.lit("1"), "mh2", "mh3"),
-            )
-        ).alias("band"),
-    )
-    # bucket-min via groupBy + join back, NOT a window: min() is map-side
-    # combinable, so a giant boilerplate bucket partial-aggregates inside
-    # every input partition instead of funneling its full row set through
-    # ONE window task (measured: the window form made one task carry the
-    # ~500k-row hot band at 600k docs); the join back is one-sided skew
-    # (reps has one row per band) which AQE's skew split handles
-    reps = bands.groupBy("band").agg(F.min("doc_id").alias("rep"))
-    return (
-        bands.join(reps, "band")
-        .filter(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("src"), F.col("doc_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-
-
 def _band_components(sig):
     """(doc_id, component) for the LSH near-dup graph, via REP-GRAPH
-    contraction — the second reduction on top of _band_star_edges' star
-    idea: every doc touches at most 2 bucket reps (one per band), and two
+    contraction. Every member of a band bucket is a mutual near-dup
+    candidate, but connected components only need the bucket to be
+    CONNECTED, so each bucket is represented by its min doc_id (its rep;
+    the bucket-min is a map-side-combinable groupBy, not a window, so a
+    giant boilerplate bucket partial-aggregates in every input partition).
+    Every doc touches at most 2 bucket reps (one per band), and two
     docs are connected iff their reps are connected, so the connected
     components only need to run on the graph whose NODES are bucket reps
     and whose edges are the distinct (min-rep, max-rep) pairs of docs
@@ -567,7 +533,7 @@ def _band_components(sig):
 def near_dup_clusters(spark, sf_dir):
     """Cluster-level near-dup dedup — the keep-one-per-cluster step a real
     corpus pipeline runs AFTER candidate generation: LSH band buckets ->
-    star edges (_band_star_edges — same components as the all-pairs
+    bucket-rep graph (_band_components — same components as the all-pairs
     candidate graph at linear instead of quadratic edge count) ->
     connected components (cc.py: driver union-find when tiny, distributed
     label-prop + pointer jumping at scale) -> every doc labeled with its
@@ -579,8 +545,9 @@ def near_dup_clusters(spark, sf_dir):
     magnitude smaller than the corpus, so the CC loop runs on the small
     table; the corpus is touched by one final left join keyed doc_id. No
     cross products anywhere. The DuckDB oracle still clusters over the
-    PAIRWISE candidate graph (near_dup_pairs) — star and complete bucket
-    graphs have identical components, which this parity proves per run."""
+    PAIRWISE candidate graph (near_dup_pairs) — the rep graph and the
+    complete bucket graphs have identical components, which this parity
+    proves per run."""
     from pyspark import StorageLevel
 
     # persist the SLIM signature table once: the component stage consumes
@@ -884,21 +851,6 @@ SELECT doc_id,
          AS simhash
 FROM votes GROUP BY doc_id
 """
-
-
-def _sign_band(start: int, n_bits: int):
-    """Sign-bit band over embedding dims [start, start+n_bits) — the
-    axis-aligned analogue of a random-hyperplane LSH band. Missing/NULL
-    dims map to a sentinel bit so short vectors band identically in Spark
-    (concat_ws would skip NULLs) and DuckDB (|| would propagate NULL)."""
-    return F.concat_ws(
-        "", *[
-            F.coalesce(
-                (F.element_at("v", start + i + 1) > 0).cast("int"), F.lit(9)
-            ).cast("string")
-            for i in range(n_bits)
-        ]
-    )
 
 
 def emb_near_dup(spark, sf_dir, threshold: float = 0.95, n_bits: int = 6,
@@ -1410,7 +1362,7 @@ def _curate_base(d):
     (_minhash_cols). The projection drops the text payload (five 32-char
     hashes + small scalars per row, a few % of corpus bytes) and is
     persisted DISK_ONLY, so every downstream stage — exact-winner window,
-    LSH band-star edges, verdict assembly — replays the slim intermediate
+    LSH bucket-rep graph, verdict assembly — replays the slim intermediate
     instead of re-reading 100 TB of text. Registered with
     release_caches(); long-lived drivers release between queries.
 
@@ -1452,7 +1404,7 @@ def _curate_base(d):
 def curate_verdict(docs):
     """The end-to-end training-data curation chain as ONE DAG over ONE
     corpus scan — the data-pipeline analogue of the fused KG job: exact
-    dedup -> MinHash/LSH band-star edges -> connected-component keep-one
+    dedup -> MinHash/LSH bucket-rep graph -> connected-component keep-one
     clustering -> quality/lang admission -> stratified sampling, emitting
     one verdict row per document:
 
@@ -1468,7 +1420,7 @@ def curate_verdict(docs):
     Scale shape: the corpus text column is read ONCE into the slim
     persisted _curate_base (plan-gated); the exact-winner flag is a window
     over text_hash (one shuffle of the slim base, no join-back); the
-    near-dup graph is _band_star_edges over the CACHED signature columns —
+    near-dup graph is _band_components over the CACHED signature columns —
     linear in corpus size even when templated text makes band buckets
     giant, and no recompute of minhash from raw text (the round-4
     verdict's recompute finding); CC runs on the small edge graph only

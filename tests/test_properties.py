@@ -1,5 +1,6 @@
 """Property-based tests (hypothesis) for the offset algebra, span pairing,
-clique/union-find invariants, and the salted aggregation — SURVEY.md §5(b)."""
+clique/union-find invariants, and distributed connected components —
+SURVEY.md §5(b)."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -83,28 +84,6 @@ def test_union_find_matches_bfs(pairs):
             comp.add(x)
             stack.extend(adj[x])
         assert got[node] == min(comp)
-
-
-# ---------------------------------------------------------------------------
-# salted aggregation == plain aggregation
-# ---------------------------------------------------------------------------
-def test_salted_collect_set_equivalent(spark):
-    import pyspark.sql.functions as F
-
-    from fastie_spark.session import local_df
-    from fastie_spark.skew import salted_collect_set
-
-    rows = [{"k": f"k{i % 3}", "v": f"v{i % 17}", "u": str(i)} for i in range(500)]
-    df = local_df(spark, rows, "k string, v string, u string")
-    got = {
-        r["k"]: r["v_set"]
-        for r in salted_collect_set(df, "k", "v", n_salts=8, unique_col="u").collect()
-    }
-    want = {
-        r["k"]: sorted(r["s"])
-        for r in df.groupBy("k").agg(F.collect_set("v").alias("s")).collect()
-    }
-    assert got == want
 
 
 def test_distributed_cc_star_graph_skew(spark):

@@ -13,8 +13,10 @@ tests pin BOTH with evidence, not just output equality:
    sides — AQE cannot split it (splitting either side would require
    duplicating the other's identical hot partition), and its output is
    inherently quadratic in the bucket. The scale answer is structural,
-   not adaptive: _band_star_edges feeds clustering a linear edge set.
-   Asserted by edge-count arithmetic and cluster correctness.
+   not adaptive: clustering (near_dup_clusters) never builds the pairwise
+   set — _band_components contracts each bucket to its min-doc rep and
+   runs connected components on the small rep graph. Asserted by the
+   pairwise count and cluster correctness.
 
 Threshold note: the skew-split thresholds here are scaled to test-sized
 data (8KB vs the 256MB production default) and partition COALESCING is
@@ -109,15 +111,10 @@ def test_selfjoin_band_skew_star_edges_linear(spark, tmp_path):
     """Two-sided self-join skew is structural: 600 byte-identical
     boilerplate docs put the same hot band key on BOTH sides of
     near_dup_pairs' self-join (un-splittable by AQE, quadratic output:
-    C(600,2) pairs), while _band_star_edges feeds clustering exactly
-    |bucket|-1 = 599 edges and still produces the identical one cluster
-    with the min-doc canonical."""
-    from fastie_spark.textops import (
-        _band_star_edges,
-        minhash_signature,
-        near_dup_clusters,
-        near_dup_pairs,
-    )
+    C(600,2) pairs), while near_dup_clusters contracts the bucket to its
+    min-doc rep and still produces the identical one cluster with the
+    min-doc canonical."""
+    from fastie_spark.textops import near_dup_clusters, near_dup_pairs
 
     boiler = ("the same boilerplate navigation footer text repeated "
               "verbatim across the site " * 4)
@@ -145,11 +142,6 @@ def test_selfjoin_band_skew_star_edges_linear(spark, tmp_path):
     # the pairwise operator's output contract IS quadratic in the bucket
     n_pairs = near_dup_pairs(spark, d).count()
     assert n_pairs >= 600 * 599 // 2
-
-    # the clustering path's edge set is linear in the bucket
-    edges = _band_star_edges(minhash_signature(spark, d))
-    n_edges = edges.count()
-    assert n_edges < 2 * 600  # <= one edge per member per band, deduped
 
     clusters = near_dup_clusters(spark, d).collect()
     boiler_rows = [r for r in clusters if r["doc_id"] < 600]

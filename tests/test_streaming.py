@@ -1,5 +1,6 @@
-"""Structured-Streaming incremental ingestion: exactly-once snapshots across
-restarts, plus the watermarked window aggregation."""
+"""Structured-Streaming KG construction: the TTL dedup operator and the
+continuous pipeline built on it (run_streaming_kg_pipeline) — exactly-once
+snapshots across restarts, epoch replay, and recrawl-freshness dedup."""
 
 import os
 
@@ -10,8 +11,7 @@ from fastie_spark.fixtures import build_linker_dict, build_pages
 from fastie_spark.session import local_df
 from fastie_spark.streaming.incremental import (
     PAGES_DDL,
-    mention_rate,
-    run_incremental_extraction,
+    run_streaming_kg_pipeline,
 )
 
 PAGES_SCHEMA = PAGES_DDL
@@ -25,7 +25,7 @@ def linker_df(spark, vocab):
     )
 
 
-def _write_wave(spark, pages, path, name):
+def _write_wave(spark, pages, path):
     local_df(spark, pages, PAGES_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(path)
@@ -37,139 +37,53 @@ def test_incremental_exactly_once(spark, vocab, linker_df, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(in_dir, exist_ok=True)
 
+    def run():
+        # one file per micro-batch: a run over a backlog commits one
+        # epoch (= snapshot) per file; returns the pages the run read
+        q = run_streaming_kg_pipeline(spark, in_dir, out_dir, ckpt, vocab,
+                                      linker_df, max_files_per_trigger=1)
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    def prov():
+        return spark.read.parquet(os.path.join(out_dir, "provenance"))
+
+    def snapshots():
+        return {r["snapshot_id"]
+                for r in prov().select("snapshot_id").distinct().collect()}
+
     all_pages = build_pages(vocab, n_docs=60, seed=3)
-    _write_wave(spark, all_pages[:30], in_dir, "w1")
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt, vocab, linker_df)
-    prov1 = spark.read.parquet(os.path.join(out_dir, "provenance"))
-    n1 = prov1.count()
-    urls1 = {r["url"] for r in prov1.select("url").distinct().collect()}
+    # wave 1 lands as two files before the first run
+    _write_wave(spark, all_pages[:15], in_dir)
+    _write_wave(spark, all_pages[15:30], in_dir)
+    assert run() == 30
+    n1 = prov().count()
+    urls1 = {r["url"] for r in prov().select("url").distinct().collect()}
+    snaps1 = snapshots()
     assert n1 > 0
     assert urls1 <= {p["url"] for p in all_pages[:30]}
+    assert len(snaps1) >= 2  # maxFilesPerTrigger split the backlog
 
     # second wave: only the new files are processed (streaming checkpoint)
-    _write_wave(spark, all_pages[30:], in_dir, "w2")
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt, vocab, linker_df)
-    prov2 = spark.read.parquet(os.path.join(out_dir, "provenance"))
-    n2 = prov2.count()
+    _write_wave(spark, all_pages[30:], in_dir)
+    assert run() == 30
+    n2 = prov().count()
     assert n2 > n1
-    # no duplicated triples for wave-1 urls (exactly-once)
+    new = prov().filter(~F.col("snapshot_id").isin(*snaps1))
+    urls2 = {r["url"] for r in new.select("url").distinct().collect()}
+    assert urls2 and urls2 <= {p["url"] for p in all_pages[30:]}
+    assert prov().filter(F.col("snapshot_id").isin(*snaps1)).count() == n1
+    # no duplicated triples (exactly-once)
     dup = (
-        prov2.groupBy("url", "subj", "pred", "obj").count().filter("count > 1")
+        prov().groupBy("url", "subj", "pred", "obj").count()
+        .filter("count > 1")
     )
     assert dup.count() == 0
 
     # re-run with no new input: nothing changes (idempotent restart)
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt, vocab, linker_df)
-    assert spark.read.parquet(os.path.join(out_dir, "provenance")).count() == n2
-    # snapshots recorded per epoch
-    manifests = [f for f in os.listdir(out_dir) if f.startswith("_manifest_")]
-    assert len(manifests) >= 2
-
-
-def test_mention_rate_window(spark, vocab, tmp_path):
-    in_dir = str(tmp_path / "win_in")
-    pages = build_pages(vocab, n_docs=40, seed=5)
-    local_df(spark, pages, PAGES_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-    agg = mention_rate(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("rates")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM rates").collect()
-    assert sum(r["n_pages"] for r in rows) == 40
-    assert all(r["window"]["start"] is not None for r in rows)
-
-
-def test_stateful_dedup_stream(spark, vocab, tmp_path):
-    """applyInPandasWithState cross-batch dedup: re-delivered urls are
-    suppressed on the second wave because per-shard state remembers them."""
-    from fastie_spark.streaming.stateful import dedup_stream
-
-    in_dir = str(tmp_path / "dd_in")
-    out_dir = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    os.makedirs(in_dir, exist_ok=True)
-    pages = build_pages(vocab, n_docs=30, seed=9)
-
-    def run_wave(rows):
-        local_df(spark, rows, PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-        q = (
-            dedup_stream(stream)
-            .writeStream.outputMode("append")
-            .format("parquet").option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_wave(pages[:20])
-    assert spark.read.parquet(out_dir).count() == 20
-    # wave 2: 10 repeats + 10 new -> only the 10 new pass the state filter
-    run_wave(pages[10:])
-    out = (
-        spark.read.parquet(out_dir)
-        .groupBy("url").count().collect()
-    )
-    assert len(out) == 30
-    assert all(r["count"] == 1 for r in out)
-
-
-def test_stateful_dedup_stream_bloom(spark, vocab, tmp_path):
-    """Bounded-state Bloom variant: same first-seen contract across waves,
-    but per-shard state is a fixed-size bit array (m_bits) instead of the
-    growing url set. m sized so false positives are ~impossible for 30
-    urls; a cross-batch repeat is still always suppressed."""
-    from fastie_spark.streaming.stateful import dedup_stream_bloom
-
-    in_dir = str(tmp_path / "bd_in")
-    out_dir = str(tmp_path / "bd_out")
-    ckpt = str(tmp_path / "bd_ckpt")
-    os.makedirs(in_dir, exist_ok=True)
-    pages = build_pages(vocab, n_docs=30, seed=9)
-
-    def run_wave(rows):
-        local_df(spark, rows, PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-        q = (
-            dedup_stream_bloom(stream, m_bits=1 << 16, k=4)
-            .writeStream.outputMode("append")
-            .format("parquet").option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_wave(pages[:20])
-    assert spark.read.parquet(out_dir).count() == 20
-    run_wave(pages[10:])
-    out = spark.read.parquet(out_dir).groupBy("url").count().collect()
-    assert len(out) == 30
-    assert all(r["count"] == 1 for r in out)
-
-
-def test_bloom_params_validated():
-    import pytest
-
-    from fastie_spark.streaming.stateful import make_bloom_dedup_fn
-
-    with pytest.raises(ValueError, match="multiple of 8"):
-        make_bloom_dedup_fn(m_bits=12, k=2)
-    with pytest.raises(ValueError, match=r"k must be"):
-        make_bloom_dedup_fn(m_bits=64, k=5)
-    make_bloom_dedup_fn(m_bits=64, k=4)  # boundary values are fine
+    snaps2 = snapshots()
+    assert run() == 0
+    assert prov().count() == n2
+    assert snapshots() == snaps2
 
 
 def test_stateful_dedup_stream_ttl(spark, vocab, tmp_path):
