@@ -2,8 +2,8 @@
 model initialization") — the executor-side pattern a real subword-tokenizer
 / torch-checkpoint swap plugs into:
 
-- artifacts ship ONCE per executor (Spark broadcast), not per task closure;
-- the FIRST task on each python worker pays the build cost; later tasks
+- artifacts are keyed by their fingerprint in a process-global cache, so
+  the FIRST task on each python worker pays the build cost; later tasks
   reuse the process-global instance (``spark.python.worker.reuse`` — on by
   default — keeps python workers alive across tasks and jobs);
 - an optional accumulator counts actual builds, so a test can pin

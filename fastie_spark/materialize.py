@@ -6,9 +6,10 @@ path is isolated here so a real Iceberg catalog is a one-function swap):
 
   nodes(component, entity_type, n_mentions, surfaces)
   edges(subj_id, pred, obj_id, n_support)
-  provenance(url, subj, pred, obj, subj_id, obj_id, bucket, snapshot_id,
-             partition_id)   -- per-row lineage: which snapshot + which
-             Spark partition produced each triple
+  provenance(url, subj, pred, obj, subj_id, obj_id, subj_prior, obj_prior,
+             subj_comp, obj_comp, bucket, snapshot_id, partition_id)
+             -- per-row lineage: which snapshot + which Spark partition
+             produced each triple, with its linking priors and components
 
 Checkpoint/resume model: work is partitioned into ``n_buckets`` url-hash
 buckets. A JSON manifest per snapshot records, per completed bucket, the
@@ -87,7 +88,6 @@ def materialize_snapshot(
     out_dir: str,
     snapshot_id: str,
     n_buckets: int = 8,
-    resume: bool = True,
 ) -> dict:
     """Write provenance table bucket-by-bucket with checkpoint/resume.
 
@@ -95,9 +95,7 @@ def materialize_snapshot(
     skipped entirely (their parquet partition dir is left untouched), so a
     resumed run reproduces exactly the same table as an uninterrupted one.
     """
-    manifest = read_manifest(out_dir, snapshot_id) if resume else {
-        "snapshot_id": snapshot_id, "buckets": {}
-    }
+    manifest = read_manifest(out_dir, snapshot_id)
     done = set(manifest["buckets"])
 
     prov = with_bucket(triples_linked, "url", n_buckets).withColumn(

@@ -38,11 +38,11 @@ NER_DECODERS = ["gp", "w2ner", "span", "crf", "cascade_crf", "tplinker", "cnn"]
 RE_DECODERS = ["gplinker", "casrel", "tplinker", "grte", "onerel", "pfn"]
 
 
-def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str, base: int,
-                     max_length: int = MAX_LENGTH) -> list:
+def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str,
+                     base: int) -> list:
     """All decoders on one chunk -> row tuples (decoder-tagged)."""
     masked = chunk.replace(" ", "-")
-    enc = encode(masked, max_length)
+    enc = encode(masked, MAX_LENGTH)
     l, mapping = enc["seq_len"], enc["offset_mapping"]
     rows = []
 
@@ -58,7 +58,7 @@ def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str, base: int,
     # --- NER family ---
     add_mentions("gp", gp_decode_cells(
         scorer.ner_cells(masked), l, chunk, mapping, ids["ner"]))
-    length = min(len(masked), max_length - 2)
+    length = min(len(masked), MAX_LENGTH - 2)
     add_mentions("w2ner", w2ner_decode_grid(
         scorer.w2ner_grid(masked), length, chunk, ids["w2ner"]))
     starts, ends = scorer.span_arrays(masked)
@@ -106,12 +106,12 @@ def make_ids(scorer: DictScorer) -> dict:
     }
 
 
-def make_multi_decoder_fn(vocab: Vocab, max_length: int = MAX_LENGTH):
+def make_multi_decoder_fn(vocab: Vocab):
     """mapInArrow fn: (url, text) batches -> MULTI_SCHEMA batches."""
     from .chunking import char_bases, split_one
 
     def setup():
-        scorer = DictScorer(vocab, max_length)
+        scorer = DictScorer(vocab, MAX_LENGTH)
         return scorer, make_ids(scorer)
 
     def process(ctx, urls, texts) -> list:
@@ -120,11 +120,11 @@ def make_multi_decoder_fn(vocab: Vocab, max_length: int = MAX_LENGTH):
         for url, text in zip(urls, texts):
             if text is None:  # nullable text, as in the fused loop
                 continue
-            chunks = split_one(text, max_length - 2)
+            chunks = split_one(text, MAX_LENGTH - 2)
             bases = char_bases(chunks)
             doc_triples: dict = {}
             for chunk, base in zip(chunks, bases):
-                for r in decode_chunk_all(scorer, ids, chunk, base, max_length):
+                for r in decode_chunk_all(scorer, ids, chunk, base):
                     if r[1] == "triple":  # J2: per-doc set union per decoder
                         doc_triples.setdefault(r[0], set()).add(r[6:9])
                     else:
@@ -138,8 +138,8 @@ def make_multi_decoder_fn(vocab: Vocab, max_length: int = MAX_LENGTH):
     return arrow_map_fn(["url", "text"], MULTI_SCHEMA, process, setup)
 
 
-def run_multi_decoder(spark: SparkSession, pages: DataFrame, vocab: Vocab,
-                      num_partitions: int | None = None) -> DataFrame:
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    src = repartition_by_url(pages.select("url", "text"), parts)
+def run_multi_decoder(spark: SparkSession, pages: DataFrame,
+                      vocab: Vocab) -> DataFrame:
+    src = repartition_by_url(pages.select("url", "text"),
+                             spark.sparkContext.defaultParallelism)
     return src.mapInArrow(make_multi_decoder_fn(vocab), schema=MULTI_SCHEMA)

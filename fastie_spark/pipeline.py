@@ -73,8 +73,7 @@ def _event_key(url: str, etype: str, trigger: str, args: list) -> str:
 
 def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                          do_events: bool = True, from_html: bool = True,
-                         split_sentence: bool = False, vocab_bc=None,
-                         init_acc=None):
+                         split_sentence: bool = False, init_acc=None):
     """Whole-document fused stage: html->text (P-extract), chunking (P6),
     space-mask (P3), tokenize (T1), score, decode (M1/M8/M14), chunk-rejoin
     (J1/J2) — all inside ONE Arrow batch pass, one row per page in.
@@ -91,27 +90,21 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     are built lazily through executor_init.get_or_build keyed by the vocab
     fingerprint, so with worker reuse the Nth task on a worker pays zero
     init cost — the seam where a real tokenizer/checkpoint load slots in
-    (SURVEY §3.2). Pass ``vocab_bc`` (a Broadcast of the Vocab) to ship the
-    artifacts once per executor instead of once per task closure, and
-    ``init_acc`` (an accumulator) to observe actual build counts."""
+    (SURVEY §3.2). Pass ``init_acc`` (an accumulator) to observe actual
+    build counts."""
     from .chunking import auto_splitter, char_bases, split_one
     from .executor_init import get_or_build
     from .text_extract import extract_text_py
 
-    cache_key = (
-        f"dict_scorer|{(vocab_bc.value if vocab_bc else vocab).fingerprint()}"
-        f"|{max_length}"
-    )
-    ship_vocab = None if vocab_bc is not None else vocab
+    cache_key = f"dict_scorer|{vocab.fingerprint()}|{max_length}"
 
     def setup():
         def build():
-            v = vocab_bc.value if vocab_bc is not None else ship_vocab
             return (
-                DictScorer(v, max_length),
-                dict(enumerate(v.ner_labels())),
-                dict(enumerate(v.predicates())),
-                dict(enumerate(v.event_labels())),
+                DictScorer(vocab, max_length),
+                dict(enumerate(vocab.ner_labels())),
+                dict(enumerate(vocab.predicates())),
+                dict(enumerate(vocab.event_labels())),
             )
 
         return get_or_build(cache_key, build, init_acc)
@@ -211,15 +204,14 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
 
 def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
                             do_events: bool = True, from_html: bool = True,
-                            split_sentence: bool = False, vocab_bc=None,
-                            init_acc=None):
+                            split_sentence: bool = False, init_acc=None):
     """The per-doc processor behind the one Arrow boundary
     (session.arrow_map_fn): (url, html) or (url, text) batches in,
     EXTRACT_SCHEMA batches out."""
     setup, process = _fused_doc_processor(
         vocab, max_length=max_length, do_events=do_events,
         from_html=from_html, split_sentence=split_sentence,
-        vocab_bc=vocab_bc, init_acc=init_acc,
+        init_acc=init_acc,
     )
     src_col = "html" if from_html else "text"
     return arrow_map_fn(["url", src_col], EXTRACT_SCHEMA, process, setup)
@@ -236,7 +228,6 @@ def run_extraction_fused(
     repartition: bool = True,
     split_sentence: bool = False,
     max_length: int = MAX_LENGTH,
-    broadcast_vocab: bool = False,
     init_acc=None,
 ) -> dict:
     """pages -> {'mentions','triples','events','_raw'} DataFrames through
@@ -255,23 +246,18 @@ def run_extraction_fused(
     well-bucketed source (e.g. an Iceberg table already bucketed by url)
     the shuffle of the raw html bytes is pure cost.
 
-    broadcast_vocab=True ships the vocab as a Spark broadcast (once per
-    executor) instead of in the task closure — the real-checkpoint shape,
-    where artifacts are MBs-GBs. init_acc: accumulator observing per-worker
-    scorer builds (executor_init)."""
+    init_acc: accumulator observing per-worker scorer builds
+    (executor_init)."""
     cols = ["url", "html" if from_html else "text"]
     parts = num_partitions or spark.sparkContext.defaultParallelism
     src = pages.select(*cols)
     if repartition:
         src = repartition_by_url(src, parts)
-    vocab_bc = (
-        spark.sparkContext.broadcast(vocab) if broadcast_vocab else None
-    )
     raw = src.mapInArrow(
         make_fused_doc_arrow_fn(
             vocab, max_length=max_length, do_events=do_events,
             from_html=from_html, split_sentence=split_sentence,
-            vocab_bc=vocab_bc, init_acc=init_acc,
+            init_acc=init_acc,
         ),
         schema=EXTRACT_SCHEMA,
     )

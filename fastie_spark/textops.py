@@ -15,6 +15,9 @@ partials, broadcast for small sides, no driver collects in the data path).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -214,13 +217,142 @@ FROM a
 """
 
 
+# ---------------------------------------------------------- document rules
+# Each document rule the curation queries share has one Spark builder and
+# one DuckDB fragment here; every query and oracle below is composed from
+# them, so a standalone query (quality_score, corpus_filter, ...) and the
+# curation chain cannot admit different documents.
+def _text_hash():
+    """Exact-dedup key: md5 of the lowered, trimmed text."""
+    return F.md5(F.lower(F.trim(F.col("text"))))
+
+
+_TEXT_HASH_SQL = "md5(lower(trim(text)))"
+
+
+def _ascii_chars():
+    return F.length(F.regexp_replace(F.col("text"), _ASCII_RE, ""))
+
+
+_ASCII_CHARS_SQL = f"length(regexp_replace(text, '{_ASCII_RE}', '', 'g'))"
+
+
+def _pred_lang():
+    """n-gram-free language heuristic: 'en' above a printable-ASCII char
+    ratio, 'unk' for empty text, else 'zh'."""
+    n_chars = F.length("text")
+    return (
+        F.when(n_chars == 0, F.lit("unk"))
+        .when(_ascii_chars() / n_chars > 0.65, F.lit("en"))
+        .otherwise(F.lit("zh"))
+    )
+
+
+_PRED_LANG_SQL = f"""CASE WHEN length(text) = 0 THEN 'unk'
+            WHEN {_ASCII_CHARS_SQL}
+                 / cast(length(text) AS DOUBLE) > 0.65 THEN 'en'
+            ELSE 'zh' END"""
+
+
+def _n_punct():
+    return F.size(F.regexp_extract_all(F.col("text"), F.lit(_PUNCT_RE), 0))
+
+
+_N_PUNCT_SQL = f"length(regexp_extract_all(text, '{_PUNCT_RE}'))"
+
+
+def _quality():
+    """Document quality: length saturation × (1 - punctuation density)."""
+    n_chars = F.length("text")
+    return F.round(
+        F.least(n_chars, F.lit(2000)) / 2000.0
+        * (1.0 - _n_punct() / F.greatest(n_chars, F.lit(1))),
+        6,
+    )
+
+
+_QUALITY_SQL = f"""round(least(length(text), 2000) / 2000.0
+             * (1.0 - {_N_PUNCT_SQL}
+                      / cast(greatest(length(text), 1) AS DOUBLE)), 6)"""
+
+
+def _admitted(*gates):
+    """Training-corpus admission over (quality, pred_lang) columns: every
+    gate AND quality above threshold AND a confident lang-id, as one
+    left-nested conjunction."""
+    return reduce(operator.and_, (
+        *gates, F.col("quality") > 0.05, F.col("pred_lang") != "unk",
+    ))
+
+
+_ADMITTED_SQL = "quality > 0.05 AND pred_lang <> 'unk'"
+
+
+def _in_strat_sample():
+    """Per-language stratified sampler over (doc_id, lang): keep when the
+    first byte of md5(doc_id|lang|'strat') is under the stratum's
+    threshold, so membership is content-stable under any partitioning and
+    engine (rand(seed) is not). The rate is a closed-form rule on the
+    stratum key: lang length mod 3 -> 25% / 50% / 75%."""
+    h = F.substring(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"),
+                       F.col("lang"), F.lit("|strat"))), 1, 2
+    )
+    thresh = (
+        F.when(F.length("lang") % 3 == 0, "40")
+        .when(F.length("lang") % 3 == 1, "80")
+        .otherwise("c0")
+    )
+    return h < thresh
+
+
+_IN_STRAT_SAMPLE_SQL = """substring(md5(cast(doc_id AS VARCHAR) || '|' || lang
+                            || '|strat'), 1, 2)
+      < CASE WHEN length(lang) % 3 = 0 THEN '40'
+             WHEN length(lang) % 3 = 1 THEN '80'
+             ELSE 'c0' END"""
+
+
+def _top_lang(per_lang):
+    """Per-source dominant language over (source, lang, ln) counts: the
+    rank-1 row with its count and the source's language count.
+
+    asc_nulls_last: DuckDB's ORDER BY lang is NULLS LAST, Spark's asc is
+    NULLS FIRST — a NULL lang tied on count would pick different rows.
+    n_langs rides the SAME window partition as the rank (an unordered
+    count over partitionBy(source)) — one shuffle and no separate
+    groupBy + join."""
+    w = Window.partitionBy("source").orderBy(
+        F.desc("ln"), F.asc_nulls_last("lang")
+    )
+    wc = Window.partitionBy("source")
+    return (
+        per_lang.withColumn("rnk", F.row_number().over(w))
+        .withColumn("n_langs", F.count("*").over(wc).cast("long"))
+        .filter(F.col("rnk") == 1)
+        .select("source", F.col("lang").alias("top_lang"),
+                F.col("ln").alias("top_n"), "n_langs")
+    )
+
+
+# CTE over a per_lang(source, lang, ln) CTE; QUALIFY runs after the
+# windows, so n_langs counts every per_lang row of the source
+_TOP_LANG_SQL = """top AS (
+  SELECT source, lang AS top_lang, ln AS top_n,
+         cast(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_langs
+  FROM per_lang
+  QUALIFY row_number() OVER (PARTITION BY source
+                             ORDER BY ln DESC, lang) = 1
+)"""
+
+
 # ---------------------------------------------------------------- dedup: exact
 def dedup_exact(spark, sf_dir):
     """Exact dedup by normalized-text hash: one shuffle keyed on the hash,
     partial aggregation map-side. keep_doc_id = min (deterministic winner)."""
     return (
         _docs(spark, sf_dir)
-        .select("doc_id", F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"))
+        .select("doc_id", _text_hash().alias("text_hash"))
         .groupBy("text_hash")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -229,8 +361,8 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-DEDUP_EXACT_SQL = """
-SELECT md5(lower(trim(text))) AS text_hash,
+DEDUP_EXACT_SQL = f"""
+SELECT {_TEXT_HASH_SQL} AS text_hash,
        cast(count(*) AS BIGINT) AS n_docs,
        min(doc_id) AS keep_doc_id
 FROM documents GROUP BY 1
@@ -260,50 +392,34 @@ FROM documents
 
 def lang_id(spark, sf_dir):
     """n-gram-free language heuristic: printable-ASCII char ratio."""
-    ascii_n = F.length(F.regexp_replace(F.col("text"), _ASCII_RE, ""))
     return _docs(spark, sf_dir).select(
         "doc_id",
-        ascii_n.cast("long").alias("ascii_chars"),
-        F.when(F.length("text") == 0, F.lit("unk"))
-        .when(ascii_n / F.length("text") > 0.65, F.lit("en"))
-        .otherwise(F.lit("zh"))
-        .alias("pred_lang"),
+        _ascii_chars().cast("long").alias("ascii_chars"),
+        _pred_lang().alias("pred_lang"),
     )
 
 
-LANG_ID_SQL = rf"""
+LANG_ID_SQL = f"""
 SELECT doc_id,
-       cast(length(regexp_replace(text, '{_ASCII_RE}', '', 'g')) AS BIGINT)
-         AS ascii_chars,
-       CASE WHEN length(text) = 0 THEN 'unk'
-            WHEN length(regexp_replace(text, '{_ASCII_RE}', '', 'g'))
-                 / cast(length(text) AS DOUBLE) > 0.65 THEN 'en'
-            ELSE 'zh' END AS pred_lang
+       cast({_ASCII_CHARS_SQL} AS BIGINT) AS ascii_chars,
+       {_PRED_LANG_SQL} AS pred_lang
 FROM documents
 """
 
 
 def quality_score(spark, sf_dir):
     """Document quality: length saturation × (1 - punctuation density)."""
-    n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(_PUNCT_RE), 0))
-    n_chars = F.length("text")
     return _docs(spark, sf_dir).select(
         "doc_id",
-        n_punct.cast("long").alias("n_punct"),
-        F.round(
-            F.least(n_chars, F.lit(2000)) / 2000.0
-            * (1.0 - n_punct / F.greatest(n_chars, F.lit(1))),
-            6,
-        ).alias("quality"),
+        _n_punct().cast("long").alias("n_punct"),
+        _quality().alias("quality"),
     )
 
 
-QUALITY_SCORE_SQL = rf"""
+QUALITY_SCORE_SQL = f"""
 SELECT doc_id,
-       cast(length(regexp_extract_all(text, '{_PUNCT_RE}')) AS BIGINT) AS n_punct,
-       round(least(length(text), 2000) / 2000.0
-             * (1.0 - length(regexp_extract_all(text, '{_PUNCT_RE}'))
-                      / cast(greatest(length(text), 1) AS DOUBLE)), 6) AS quality
+       cast({_N_PUNCT_SQL} AS BIGINT) AS n_punct,
+       {_QUALITY_SQL} AS quality
 FROM documents
 """
 
@@ -672,24 +788,12 @@ def stratified_sample(spark, sf_dir):
     analogue of df.sampleBy(col, fractions, seed)): each language stratum
     keeps a hash-determined fraction of its docs — the training-data
     curation move of capping head languages while keeping tail languages
-    whole. Keep-decision = md5(doc_id|lang|'strat') first byte under the
-    stratum's threshold, so membership is content-stable under any
-    partitioning/engine (rand(seed) is not). Pure one-scan projection +
+    whole. The keep-decision is the content-stable _in_strat_sample hash
+    rule; rate reports the stratum's fraction. Pure one-scan projection +
     filter; scales trivially."""
-    h = F.substring(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"),
-                       F.col("lang"), F.lit("|strat"))), 1, 2
-    )
-    # per-stratum rates by a closed-form rule on the stratum key (so the
-    # DuckDB oracle reproduces it): lang length mod 3 -> 25% / 50% / 75%
-    thresh = (
-        F.when(F.length("lang") % 3 == 0, "40")
-        .when(F.length("lang") % 3 == 1, "80")
-        .otherwise("c0")
-    )
     return (
         _docs(spark, sf_dir)
-        .filter(h < thresh)
+        .filter(_in_strat_sample())
         .select(
             "doc_id", "lang",
             F.when(F.length("lang") % 3 == 0, 0.25)
@@ -699,16 +803,13 @@ def stratified_sample(spark, sf_dir):
     )
 
 
-STRATIFIED_SAMPLE_SQL = """
+STRATIFIED_SAMPLE_SQL = f"""
 SELECT doc_id, lang,
        cast(CASE WHEN length(lang) % 3 = 0 THEN 0.25
                  WHEN length(lang) % 3 = 1 THEN 0.5
                  ELSE 0.75 END AS DOUBLE) AS rate
 FROM documents
-WHERE substring(md5(cast(doc_id AS VARCHAR) || '|' || lang || '|strat'), 1, 2)
-      < CASE WHEN length(lang) % 3 = 0 THEN '40'
-             WHEN length(lang) % 3 = 1 THEN '80'
-             ELSE 'c0' END
+WHERE {_IN_STRAT_SAMPLE_SQL}
 """
 
 
@@ -1196,37 +1297,24 @@ def corpus_filter(spark, sf_dir):
     AND quality above threshold AND confident lang-id. quality/lang-id are
     per-row projections computed in ONE scan; the dedup-winner semi-join is
     the only aggregation/shuffle."""
-    d = _docs(spark, sf_dir)
-    n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(_PUNCT_RE), 0))
-    n_chars = F.length("text")
-    ascii_n = F.length(F.regexp_replace(F.col("text"), _ASCII_RE, ""))
-    per_row = d.select(
+    per_row = _docs(spark, sf_dir).select(
         "doc_id", "lang",
-        n_chars.cast("long").alias("n_chars_obs"),
-        F.round(
-            F.least(n_chars, F.lit(2000)) / 2000.0
-            * (1.0 - n_punct / F.greatest(n_chars, F.lit(1))),
-            6,
-        ).alias("quality"),
-        F.when(n_chars == 0, F.lit("unk"))
-        .when(ascii_n / n_chars > 0.65, F.lit("en"))
-        .otherwise(F.lit("zh"))
-        .alias("pred_lang"),
+        F.length("text").cast("long").alias("n_chars_obs"),
+        _quality().alias("quality"),
+        _pred_lang().alias("pred_lang"),
     )
     keep = dedup_exact(spark, sf_dir).select(
         F.col("keep_doc_id").alias("doc_id")
     )
     return (
         per_row.join(keep, "doc_id", "left_semi")
-        .filter((F.col("quality") > 0.05) & (F.col("pred_lang") != "unk"))
+        .filter(_admitted())
         .select("doc_id", "lang", "pred_lang", "quality", "n_chars_obs")
     )
 
 
 CORPUS_FILTER_SQL = f"""
-WITH keep AS (
-  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(lower(trim(text)))
-),
+WITH keep AS (SELECT keep_doc_id AS doc_id FROM ({DEDUP_EXACT_SQL})),
 q AS ({QUALITY_SCORE_SQL}),
 lid AS ({LANG_ID_SQL})
 SELECT d.doc_id, d.lang, lid.pred_lang, q.quality,
@@ -1235,7 +1323,7 @@ FROM documents d
 JOIN keep USING (doc_id)
 JOIN q USING (doc_id)
 JOIN lid USING (doc_id)
-WHERE q.quality > 0.05 AND lid.pred_lang <> 'unk'
+WHERE {_ADMITTED_SQL}
 """
 
 
@@ -1289,24 +1377,8 @@ def source_profile(spark, sf_dir):
         F.count("*").cast("long").alias("n_distinct"),
         F.sum("chars").cast("long").alias("total_chars"),
     )
-    per_lang = fine.groupBy("source", "lang").agg(
-        F.sum("n").cast("long").alias("ln")
-    )
-    # asc_nulls_last: engine-identical tie-break (DuckDB orders NULLS LAST).
-    # n_langs rides the SAME window partition as the rank (an unordered
-    # count over partitionBy(source)) — one shuffle and one join instead
-    # of a separate groupBy + second join; values identical (the count of
-    # per_lang rows per source attached to the rank-1 row).
-    w = Window.partitionBy("source").orderBy(
-        F.desc("ln"), F.asc_nulls_last("lang")
-    )
-    wc = Window.partitionBy("source")
-    top = (
-        per_lang.withColumn("rnk", F.row_number().over(w))
-        .withColumn("n_langs", F.count("*").over(wc).cast("long"))
-        .filter(F.col("rnk") == 1)
-        .select("source", F.col("lang").alias("top_lang"),
-                F.col("ln").alias("top_n"), "n_langs")
+    top = _top_lang(
+        fine.groupBy("source", "lang").agg(F.sum("n").cast("long").alias("ln"))
     )
     return (
         base.join(top, "source")
@@ -1321,7 +1393,7 @@ def source_profile(spark, sf_dir):
     )
 
 
-SOURCE_PROFILE_SQL = """
+SOURCE_PROFILE_SQL = f"""
 WITH per_text AS (
   SELECT source, md5(text) AS h, cast(count(*) AS BIGINT) AS n,
          cast(sum(length(text)) AS BIGINT) AS chars
@@ -1337,20 +1409,12 @@ per_lang AS (
   SELECT source, lang, cast(count(*) AS BIGINT) AS ln
   FROM documents WHERE source IS NOT NULL GROUP BY 1, 2
 ),
-top AS (
-  SELECT source, lang AS top_lang, ln AS top_n
-  FROM per_lang
-  QUALIFY row_number() OVER (PARTITION BY source
-                             ORDER BY ln DESC, lang) = 1
-),
-nl AS (SELECT source, cast(count(*) AS BIGINT) AS n_langs
-       FROM per_lang GROUP BY 1)
+{_TOP_LANG_SQL}
 SELECT b.source, b.n_docs, b.n_distinct,
        round(1.0 - b.n_distinct / b.n_docs, 6) AS dup_rate,
-       b.total_chars, nl.n_langs, t.top_lang,
+       b.total_chars, t.n_langs, t.top_lang,
        round(t.top_n / b.n_docs, 6) AS top_lang_share
-FROM base b JOIN nl ON nl.source = b.source
-JOIN top t ON t.source = b.source
+FROM base b JOIN top t ON t.source = b.source
 """
 
 
@@ -1370,24 +1434,14 @@ def _curate_base(d):
     text string) — the registry entry reads the sf documents table; the
     bench runs the same chain over the 600k synthesized pages corpus."""
     from pyspark import StorageLevel
-    n_chars = F.length("text")
-    n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(_PUNCT_RE), 0))
-    ascii_n = F.length(F.regexp_replace(F.col("text"), _ASCII_RE, ""))
     return track_cache(
         d.select(
             "doc_id", "source", "lang",
             F.lower(F.col("text")).alias("norm"),
-            F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"),
-            n_chars.cast("long").alias("n_chars_obs"),
-            F.round(
-                F.least(n_chars, F.lit(2000)) / 2000.0
-                * (1.0 - n_punct / F.greatest(n_chars, F.lit(1))),
-                6,
-            ).alias("quality"),
-            F.when(n_chars == 0, F.lit("unk"))
-            .when(ascii_n / n_chars > 0.65, F.lit("en"))
-            .otherwise(F.lit("zh"))
-            .alias("pred_lang"),
+            _text_hash().alias("text_hash"),
+            F.length("text").cast("long").alias("n_chars_obs"),
+            _quality().alias("quality"),
+            _pred_lang().alias("pred_lang"),
         )
         .select(
             "doc_id", "source", "lang", "text_hash", "n_chars_obs",
@@ -1429,15 +1483,6 @@ def curate_verdict(docs):
     products (plan-gated)."""
     base = _curate_base(docs)
     comp = _band_components(base)
-    strat_h = F.substring(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"),
-                       F.col("lang"), F.lit("|strat"))), 1, 2
-    )
-    strat_thresh = (
-        F.when(F.length("lang") % 3 == 0, "40")
-        .when(F.length("lang") % 3 == 1, "80")
-        .otherwise("c0")
-    )
     # exact-winner via groupBy + join back (map-side-combinable min), not
     # a window: byte-identical boilerplate pages make text_hash groups as
     # skewed as band buckets, and a window would single-task the hot group.
@@ -1467,10 +1512,9 @@ def curate_verdict(docs):
         )
         .withColumn(
             "keep",
-            F.col("is_exact_winner") & F.col("is_canonical")
-            & (F.col("quality") > 0.05) & (F.col("pred_lang") != "unk"),
+            _admitted(F.col("is_exact_winner"), F.col("is_canonical")),
         )
-        .withColumn("in_sample", F.col("keep") & (strat_h < strat_thresh))
+        .withColumn("in_sample", F.col("keep") & _in_strat_sample())
     )
 
 
@@ -1501,17 +1545,11 @@ reach(u, v) AS (
 comp AS (SELECT u AS node, least(u, min(v)) AS component FROM reach GROUP BY u),
 feat AS (
   SELECT doc_id, source, lang,
-         md5(lower(trim(text))) AS text_hash,
+         {_TEXT_HASH_SQL} AS text_hash,
          cast(length(text) AS BIGINT) AS n_chars_obs,
-         round(least(length(text), 2000) / 2000.0
-               * (1.0 - length(regexp_extract_all(text, '{_PUNCT_RE}'))
-                        / cast(greatest(length(text), 1) AS DOUBLE)), 6)
-           AS quality,
-         CASE WHEN length(text) = 0 THEN 'unk'
-              WHEN length(regexp_replace(text, '{_ASCII_RE}', '', 'g'))
-                   / cast(length(text) AS DOUBLE) > 0.65 THEN 'en'
-              ELSE 'zh' END AS pred_lang,
-         min(doc_id) OVER (PARTITION BY md5(lower(trim(text)))) AS win_id
+         {_QUALITY_SQL} AS quality,
+         {_PRED_LANG_SQL} AS pred_lang,
+         min(doc_id) OVER (PARTITION BY {_TEXT_HASH_SQL}) AS win_id
   FROM documents
 ),
 verdict AS (
@@ -1522,17 +1560,12 @@ verdict AS (
          f.doc_id = coalesce(c.component, f.doc_id) AS is_canonical,
          (f.doc_id = f.win_id)
            AND (f.doc_id = coalesce(c.component, f.doc_id))
-           AND f.quality > 0.05 AND f.pred_lang <> 'unk' AS keep,
-         f.lang AS strat_lang
+           AND {_ADMITTED_SQL} AS keep
   FROM feat f LEFT JOIN comp c ON c.node = f.doc_id
 )
 SELECT doc_id, source, lang, pred_lang, quality, n_chars_obs, text_hash,
        cluster_id, is_exact_winner, is_canonical, keep,
-       keep AND substring(md5(cast(doc_id AS VARCHAR) || '|' || strat_lang
-                              || '|strat'), 1, 2)
-                < CASE WHEN length(strat_lang) % 3 = 0 THEN '40'
-                       WHEN length(strat_lang) % 3 = 1 THEN '80'
-                       ELSE 'c0' END AS in_sample
+       keep AND ({_IN_STRAT_SAMPLE_SQL}) AS in_sample
 FROM verdict
 """
 
@@ -1571,22 +1604,8 @@ def curate_report_df(v):
     )
     # language-mix profile (the source_profile dashboard columns, derived
     # from the SAME single-scan verdict rows): dominant language + share
-    per_lang = v.groupBy("source", "lang").agg(
-        F.count("*").cast("long").alias("ln")
-    )
-    # asc_nulls_last: DuckDB's ORDER BY lang is NULLS LAST, Spark's asc is
-    # NULLS FIRST — a NULL lang tied on count would pick different rows.
-    # n_langs rides the same window partition (see source_profile).
-    w = Window.partitionBy("source").orderBy(
-        F.desc("ln"), F.asc_nulls_last("lang")
-    )
-    wc = Window.partitionBy("source")
-    top = (
-        per_lang.withColumn("rnk", F.row_number().over(w))
-        .withColumn("n_langs", F.count("*").over(wc).cast("long"))
-        .filter(F.col("rnk") == 1)
-        .select("source", F.col("lang").alias("top_lang"),
-                F.col("ln").alias("top_n"), "n_langs")
+    top = _top_lang(
+        v.groupBy("source", "lang").agg(F.count("*").cast("long").alias("ln"))
     )
     return (
         stats.join(top, "source")
@@ -1632,22 +1651,14 @@ per_lang AS (
   SELECT source, lang, cast(count(*) AS BIGINT) AS ln
   FROM v GROUP BY 1, 2
 ),
-top AS (
-  SELECT source, lang AS top_lang, ln AS top_n
-  FROM per_lang
-  QUALIFY row_number() OVER (PARTITION BY source
-                             ORDER BY ln DESC, lang) = 1
-),
-nl AS (SELECT source, cast(count(*) AS BIGINT) AS n_langs
-       FROM per_lang GROUP BY 1)
+{_TOP_LANG_SQL}
 SELECT s.source, s.n_docs, s.n_distinct_texts,
        round(1.0 - s.n_distinct_texts / cast(s.n_docs AS DOUBLE), 6)
          AS dup_rate,
        s.n_exact_winners, s.n_canonical, s.n_kept, s.n_sampled,
-       s.keep_rate, s.avg_quality_kept, nl.n_langs, t.top_lang,
+       s.keep_rate, s.avg_quality_kept, t.n_langs, t.top_lang,
        round(t.top_n / cast(s.n_docs AS DOUBLE), 6) AS top_lang_share
-FROM stats s JOIN nl ON nl.source = s.source
-JOIN top t ON t.source = s.source
+FROM stats s JOIN top t ON t.source = s.source
 """
 
 

@@ -47,6 +47,25 @@ def test_in_sample_is_keep_intersect_stratified(spark, verdict):
     assert sampled <= kept
 
 
+def test_verdict_rules_match_standalone_queries(spark, verdict):
+    """The chain and the standalone registry queries apply the same
+    document rules: per-doc quality and lang-id, the exact-dedup hash, and
+    admission (kept == corpus_filter's admitted winners that are also
+    their near-dup cluster's representative)."""
+    def rows(name):
+        return REGISTRY[name][0](spark, SF_DIR).collect()
+
+    quality = {r["doc_id"]: r["quality"] for r in rows("quality_score")}
+    pred_lang = {r["doc_id"]: r["pred_lang"] for r in rows("lang_id")}
+    assert {r["doc_id"]: r["quality"] for r in verdict} == quality
+    assert {r["doc_id"]: r["pred_lang"] for r in verdict} == pred_lang
+    assert ({r["text_hash"] for r in verdict}
+            == {r["text_hash"] for r in rows("dedup_exact")})
+    admitted = {r["doc_id"] for r in rows("corpus_filter")}
+    canonical = {r["doc_id"] for r in verdict if r["is_canonical"]}
+    assert {r["doc_id"] for r in verdict if r["keep"]} == admitted & canonical
+
+
 def test_keep_composition_rule(verdict):
     for r in verdict:
         assert r["keep"] == (

@@ -206,8 +206,8 @@ def test_sentence_split_mode_parity(spark, vocab, pages):
 
 def test_per_worker_lazy_scorer_init(spark, pages_df, vocab):
     """SURVEY §3.2 per-executor model initialization: the fused stage builds
-    the scorer at most once per PYTHON WORKER (broadcast artifacts + lazy
-    worker-cache), not once per task — and a warm re-run with the same
+    the scorer at most once per PYTHON WORKER (lazy worker-cache), not
+    once per task — and a warm re-run with the same
     artifact fingerprint builds zero new scorers, with bit-identical
     output. This is the seam a real tokenizer/checkpoint load plugs into."""
     import copy
@@ -225,7 +225,7 @@ def test_per_worker_lazy_scorer_init(spark, pages_df, vocab):
     n_tasks = 32  # >> python-worker pool => reuse must kick in within a run
     ext = run_extraction_fused(
         spark, pages_df, v, persist=False, num_partitions=n_tasks,
-        broadcast_vocab=True, init_acc=acc,
+        init_acc=acc,
     )
     rows1 = sorted(map(tuple, ext["_raw"].collect()))
     first = acc.value
@@ -236,7 +236,7 @@ def test_per_worker_lazy_scorer_init(spark, pages_df, vocab):
 
     ext2 = run_extraction_fused(
         spark, pages_df, v, persist=False, num_partitions=n_tasks,
-        broadcast_vocab=True, init_acc=acc,
+        init_acc=acc,
     )
     rows2 = sorted(map(tuple, ext2["_raw"].collect()))
     assert rows2 == rows1  # bit-identical through the lazy-init stage
