@@ -21,7 +21,6 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fastie_spark.cc import canonicalize, connected_components
 from fastie_spark.derive import (
     derived_alias_edges,
     derived_linker_rows,
@@ -29,6 +28,7 @@ from fastie_spark.derive import (
     docs_as_pages,
 )
 from fastie_spark.fixtures import NER_LABELS, PREDICATES
+from fastie_spark.kg_job import link_and_canonicalize
 from fastie_spark.linking import _FW_DST, _FW_SRC, link_triples
 from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
@@ -74,33 +74,21 @@ def _kg(spark: SparkSession, sf_dir: str) -> dict:
     # exact-match linking: the derived dictionary is surface-exact and the
     # SQL oracle assigns ids per raw token, so normalization collisions
     # (case/width-equal tokens) must not merge ids here
-    # broadcast pinned: the derived dict is fixture-sized; "auto"'s probe
-    # would add an eager count job to every fresh _kg build
-    linked = track_cache(
-        link_triples(ext["triples"], linker, normalize=False,
-                     strategy="broadcast")
-        .select("url", "subj", "pred", "obj", "subj_id", "obj_id")
-        .persist()
+    chain = link_and_canonicalize(
+        ext["triples"], ext["mentions"], linker,
+        derived_alias_edges(spark, len(toks)), normalize=False,
     )
-
-    # both connected_components paths return an already-materialized frame
-    # (driver-built local_df, or a projection over a localCheckpoint), so
-    # it needs no persist; graph_edges has one reader, its own query
-    components = connected_components(derived_alias_edges(spark, len(toks)))
-    can = canonicalize(linked, components, "subj_id", "subj_comp")
-    can = canonicalize(can, components, "obj_id", "obj_comp")
-    graph_edges = can.groupBy(
-        F.col("subj_comp").alias("subj_id"),
-        "pred",
-        F.col("obj_comp").alias("obj_id"),
-    ).agg(F.count("*").cast("long").alias("n_support"))
+    # the canonical triples feed link_triples and graph_edges; the
+    # component table is already materialized (driver-built local_df, or a
+    # projection over a localCheckpoint), so it needs no persist
+    linked = track_cache(chain["triples"].persist())
 
     out = {
         **ext,
         "linked": linked,
         "linker": linker,
-        "components": components,
-        "graph_edges": graph_edges,
+        "components": chain["components"],
+        "graph_edges": chain["edges"],
     }
     _KG_CACHE[cache_key] = out
     return out
@@ -351,7 +339,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["extract_mentions"] = lambda s, d: _kg(s, d)["mentions"]
     q["extract_triples"] = lambda s, d: _kg(s, d)["triples"]
     q["extract_events"] = lambda s, d: _kg(s, d)["events"]
-    q["link_triples"] = lambda s, d: _kg(s, d)["linked"]
+    q["link_triples"] = lambda s, d: _kg(s, d)["linked"].select(
+        "url", "subj", "pred", "obj", "subj_id", "obj_id"
+    )
 
     def link_triples_shuffle(s, d):
         """Same linking as link_triples but through the non-broadcast

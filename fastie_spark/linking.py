@@ -61,38 +61,31 @@ def prepare_linker_dict(linker: DataFrame, normalize: bool = True) -> DataFrame:
 
 def link_surfaces(
     df: DataFrame, linker_prepared: DataFrame, surface_col: str,
-    out_prefix: str, normalize: bool = True, strategy: str = "auto",
-    broadcast_threshold: int = 2_000_000,
+    out_prefix: str, normalize: bool = True, strategy: str = "broadcast",
 ) -> DataFrame:
     """Left-join df[surface_col] against the prepared dictionary, adding
     ``{out_prefix}_id`` (null = NIL / unlinkable mention).
 
-    Size-adaptive join strategy (the cc.py pattern, cc.py:62-91):
+    Two join strategies, same rows:
 
-    - ``"broadcast"``: hint-forced broadcast hash join — no shuffle, so
-      Zipf-heavy head surfaces cost nothing. Right for real linker
-      dictionaries (<= low millions of aliases).
+    - ``"broadcast"`` (default): hint-forced broadcast hash join — no
+      shuffle, so Zipf-heavy head surfaces cost nothing. Right for real
+      linker dictionaries (<= low millions of aliases).
     - ``"shuffle"``: plain equi-join, no hint — Catalyst picks a shuffled
       hash / sort-merge join and AQE's skew-join split (enabled in
       session.py) absorbs head-entity skew on the probe side. The only
       viable plan when the alias table is Wikidata-scale (10^8 rows does
       not broadcast to 1000 executors).
-    - ``"auto"`` (default): probe the prepared dict with
-      ``limit(threshold+1).count()`` (cheap: the dict is already
-      aggregated) and pick broadcast iff it fits. One extra tiny job, and
-      the choice is made from evidence instead of hope.
     """
     d = linker_prepared.select(
         F.col("alias_norm"),
         F.col("canonical_id").alias(f"{out_prefix}_id"),
         F.col("prior").alias(f"{out_prefix}_prior"),
     )
-    strategy = _resolve_strategy(linker_prepared, strategy,
-                                 broadcast_threshold)
     if strategy == "broadcast":
         d = F.broadcast(d)
     elif strategy == "shuffle":
-        # explicit hint: a dict that "auto" judged too big must never be
+        # explicit hint: a dict too big to broadcast must never be
         # silently re-broadcast by Catalyst's own stats; shuffled HASH join
         # (not sort-merge) because the probe side needs no sort and AQE's
         # skew split handles head-entity buckets on both join types
@@ -177,8 +170,7 @@ def _sign_band(start: int, n_bits: int) -> Column:
 
 def link_by_embedding(queries: DataFrame, aliases: DataFrame,
                       k: int = 1, prefilter: str = "exact",
-                      n_bits: int = EMB_DIMS // 2,
-                      exact_threshold: int = 20_000) -> DataFrame:
+                      n_bits: int = EMB_DIMS // 2) -> DataFrame:
     """queries(surface) x aliases(alias, canonical_id) -> top-k nearest
     aliases per surface by embedding cosine:
     (surface, alias, canonical_id, cos, rnk).
@@ -205,18 +197,11 @@ def link_by_embedding(queries: DataFrame, aliases: DataFrame,
       the surface in BOTH band windows is not considered (standard LSH
       trade-off; near-identical n-gram profiles agree on almost every
       coordinate sign, so top-1 agreement with exact mode stays high —
-      pytest-gated in tests/test_linking_graph.py).
-    - ``prefilter="auto"``: probe the distinct alias count
-      (``limit(threshold+1).count()`` — the same evidence-based switch as
-      link_surfaces' dictionary strategy) and use exact enumeration iff
-      the dictionary fits under ``exact_threshold``."""
-    if prefilter not in ("exact", "band", "auto"):
+      pytest-gated in tests/test_linking_graph.py)."""
+    if prefilter not in ("exact", "band"):
         raise ValueError(f"unknown prefilter: {prefilter!r}")
     q = queries.select(F.col("surface")).distinct()
     a = aliases.select("alias", "canonical_id").distinct()
-    if prefilter == "auto":
-        n = a.limit(exact_threshold + 1).count()
-        prefilter = "exact" if n <= exact_threshold else "band"
     if prefilter == "band":
         return _link_by_embedding_banded(q, a, k, n_bits)
     eq = surface_embeddings(q, "surface")
@@ -313,29 +298,18 @@ def _link_by_embedding_banded(q: DataFrame, a: DataFrame, k: int,
     )
 
 
-def _resolve_strategy(prepared: DataFrame, strategy: str,
-                      broadcast_threshold: int) -> str:
-    """Resolve "auto" ONCE per prepared dictionary so a multi-column link
-    (subj + obj) pays a single probe job, not one per joined column."""
-    if strategy != "auto":
-        return strategy
-    n = prepared.limit(broadcast_threshold + 1).count()
-    return "broadcast" if n <= broadcast_threshold else "shuffle"
-
-
 def link_mentions(mentions: DataFrame, linker: DataFrame,
-                  normalize: bool = True, strategy: str = "auto",
-                  broadcast_threshold: int = 2_000_000) -> DataFrame:
+                  normalize: bool = True,
+                  strategy: str = "broadcast") -> DataFrame:
     return link_surfaces(
         mentions, prepare_linker_dict(linker, normalize), "surface", "entity",
-        normalize, strategy, broadcast_threshold,
+        normalize, strategy,
     )
 
 
 def link_triples(triples: DataFrame, linker: DataFrame,
-                 normalize: bool = True, strategy: str = "auto",
-                 broadcast_threshold: int = 2_000_000) -> DataFrame:
+                 normalize: bool = True,
+                 strategy: str = "broadcast") -> DataFrame:
     prepared = prepare_linker_dict(linker, normalize)
-    strategy = _resolve_strategy(prepared, strategy, broadcast_threshold)
     out = link_surfaces(triples, prepared, "subj", "subj", normalize, strategy)
     return link_surfaces(out, prepared, "obj", "obj", normalize, strategy)

@@ -26,7 +26,6 @@ from .decoders import (
     event_set2json,
     gp_decode_cells,
     gplinker_decode_cells,
-    w2ner_decode_grid,
 )
 from .scorer import DictScorer, Vocab
 from .tokenizer import encode_meta as encode
@@ -46,9 +45,6 @@ class OracleEngine:
         self.ner_id2label = dict(enumerate(vocab.ner_labels()))
         self.re_id2pred = dict(enumerate(vocab.predicates()))
         self.event_id2label = dict(enumerate(vocab.event_labels()))
-        self.w2ner_id2label = dict(
-            enumerate(["NONE", "NNW"] + vocab.ner_labels())
-        )
 
     # -- shared chunked driver (NerDecoder.predict / RelExtractionDecoder.predict)
     def _chunked(self, texts, per_chunk_fn):
@@ -126,27 +122,3 @@ class OracleEngine:
             )
             out.append(event_set2json(events))
         return out
-
-    def predict_w2ner(self, texts: list[str]) -> list[set]:
-        """Per doc: {(label, char_start, char_end, surface)} via W2NER DFS
-        decode; chunked like NER (shared predict driver)."""
-
-        def one(masked, raw):
-            grid = self.scorer.w2ner_grid(masked)
-            length = min(len(masked), self.max_length - 2)
-            return w2ner_decode_grid(grid, length, raw, self.w2ner_id2label)
-
-        outputs, short_texts, mapping = self._chunked(texts, one)
-        results = []
-        for k, vs in mapping.items():
-            single: set = set()
-            offset = 0
-            for i, v in enumerate(vs):
-                if i == 0:
-                    single = set(outputs[v])
-                else:
-                    for res in outputs[v]:
-                        single.add((res[0], res[1] + offset, res[2] + offset, res[3]))
-                offset += len(short_texts[v])
-            results.append(single)
-        return results

@@ -84,13 +84,9 @@ def run_streaming_kg_pipeline(
             spark, batch_df.select("url", "text"), vocab, from_html=False,
             persist=False,
         )
-        # strategy pinned: the stream's linker dict is static and
-        # broadcast-sized; "auto"'s probe job would re-run every micro-batch
-        linked = link_triples(
-            stages["triples"], linker, strategy="broadcast"
-        ).withColumn("subj_comp", F.col("subj_id")).withColumn(
-            "obj_comp", F.col("obj_id")
-        )
+        linked = link_triples(stages["triples"], linker).withColumn(
+            "subj_comp", F.col("subj_id")
+        ).withColumn("obj_comp", F.col("obj_id"))
         materialize_snapshot(
             linked, out_dir, snapshot_id=snapshot_id, n_buckets=n_buckets,
         )

@@ -288,29 +288,47 @@ def _admitted(*gates):
 _ADMITTED_SQL = "quality > 0.05 AND pred_lang <> 'unk'"
 
 
+# per-language sampling rate, indexed by length(lang) % 3: the one
+# statement of the stratum rates that both the keep rule and the reported
+# rate column are generated from
+_STRAT_RATES = (0.25, 0.5, 0.75)
+
+
+def _by_stratum(values):
+    """CASE on length(lang) % 3 picking values[k] (the last one as ELSE)."""
+    key = F.length("lang") % 3
+    col = F.when(key == 0, values[0])
+    for k, v in enumerate(values[1:-1], 1):
+        col = col.when(key == k, v)
+    return col.otherwise(values[-1])
+
+
+def _by_stratum_sql(values):
+    arms = " ".join(f"WHEN length(lang) % 3 = {k} THEN {v}"
+                    for k, v in enumerate(values[:-1]))
+    return f"CASE {arms} ELSE {values[-1]} END"
+
+
+# the keep threshold on md5's first byte: rate * 256 as two hex digits
+_STRAT_HEX = [f"{int(r * 256):02x}" for r in _STRAT_RATES]
+
+
 def _in_strat_sample():
     """Per-language stratified sampler over (doc_id, lang): keep when the
     first byte of md5(doc_id|lang|'strat') is under the stratum's
     threshold, so membership is content-stable under any partitioning and
     engine (rand(seed) is not). The rate is a closed-form rule on the
-    stratum key: lang length mod 3 -> 25% / 50% / 75%."""
+    stratum key, ``_STRAT_RATES``."""
     h = F.substring(
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"),
                        F.col("lang"), F.lit("|strat"))), 1, 2
     )
-    thresh = (
-        F.when(F.length("lang") % 3 == 0, "40")
-        .when(F.length("lang") % 3 == 1, "80")
-        .otherwise("c0")
-    )
-    return h < thresh
+    return h < _by_stratum(_STRAT_HEX)
 
 
-_IN_STRAT_SAMPLE_SQL = """substring(md5(cast(doc_id AS VARCHAR) || '|' || lang
+_IN_STRAT_SAMPLE_SQL = f"""substring(md5(cast(doc_id AS VARCHAR) || '|' || lang
                             || '|strat'), 1, 2)
-      < CASE WHEN length(lang) % 3 = 0 THEN '40'
-             WHEN length(lang) % 3 = 1 THEN '80'
-             ELSE 'c0' END"""
+      < {_by_stratum_sql([f"'{x}'" for x in _STRAT_HEX])}"""
 
 
 def _top_lang(per_lang):
@@ -509,6 +527,21 @@ FROM s GROUP BY doc_id
 """
 
 
+def _bands(sig):
+    """(doc_id, band) rows over a minhash signature: each doc explodes into
+    its two band keys, (mh0, mh1) and (mh2, mh3), tagged with the band
+    index so values of the two bands never collide."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                F.concat_ws("|", F.lit("0"), "mh0", "mh1"),
+                F.concat_ws("|", F.lit("1"), "mh2", "mh3"),
+            )
+        ).alias("band"),
+    )
+
+
 def near_dup_pairs(spark, sf_dir):
     """LSH banding: candidate pairs sharing band (mh0, mh1) OR band
     (mh2, mh3) — the standard b=2, r=2 banding over the 4 minhash families
@@ -523,19 +556,7 @@ def near_dup_pairs(spark, sf_dir):
     # shuffle of the SLIM (doc_id, band) table becomes a ReusedExchange
     # feeding both sides - one signature pass + one slim shuffle, the
     # cheapest possible shape (plan-gated in tests/test_plans.py)
-    sig = (
-        minhash_signature(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    F.concat_ws("|", F.lit("0"), "mh0", "mh1"),
-                    F.concat_ws("|", F.lit("1"), "mh2", "mh3"),
-                )
-            ).alias("band"),
-        )
-        .repartition("band")
-    )
+    sig = _bands(minhash_signature(spark, sf_dir)).repartition("band")
     a, b = sig.alias("a"), sig.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -586,15 +607,7 @@ def _band_components(sig):
     # columns, so they would all collapse into shared bands "0"/"1" and be
     # clustered as near-dups, while the oracle's unnest over an empty
     # shingle set gives them no bands at all (singleton clusters)
-    bands = sig.filter(F.col("mh0").isNotNull()).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.concat_ws("|", F.lit("0"), "mh0", "mh1"),
-                F.concat_ws("|", F.lit("1"), "mh2", "mh3"),
-            )
-        ).alias("band"),
-    )
+    bands = _bands(sig.filter(F.col("mh0").isNotNull()))
     reps = bands.groupBy("band").agg(
         F.min("doc_id").alias("rep"), F.count("*").alias("bn")
     )
@@ -690,8 +703,9 @@ def near_dup_clusters(spark, sf_dir):
     )
 
 
-NEAR_DUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE pairs AS ({NEAR_DUP_PAIRS_SQL}),
+# near-dup components over the pairwise candidate graph, as the CTE list
+# of a WITH RECURSIVE: comp(node, component), component = min doc_id
+_NEAR_DUP_COMP_SQL = f"""pairs AS ({NEAR_DUP_PAIRS_SQL}),
 ed AS (
   SELECT doc_a AS u, doc_b AS v FROM pairs
   UNION
@@ -704,7 +718,10 @@ reach(u, v) AS (
 ),
 comp AS (
   SELECT u AS node, least(u, min(v)) AS component FROM reach GROUP BY u
-)
+)"""
+
+NEAR_DUP_CLUSTERS_SQL = f"""
+WITH RECURSIVE {_NEAR_DUP_COMP_SQL}
 SELECT d.doc_id,
        cast(coalesce(c.component, d.doc_id) AS BIGINT) AS cluster_id,
        d.doc_id = coalesce(c.component, d.doc_id) AS is_canonical
@@ -794,20 +811,12 @@ def stratified_sample(spark, sf_dir):
     return (
         _docs(spark, sf_dir)
         .filter(_in_strat_sample())
-        .select(
-            "doc_id", "lang",
-            F.when(F.length("lang") % 3 == 0, 0.25)
-            .when(F.length("lang") % 3 == 1, 0.5)
-            .otherwise(0.75).alias("rate"),
-        )
+        .select("doc_id", "lang", _by_stratum(_STRAT_RATES).alias("rate"))
     )
 
 
 STRATIFIED_SAMPLE_SQL = f"""
-SELECT doc_id, lang,
-       cast(CASE WHEN length(lang) % 3 = 0 THEN 0.25
-                 WHEN length(lang) % 3 = 1 THEN 0.5
-                 ELSE 0.75 END AS DOUBLE) AS rate
+SELECT doc_id, lang, cast({_by_stratum_sql(_STRAT_RATES)} AS DOUBLE) AS rate
 FROM documents
 WHERE {_IN_STRAT_SAMPLE_SQL}
 """
@@ -1526,23 +1535,7 @@ def curate_corpus(spark, sf_dir):
 
 
 CURATE_CORPUS_SQL = f"""
-WITH RECURSIVE sig AS ({MINHASH_SIGNATURE_SQL}),
-bnd AS (
-  SELECT doc_id, '0|' || mh0 || '|' || mh1 AS band FROM sig
-  UNION ALL
-  SELECT doc_id, '1|' || mh2 || '|' || mh3 AS band FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS u, b2.doc_id AS v
-  FROM bnd a JOIN bnd b2 ON a.band = b2.band AND a.doc_id < b2.doc_id
-),
-ed AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
-reach(u, v) AS (
-  SELECT u, v FROM ed
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN ed e ON e.u = r.v WHERE e.v <> r.u
-),
-comp AS (SELECT u AS node, least(u, min(v)) AS component FROM reach GROUP BY u),
+WITH RECURSIVE {_NEAR_DUP_COMP_SQL},
 feat AS (
   SELECT doc_id, source, lang,
          {_TEXT_HASH_SQL} AS text_hash,

@@ -88,7 +88,8 @@ def test_cc_handles_chain_and_cycle(spark, threshold):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
 
-def test_kg_job_end_to_end(spark, pages_df, vocab, linker_df, edges_df, tmp_path):
+def test_kg_job_end_to_end(spark, pages_df, vocab, linker_df, edges_df,
+                           alias_fixture, tmp_path):
     out_dir = str(tmp_path / "graph")
     res = run_kg_job(spark, pages_df, vocab, linker_df, edges_df,
                      out_dir=out_dir, snapshot_id="s1", n_buckets=4)
@@ -103,6 +104,17 @@ def test_kg_job_end_to_end(spark, pages_df, vocab, linker_df, edges_df, tmp_path
     assert nodes.count() > 0 and edges.count() > 0
     # lineage columns present
     assert {"snapshot_id", "partition_id", "bucket"} <= set(prov.columns)
+    # canonical ids: every graph id is a component root of the alias graph,
+    # and every linked provenance row carries its subject's root
+    expected = alias_fixture[1]
+    graph_ids = {r["component"] for r in nodes.collect()}
+    for r in edges.collect():
+        graph_ids |= {r["subj_id"], r["obj_id"]}
+    assert all(expected.get(x, x) == x for x in graph_ids)
+    linked = prov.filter(F.col("subj_id").isNotNull()).collect()
+    assert linked and all(
+        r["subj_comp"] == expected.get(r["subj_id"], r["subj_id"])
+        for r in linked)
 
 
 def test_resume_idempotent(spark, pages_df, vocab, linker_df, edges_df, tmp_path):
@@ -171,8 +183,7 @@ def test_materialize_empty_snapshot(spark, tmp_path):
 
 def test_link_strategies_identical(spark, vocab, linker_df, pages_df):
     """Broadcast and shuffle-fallback linking must produce identical rows —
-    strategy is a physical choice, never a semantic one. "auto" on a
-    fixture-sized dict resolves to broadcast and matches too."""
+    strategy is a physical choice, never a semantic one."""
     from fastie_spark.linking import link_triples
     from fastie_spark.pipeline import run_extraction_fused
 
@@ -185,13 +196,7 @@ def test_link_strategies_identical(spark, vocab, linker_df, pages_df):
         out = link_triples(triples, linker_df, strategy=strategy)
         return sorted(tuple(r[c] for c in cols) for r in out.collect())
 
-    bc = rows("broadcast")
-    assert bc == rows("shuffle")
-    assert bc == rows("auto")
-    # tiny-threshold auto must flip to the shuffle path and still match
-    out = link_triples(triples, linker_df, strategy="auto",
-                       broadcast_threshold=1)
-    assert bc == sorted(tuple(r[c] for c in cols) for r in out.collect())
+    assert rows("broadcast") == rows("shuffle")
 
 
 def test_link_embedding_banded_recall(spark):
@@ -223,35 +228,6 @@ def test_link_embedding_banded_recall(spark):
                                        prefilter="band").collect()}
     agree = sum(1 for s in exact if band.get(s) == exact[s])
     assert agree / len(exact) >= 0.8, (agree, len(exact))
-
-
-def test_link_embedding_auto_prefilter(spark):
-    """prefilter="auto" probes the alias count: small dictionaries get the
-    exact enumeration, dictionaries over the threshold get the banded
-    path — both through the same public call."""
-    from fastie_spark.linking import link_by_embedding
-    from fastie_spark.session import local_df
-
-    words = ["alberta", "berlin", "chicago", "denver", "edmonton"]
-    aliases = local_df(
-        spark,
-        [{"alias": w, "canonical_id": f"Q{i:05d}"} for i, w in enumerate(words)],
-        "alias string, canonical_id string",
-    )
-    queries = local_df(spark, [{"surface": w[0] + w[2:]} for w in words],
-                       "surface string")
-
-    def rows(**kw):
-        return sorted(
-            (r["surface"], r["alias"], round(r["cos"], 6))
-            for r in link_by_embedding(queries, aliases, k=1, **kw).collect()
-        )
-
-    exact = rows(prefilter="exact")
-    band = rows(prefilter="band")
-    assert rows(prefilter="auto") == exact  # 5 aliases < threshold
-    # tiny threshold flips auto to the banded path
-    assert rows(prefilter="auto", exact_threshold=2) == band
 
 
 def test_link_shuffle_under_head_entity_skew(spark, linker_df):
