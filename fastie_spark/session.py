@@ -2,8 +2,15 @@
 
 Tuned for correctness-at-scale defaults: AQE on (runtime coalesce + skew
 join), Arrow transfer for driver-local frames, UTC session timezone so
-DuckDB oracle comparisons are stable, shuffle partitions sized to cores
-(overridable for the real cluster).
+DuckDB oracle comparisons are stable.
+
+Sizing is Spark's own: ``SparkContext.defaultParallelism`` comes from the
+master (N for ``local[N]``, the host's cores for ``local[*]``, workers x
+cores for ``local-cluster``), file-scan splits follow it, and shuffle
+partitions equal it unless the caller passes ``shuffle_partitions``. On a
+cluster the partition count comes from the default parallelism given to
+spark-submit (``--conf``) or from ``shuffle_partitions``. The driver heap defaults to a quarter of
+physical memory, the JVM's own default; ``SPARK_GRAFT_DRIVER_MEM`` sets it.
 
 Also home of the engine's one Python boundary (``arrow_map_fn``): every
 per-row Python stage runs as a ``mapInArrow`` function built here.
@@ -18,62 +25,47 @@ from typing import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _cores_of(master: str) -> int:
-    """Best-effort core count from a master string: local[N], local[*]
-    (this host's cores), local-cluster[workers,coresPerWorker,mem]. A
-    cluster master (yarn, k8s://, spark://) names no count: 32."""
-    if "[" not in master:
-        return 32
-    body = master[master.find("[") + 1 : master.find("]")]
-    parts = body.split(",")
-    if len(parts) >= 2 and all(p.strip().isdigit() for p in parts[:2]):
-        return int(parts[0]) * int(parts[1])  # local-cluster
-    n = (os.cpu_count() or 1) if parts[0] == "*" else int(parts[0])
-    return max(8, n)
-
-
 def get_spark(
     master: str | None = None,
     app_name: str = "fastie_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     # None + no env = respect an externally provided master (spark-submit
     # --master). Only fall back to local[cpus] when nothing is configured.
     explicit = master or os.environ.get("SPARK_GRAFT_MASTER")
-    master = explicit or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = _cores_of(master)
+    # the JVM's own default max heap: a quarter of physical memory
+    heap_gb = max(1, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                  // 4 // 2**30)
     b = (
         SparkSession.builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_gb}g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     if explicit:
-        b = b.master(master)
-    else:
-        # no explicit master: let spark-submit's --master win if present
-        try:
-            spark = b.getOrCreate()
-            spark.sparkContext.setLogLevel("WARN")
-            return spark
-        except Exception:
-            b = b.master(master)
-    spark = b.getOrCreate()
+        b = b.master(explicit)
+    try:
+        spark = b.getOrCreate()
+    except Exception:
+        if explicit:
+            raise
+        # no spark-submit --master either
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+        spark = b.master(f"local[{cpus}]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.shuffle.partitions", str(
+        shuffle_partitions or spark.sparkContext.defaultParallelism))
     return spark
 
 

@@ -39,10 +39,8 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
     files_per_trigger = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     n_files = 12
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
 
-    spark = get_spark(master=f"local[{cpus}]", app_name="streaming_bench",
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="streaming_bench")
     vocab = build_vocab()
     linker = local_df(
         spark, build_linker_dict(vocab),
@@ -80,7 +78,8 @@ def main() -> None:
     q = run_streaming_kg_pipeline(
         spark, input_dir, out_dir, ckpt, vocab, linker,
         ttl="1 hour", watermark_delay="1 minute",
-        n_buckets=cpus, max_files_per_trigger=files_per_trigger,
+        n_buckets=spark.sparkContext.defaultParallelism,
+        max_files_per_trigger=files_per_trigger,
     )
     wall = time.time() - t0
 

@@ -2,6 +2,7 @@
 each oracle_sql() matches the Spark result at sf0.001 (driver gate is
 sf0.01 — same data shape)."""
 
+import math
 import os
 import sys
 
@@ -12,7 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-from tests.test_oracle_parity import SF_DIR, TABLES, _norm  # noqa: E402
+from tests.test_oracle_parity import SF_DIR, TABLES  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -76,6 +77,26 @@ def test_link_embedding_recovers_origin_alias(spark):
         1 for r in cand if r["alias"][0] + r["alias"][2:] == r["surface"]
     )
     assert cand and hits / len(cand) >= 0.6, (hits, len(cand))
+
+
+def _norm(rows, cols):
+    """Rows as sorted tuples, keyed by str(cell). Unlike the driver-style
+    ``tools_oracle_check.norm`` this sorts array cells, so the
+    ``audio_stats`` row (its ``rms_per_channel`` is an array, the driver's
+    one red row) still has its values compared here."""
+    out = []
+    for r in rows:
+        vals = []
+        for c in cols:
+            v = r[c]
+            if isinstance(v, float):
+                v = round(v, 6)
+                if math.isnan(v):
+                    v = "nan"
+            vals.append(v)
+        out.append(tuple(vals))
+    out.sort(key=lambda t: tuple(str(x) for x in t))
+    return out
 
 
 @pytest.mark.parametrize("name", KG_KEYS)

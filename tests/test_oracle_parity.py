@@ -1,13 +1,13 @@
 """Local re-implementation of the driver's Spark-vs-DuckDB comparison, run
 at sf0.001 so oracle mismatches surface before the real gate at sf0.01."""
 
-import math
 import os
 
 import duckdb
 import pytest
 
 from fastie_spark.textops import REGISTRY
+from tools_oracle_check import norm
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -26,22 +26,6 @@ def duck():
     return con
 
 
-def _norm(rows, cols):
-    out = []
-    for r in rows:
-        vals = []
-        for c in cols:
-            v = r[c]
-            if isinstance(v, float):
-                v = round(v, 6)
-                if math.isnan(v):
-                    v = "nan"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple(str(x) for x in t))
-    return out
-
-
 @pytest.mark.parametrize("name", [k for k, v in REGISTRY.items() if v[1]])
 def test_query_matches_oracle(spark, duck, name):
     from fastie_spark.textops import release_caches
@@ -58,7 +42,7 @@ def test_query_matches_oracle(spark, duck, name):
 
     assert scols == dcols, f"{name}: schema mismatch {scols} vs {dcols}"
     assert len(srows) == len(drows), f"{name}: rowcount {len(srows)} vs {len(drows)}"
-    a, b = _norm(srows, scols), _norm(drows, dcols)
+    a, b = norm(srows, scols), norm(drows, dcols)
     if a != b:
         diff = [(x, y) for x, y in zip(a, b) if x != y][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
@@ -113,7 +97,7 @@ def test_emb_near_dup_nonempty_at_low_threshold(spark, duck):
     drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
     assert len(srows) == len(drows) and len(srows) > 0
     cols = sorted(sdf.columns)
-    assert _norm(srows, cols) == _norm(drows, cols)
+    assert norm(srows, cols) == norm(drows, cols)
 
 
 def test_emb_near_dup_exhaustive_superset(spark):
@@ -186,7 +170,7 @@ def test_source_profile_null_source_parity(spark, tmp_path):
     drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
     cols = sorted(sdf.columns)
     assert len(srows) == len(drows) == 2
-    assert _norm(srows, cols) == _norm(drows, cols)
+    assert norm(srows, cols) == norm(drows, cols)
 
 
 def test_curate_corpus_null_text_parity(spark, tmp_path):
@@ -226,7 +210,7 @@ def test_curate_corpus_null_text_parity(spark, tmp_path):
     cols = sorted(sdf.columns)
     # one verdict row per document, NULL-text docs included
     assert len(srows) == len(rows)
-    assert _norm(srows, cols) == _norm(drows, cols)
+    assert norm(srows, cols) == norm(drows, cols)
     # the two NULL docs must not be merged into one near-dup cluster
     by_id = {r["doc_id"]: r for r in srows}
     assert by_id[4]["cluster_id"] != by_id[5]["cluster_id"]

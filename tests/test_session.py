@@ -1,17 +1,42 @@
 """Session defaults and the shared Arrow boundary (session.arrow_map_fn)."""
 
+import json
 import os
+import subprocess
+import sys
 
 import pyarrow as pa
 
-from fastie_spark.session import _cores_of, arrow_map_fn
+from fastie_spark.session import arrow_map_fn
 
 
-def test_cores_of_follows_the_host():
-    assert _cores_of("local[*]") == max(8, os.cpu_count())
-    assert _cores_of("local[2]") == 8  # max(8, N) floor
-    assert _cores_of("local-cluster[2,3,1024]") == 6
-    assert _cores_of("yarn") == 32  # a cluster master names no count
+def test_session_sizes_from_spark():
+    """Spark's defaultParallelism sizes the shuffle unless shuffle_partitions
+    is given, and the driver heap defaults to a quarter of physical memory.
+    Driver memory is fixed when the JVM starts, so this runs in a fresh
+    process."""
+    script = """
+import json
+from fastie_spark.session import get_spark
+s = get_spark(master="local[2]")
+out = [s.sparkContext.defaultParallelism,
+       s.conf.get("spark.sql.shuffle.partitions"),
+       s.sparkContext.getConf().get("spark.driver.memory")]
+s = get_spark(shuffle_partitions=3)
+out += [s.sparkContext.defaultParallelism,
+        s.conf.get("spark.sql.shuffle.partitions")]
+print(json.dumps(out))
+s.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_MASTER")}
+    r = subprocess.run([sys.executable, "-c", script], check=True,
+                       capture_output=True, text=True, cwd=repo, env=env)
+    quarter_gb = max(1, os.sysconf("SC_PAGE_SIZE")
+                     * os.sysconf("SC_PHYS_PAGES") // 4 // 2**30)
+    assert json.loads(r.stdout.strip().splitlines()[-1]) == [
+        2, "2", f"{quarter_gb}g", 2, "3"]
 
 
 def test_arrow_map_fn_types_rows_from_ddl(spark):

@@ -86,14 +86,3 @@ def test_uie_and_cls_readers(spark, tmp_path):
         {"text": "好", "label": "positive"}, {"text": "差", "label": "negative"}])
     assert cls_labels(read_classification(spark, c)) == ["negative", "positive"]
 
-
-def test_iceberg_fallback(spark, tmp_path):
-    """No Iceberg runtime in this image -> parquet fallback path is used."""
-    from fastie_spark.sources.iceberg import iceberg_available, read_table, write_table
-
-    assert iceberg_available(spark) is False
-    df = spark.range(5).selectExpr("id", "id * 2 AS v")
-    sink = write_table(df, "nodes", str(tmp_path / "nodes"), mode="overwrite")
-    assert sink.startswith("parquet:")
-    back = read_table(spark, "nodes", str(tmp_path / "nodes"))
-    assert back.count() == 5
