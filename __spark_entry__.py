@@ -288,16 +288,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def audio_stats(s, d):
         """BinaryType driver query through the REAL audio codec: RIFF/WAV
-        PCM decode -> sample_rate, n_samples, whole-clip RMS (integer-sum,
+        PCM decode -> one row per (clip, channel) with sample_rate,
+        n_samples, whole-clip and per-channel RMS (integer-sum,
         oracle-exact). Same committed media fixture as image_stats."""
         from fastie_spark.multimodal import audio_stats as audio_stats_op
         from fastie_spark.multimodal import ensure_media_parquet
 
         media = s.read.parquet(ensure_media_parquet())
         return audio_stats_op(media).select(
-            "media_id", "sample_rate", "n_channels", "n_samples",
-            F.round("rms", 6).alias("rms"),
-            "peak_abs", "rms_per_channel",
+            "media_id", "channel", "sample_rate", "n_channels", "n_samples",
+            F.round("rms", 6).alias("rms"), "peak_abs",
+            F.round("rms_channel", 6).alias("rms_channel"),
         )
 
     q["audio_stats"] = audio_stats
@@ -1015,18 +1016,13 @@ chstat AS (
   SELECT media_id, channel, cast(count(*) AS BIGINT) AS cn,
          cast(sum(s * s) AS BIGINT) AS csq
   FROM sv GROUP BY 1, 2
-),
-chlist AS (
-  SELECT media_id,
-         list(round(sqrt(csq / cast(cn AS DOUBLE)) / 32768.0, 6)
-              ORDER BY channel) AS rms_per_channel
-  FROM chstat GROUP BY 1
 )
-SELECT a.media_id, h.sr AS sample_rate, h.ch AS n_channels,
+SELECT a.media_id, c.channel, h.sr AS sample_rate, h.ch AS n_channels,
        a.n AS n_samples,
        round(sqrt(sq / cast(n AS DOUBLE)) / 32768.0, 6) AS rms,
-       a.peak_abs, c.rms_per_channel
-FROM astat a JOIN hdr h USING (media_id) JOIN chlist c USING (media_id)
+       a.peak_abs,
+       round(sqrt(c.csq / cast(c.cn AS DOUBLE)) / 32768.0, 6) AS rms_channel
+FROM astat a JOIN hdr h USING (media_id) JOIN chstat c USING (media_id)
 """
 
 

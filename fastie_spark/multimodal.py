@@ -495,13 +495,16 @@ def audio_features(media: DataFrame, frame_len: int = 400) -> DataFrame:
 
 
 def audio_stats(media: DataFrame) -> DataFrame:
-    """Whole-clip stats from the decoded sample stream: sample_rate,
-    n_channels, n_samples (total interleaved, all channels), full-clip RMS
-    (int16 scale / 32768), integer peak |sample|, and per-channel RMS
-    (channel order). All sums are exact int64 divided in double at the
-    end => bit-identical to the SQL oracle's byte arithmetic for mono AND
-    stereo clips."""
+    """Whole-clip and per-channel stats from the decoded sample stream, one
+    row per (clip, channel): sample_rate, n_channels, n_samples (total
+    interleaved, all channels), full-clip RMS (int16 scale / 32768),
+    integer peak |sample|, and the channel's own RMS. All sums are exact
+    int64 divided in double at the end => bit-identical to the SQL
+    oracle's byte arithmetic for mono AND stereo clips."""
     import math
+
+    def rms_of(sq: int, n: int) -> float:
+        return math.sqrt(sq / n) / 32768.0 if n else 0.0
 
     def rows_of(mid, d):
         if d["kind"] != "audio":
@@ -509,23 +512,18 @@ def audio_stats(media: DataFrame) -> DataFrame:
         ch = d.get("n_channels", 1)
         x = d["samples"].astype(np.int64)
         n = int(x.size)
-        sq = int((x * x).sum())
-        rms = math.sqrt(sq / n) / 32768.0 if n else 0.0
+        rms = rms_of(int((x * x).sum()), n)
         peak = int(np.abs(x).max()) if n else 0
         planes = x.reshape(-1, ch)
-        per_ch = []
         for c in range(ch):
-            csq = int((planes[:, c] * planes[:, c]).sum())
-            cn = planes.shape[0]
-            per_ch.append(
-                round(math.sqrt(csq / cn) / 32768.0, 6) if cn else 0.0
-            )
-        yield (mid, d["sample_rate"], ch, n, rms, peak, per_ch)
+            rms_c = rms_of(int((planes[:, c] * planes[:, c]).sum()),
+                           planes.shape[0])
+            yield (mid, c, d["sample_rate"], ch, n, rms, peak, rms_c)
 
     return _map_media(
-        media, "media_id long, sample_rate int, n_channels int, "
+        media, "media_id long, channel int, sample_rate int, n_channels int, "
                "n_samples long, rms double, peak_abs long, "
-               "rms_per_channel array<double>", rows_of)
+               "rms_channel double", rows_of)
 
 
 def media_df(spark: SparkSession, n: int = 60, seed: int = 42,

@@ -2,7 +2,6 @@
 each oracle_sql() matches the Spark result at sf0.001 (driver gate is
 sf0.01 — same data shape)."""
 
-import math
 import os
 import sys
 
@@ -14,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 from tests.test_oracle_parity import SF_DIR, TABLES  # noqa: E402
+from tools_oracle_check import norm  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -79,26 +79,6 @@ def test_link_embedding_recovers_origin_alias(spark):
     assert cand and hits / len(cand) >= 0.6, (hits, len(cand))
 
 
-def _norm(rows, cols):
-    """Rows as sorted tuples, keyed by str(cell). Unlike the driver-style
-    ``tools_oracle_check.norm`` this sorts array cells, so the
-    ``audio_stats`` row (its ``rms_per_channel`` is an array, the driver's
-    one red row) still has its values compared here."""
-    out = []
-    for r in rows:
-        vals = []
-        for c in cols:
-            v = r[c]
-            if isinstance(v, float):
-                v = round(v, 6)
-                if math.isnan(v):
-                    v = "nan"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple(str(x) for x in t))
-    return out
-
-
 @pytest.mark.parametrize("name", KG_KEYS)
 def test_kg_queries_match_oracle(spark, duck, name):
     q = entrymod.queries()[name]
@@ -111,7 +91,7 @@ def test_kg_queries_match_oracle(spark, duck, name):
     drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
     assert scols == dcols, f"{name}: schema {scols} vs {dcols}"
     assert len(srows) == len(drows), f"{name}: rows {len(srows)} vs {len(drows)}"
-    a, b = _norm(srows, scols), _norm(drows, dcols)
+    a, b = norm(srows, scols), norm(drows, dcols)
     assert a == b, f"{name}: first diffs {[p for p in zip(a, b) if p[0] != p[1]][:3]}"
 
 
