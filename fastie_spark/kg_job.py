@@ -18,14 +18,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .cc import canonicalize, connected_components
-from .linking import link_mentions, link_triples
+from .linking import link_surfaces, prepare_linker_dict
 from .materialize import build_graph_tables, materialize_snapshot
-from .pipeline import (
-    EVENT_COLS,
-    MENTION_COLS,
-    TRIPLE_COLS,
-    run_extraction_fused,
-)
+from .pipeline import run_extraction_fused
 from .scorer import Vocab
 
 
@@ -37,17 +32,28 @@ def link_and_canonicalize(
     normalize: bool = True,
 ) -> dict:
     """Lazy link -> canonicalize -> graph chain over extracted triples and
-    mentions. Both sides link through a broadcast of ``linker``;
-    ``normalize=False`` keeps exact surface matching (for a surface-exact
-    dictionary). The union-find over ``alias_edges`` is the only job this
+    mentions. Canonicalization runs on the dictionary, not on the rows: the
+    best ``linker`` row per alias is mapped to its component once, and that
+    resolved ``(alias_norm, canonical_id, prior, comp)`` table is collected
+    into a local frame, so each side (subj, obj, mention surface) takes id,
+    prior and component from one broadcast join. ``normalize=False`` keeps
+    exact surface matching (for a surface-exact dictionary). The union-find
+    over ``alias_edges`` and the dictionary collect are the only jobs this
     runs; everything returned is a lazy frame:
     ``{triples, mentions, components, nodes, edges}``."""
-    triples = link_triples(triples, linker, normalize=normalize)
-    mentions = link_mentions(mentions, linker, normalize=normalize)
     components = connected_components(alias_edges)
-    triples = canonicalize(triples, components, "subj_id", "subj_comp")
-    triples = canonicalize(triples, components, "obj_id", "obj_comp")
-    mentions = canonicalize(mentions, components, "entity_id", "entity_comp")
+    resolved = canonicalize(prepare_linker_dict(linker, normalize),
+                            components, "canonical_id", "comp").select(
+        "alias_norm", "canonical_id", "prior", "comp")
+    # every sink broadcast this dictionary, and a broadcast collects its
+    # build side to the driver: one collect keeps the same size envelope
+    resolved = linker.sparkSession.createDataFrame(resolved.toArrow())
+    linked = link_surfaces(triples, resolved, "subj", "subj", normalize)
+    linked = link_surfaces(linked, resolved, "obj", "obj", normalize)
+    triples = linked.select(*triples.columns, "subj_id", "subj_prior",
+                            "obj_id", "obj_prior", "subj_comp", "obj_comp")
+    mentions = link_surfaces(mentions, resolved, "surface", "entity",
+                             normalize)
     return {"triples": triples, "mentions": mentions,
             "components": components, **build_graph_tables(triples, mentions)}
 
@@ -72,9 +78,8 @@ def run_kg_job(
     stages = run_extraction_fused(
         spark, pages, vocab, from_html=True, repartition=repartition
     )
-    # per-kind counts ride along with the FIRST action that scans the raw
-    # extraction output (observe = CollectMetrics; filters are not pushed
-    # below it) instead of paying a dedicated groupBy job + cache scan
+    # per-kind counts ride along with the fill count (observe =
+    # CollectMetrics) instead of paying a dedicated groupBy job + cache scan
     obs = Observation("kind_counts")
     raw = stages["_raw"].observe(
         obs,
@@ -82,13 +87,10 @@ def run_kg_job(
         F.sum((F.col("kind") == "triple").cast("long")).alias("triple"),
         F.sum((F.col("kind") == "event").cast("long")).alias("event"),
     )
-    mentions_raw = raw.filter(F.col("kind") == "mention").select(*MENTION_COLS)
-    triples_raw = raw.filter(F.col("kind") == "triple").select(*TRIPLE_COLS)
-    events_raw = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
 
     # stages 3-4: entity linking, canonicalization, graph aggregation
-    graph = link_and_canonicalize(triples_raw, mentions_raw, linker,
-                                  alias_edges)
+    graph = link_and_canonicalize(stages["triples"], stages["mentions"],
+                                  linker, alias_edges)
 
     def _write(name, df):
         # no coalesce: it capped the FINAL aggregation stage (not just the
@@ -122,13 +124,13 @@ def run_kg_job(
             manifest = [f.result() for f in futs][0]
     finally:
         stages["_raw"].unpersist()
-    # the count/write actions above already flowed every raw row through
-    # the observe node — obs.get is a metadata fetch, not another job
+    # the fill count flowed every raw row through the observe node —
+    # obs.get is a metadata fetch, not another job
     counts = {k: int(v) for k, v in obs.get.items() if v and int(v) > 0}
     return {
         "mentions": graph["mentions"],
         "triples": graph["triples"],
-        "events": events_raw,
+        "events": stages["events"],
         "nodes": graph["nodes"],
         "edges": graph["edges"],
         "manifest": manifest,

@@ -64,7 +64,9 @@ def link_surfaces(
     out_prefix: str, normalize: bool = True, strategy: str = "broadcast",
 ) -> DataFrame:
     """Left-join df[surface_col] against the prepared dictionary, adding
-    ``{out_prefix}_id`` (null = NIL / unlinkable mention).
+    ``{out_prefix}_id`` (null = NIL / unlinkable mention) and
+    ``{out_prefix}_prior``, plus ``{out_prefix}_comp`` when the dictionary
+    carries a resolved ``comp`` column (kg_job.link_and_canonicalize).
 
     Two join strategies, same rows:
 
@@ -77,10 +79,13 @@ def link_surfaces(
       viable plan when the alias table is Wikidata-scale (10^8 rows does
       not broadcast to 1000 executors).
     """
+    comp = ([F.col("comp").alias(f"{out_prefix}_comp")]
+            if "comp" in linker_prepared.columns else [])
     d = linker_prepared.select(
         F.col("alias_norm"),
         F.col("canonical_id").alias(f"{out_prefix}_id"),
         F.col("prior").alias(f"{out_prefix}_prior"),
+        *comp,
     )
     if strategy == "broadcast":
         d = F.broadcast(d)

@@ -1124,9 +1124,9 @@ WHERE i.inter / cast(sa.n + sb.n - i.inter AS DOUBLE) >= 0.3
 
 # ------------------------------------------------- IVF/LSH-bucketed ANN
 def _mask_bits(mask: int, n_bits: int) -> list[int]:
-    """Ascending bit positions set in mask — the SINGLE source of truth for
-    probe-score summation order, shared by the Spark path and the generated
-    oracle SQL so the margin sums are bit-identical IEEE doubles."""
+    """Ascending bit positions set in mask — the oracle SQL's probe-score
+    summation order. knn_ivf sums |qv[p]| in the same ascending order from
+    0.0, so the margin sums are bit-identical IEEE doubles."""
     return [p for p in range(n_bits) if mask >> p & 1]
 
 
@@ -1172,34 +1172,21 @@ def knn_ivf(spark, sf_dir, n_queries: int = 5, k: int = 3, n_bits: int = 6,
         F.col("bucket").alias("qb"),
     )
 
-    def flipped(mask: int):
-        if mask == 0:
-            return F.col("qb")
-        parts = []
-        for p in range(n_bits):
-            c = F.substring("qb", p + 1, 1)
-            if mask >> p & 1:
-                c = F.when(c == "1", F.lit("0")).otherwise(F.lit("1"))
-            parts.append(c)
-        return F.concat(*parts)
-
-    def margin(mask: int):
-        bits = _mask_bits(mask, n_bits)
-        if not bits:
-            return F.lit(0.0)
-        s = F.abs(F.element_at("qv", bits[0] + 1))
-        for p in bits[1:]:
-            s = s + F.abs(F.element_at("qv", p + 1))
-        return s
-
+    # one row per flip mask m in 0 .. 2^n_bits - 1: its margin score (see
+    # _mask_bits) and pb = qb with the bits of m flipped. One higher-order
+    # expression, not 2^n_bits struct columns: those outgrew Janino's 64 KB
+    # method limit and fell back to interpreted evaluation
+    bit = "shiftright(m, p) & 1 = 1"
     probes = q.select(
         "q_vec_id", "qv",
-        F.explode(
-            F.array(*[
-                F.struct(margin(m).alias("score"), flipped(m).alias("pb"))
-                for m in range(1 << n_bits)
-            ])
-        ).alias("pr"),
+        F.explode(F.expr(
+            f"transform(sequence(0, {(1 << n_bits) - 1}), m -> named_struct("
+            f"'score', aggregate(sequence(0, {n_bits - 1}), 0D, (acc, p) -> "
+            f"acc + IF({bit}, abs(qv[p]), 0D)), "
+            f"'pb', concat_ws('', transform(sequence(0, {n_bits - 1}), p -> "
+            f"IF({bit}, IF(substring(qb, p + 1, 1) = '1', '0', '1'), "
+            f"substring(qb, p + 1, 1))))))"
+        )).alias("pr"),
     ).select("q_vec_id", "qv", F.col("pr.score").alias("score"),
              F.col("pr.pb").alias("pb"))
     pw = Window.partitionBy("q_vec_id").orderBy("score", "pb")

@@ -48,6 +48,24 @@ def test_query_matches_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
+@pytest.mark.parametrize("name", ["knn_ivf", "knn_ivf_p7"])
+def test_knn_ivf_probe_ladder_compiles(spark, duck, name):
+    """The 2^n_bits probe ladder must compile as generated code: with the
+    interpreted fallback off, a Janino compile failure raises instead of
+    being logged, and the rows must still match the oracle."""
+    fn, sql = REGISTRY[name]
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        sdf = fn(spark, SF_DIR)
+        srows = [r.asDict() for r in sdf.collect()]
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    cols = sorted(sdf.columns)
+    ddf = duck.sql(sql)
+    drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
+    assert srows and norm(srows, cols) == norm(drows, sorted(ddf.columns))
+
+
 def test_knn_ivf_multiprobe_recall(spark):
     """Margin-ordered multi-probe IVF must recover >= 0.7 of the
     brute-force top-k at sf0.1 at its default 32-probe tier (the round-4

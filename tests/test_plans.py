@@ -244,6 +244,34 @@ def test_link_dictionary_shuffle_fallback_plan(spark, vocab):
     assert "BroadcastHashJoin" not in plan
 
 
+def test_resolved_dictionary_one_join_per_side(spark, vocab):
+    """link_and_canonicalize resolves each alias to (id, prior, component)
+    once, on the dictionary: every sink plan does one broadcast join per
+    linked side (subj + obj for triples and edges, surface for nodes) and
+    none of them re-aggregates the dictionary by alias."""
+    from fastie_spark.fixtures import build_alias_edges, build_linker_dict
+    from fastie_spark.kg_job import link_and_canonicalize
+
+    linker = local_df(
+        spark, build_linker_dict(vocab),
+        "alias string, canonical_id string, entity_type string, prior double",
+    )
+    edges = local_df(spark, build_alias_edges(vocab)[0], "src string, dst string")
+    triples = spark.createDataFrame(
+        [("u", "abc", "p", "def")],
+        "url string, subj string, pred string, obj string",
+    )
+    mentions = spark.createDataFrame(
+        [("u", "per", 0, 3, "abc")],
+        "url string, label string, start long, end long, surface string",
+    )
+    chain = link_and_canonicalize(triples, mentions, linker, edges)
+    for name, joins in [("triples", 2), ("nodes", 1), ("edges", 2)]:
+        plan = plan_tree(chain[name])
+        assert plan.count("BroadcastHashJoin") == joins, name
+        assert "hashpartitioning(alias_norm" not in plan, name
+
+
 def test_near_dup_clusters_no_cross_product(spark):
     """Cluster dedup composes the banded pair join + CC + one keyed corpus
     join — no cartesian anywhere, and the corpus-side join is an equi-join
