@@ -36,6 +36,7 @@ import time
 from pyspark.sql import SparkSession
 
 from .scorer import Vocab
+from .tokenizer import MAX_LENGTH
 
 TASKS = (
     "named-entity-recognition", "relation-extraction", "event-extraction",
@@ -116,7 +117,7 @@ def run_ie(
     vocab: Vocab | None = None,
     ie_schema=None,
     batch_size: int = 16,
-    max_length: int = 512,
+    max_length: int = MAX_LENGTH,
     is_english: bool = False,
 ) -> dict:
     """The /v1/ie capability as a library call. texts: str | list[str]."""

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .chunking import mask_spaces
 from .decoders import gp_decode_cells, gplinker_decode_cells, w2ner_decode_grid
 from .decoders_ext import (
     cascade_crf_decode,
@@ -41,7 +42,7 @@ RE_DECODERS = ["gplinker", "casrel", "tplinker", "grte", "onerel", "pfn"]
 def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str,
                      base: int) -> list:
     """All decoders on one chunk -> row tuples (decoder-tagged)."""
-    masked = chunk.replace(" ", "-")
+    masked = mask_spaces(chunk)
     enc = encode(masked, MAX_LENGTH)
     l, mapping = enc["seq_len"], enc["offset_mapping"]
     rows = []
@@ -71,8 +72,7 @@ def decode_chunk_all(scorer: DictScorer, ids: dict, chunk: str,
     add_mentions("tplinker", tplinker_ner_decode(
         scorer.tplinker_ner_spots(masked), l, chunk, mapping, ids["ner"]))
     grid, L = scorer.cnn_scores(masked)
-    add_mentions("cnn", ((lbl, s + 0, e, surf) for lbl, s, e, surf in
-                         cnn_decode(grid, L, chunk, ids["ner"])))
+    add_mentions("cnn", cnn_decode(grid, L, chunk, ids["ner"]))
 
     # --- RE family ---
     ent, head, tail = scorer.re_cells(masked)

@@ -28,10 +28,9 @@ from .decoders import (
     gplinker_decode_cells,
 )
 from .scorer import DictScorer, Vocab
-from .tokenizer import encode_meta as encode
+from .tokenizer import MAX_LENGTH, encode_meta as encode
 
 BATCH_SIZE = 64  # reference default, decode_utils.py:123
-MAX_LENGTH = 512  # reference default, decode_utils.py:124
 
 
 class OracleEngine:

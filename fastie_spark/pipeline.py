@@ -39,9 +39,7 @@ from .decoders import (
 )
 from .scorer import DictScorer, Vocab
 from .session import arrow_map_fn
-from .tokenizer import encode_meta as encode
-
-MAX_LENGTH = 512  # reference default (decode_utils.py:124)
+from .tokenizer import MAX_LENGTH, encode_meta as encode
 
 EXTRACT_SCHEMA = (
     "url string, kind string, label string, start long, end long, "
@@ -92,7 +90,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     init cost — the seam where a real tokenizer/checkpoint load slots in
     (SURVEY §3.2). Pass ``init_acc`` (an accumulator) to observe actual
     build counts."""
-    from .chunking import auto_splitter, char_bases, split_one
+    from .chunking import auto_splitter, char_bases, mask_spaces, split_one
     from .executor_init import get_or_build
     from .text_extract import extract_text_py
 
@@ -152,7 +150,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                 # masked text equal chunk 0's (fixed-window mode), so
                 # the chunk loop's first occurrence scan is served from
                 # the scorer memo instead of re-scanning.
-                masked = text[: max_length - 2].replace(" ", "-")
+                masked = mask_spaces(text[: max_length - 2])
                 mapping = encode(masked, max_length)["offset_mapping"]
                 # fused event path: argus come out of the scorer already
                 # decoded (event_views), skipping the per-cell label
@@ -173,7 +171,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                         )
             doc_triples: set = set()
             for chunk, base in zip(chunks, bases):
-                masked = chunk.replace(" ", "-")
+                masked = mask_spaces(chunk)
                 enc = encode(masked, max_length)
                 l, mapping = enc["seq_len"], enc["offset_mapping"]
                 for lbl, s, e, surf in scorer.mentions_fast(

@@ -29,13 +29,22 @@ an implied dense fill of -1.0. ``decoders.dense_*`` helpers materialize real
 numpy grids from them for the reference-exact dense decode used in tests;
 the production path decodes the sparse cells directly (identical output,
 since -1.0 < every decode threshold used).
+
+One occurrence view: every grid builder reads ``DictScorer._present`` (the
+truncation-filtered ``{surface: [(s_tok, e_tok), ...]}`` map from one
+Aho-Corasick pass per chunk). The NER, RE and event grids are each written
+once (``_ner_grid``, ``_re_grid``, ``_event_grid``) over such a map; the
+tokenizer seam (``*_cells_mapped``) feeds the same bodies the spans that
+align to an arbitrary offset mapping (``_mapped_spans``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from .chunking import mask_spaces
 from .matcher import MultiPatternMatcher
+from .tokenizer import MAX_LENGTH
 
 POS = 1.0  # logit assigned to dictionary hits
 NEG = -1.0  # implied fill everywhere else
@@ -101,7 +110,7 @@ def find_all(text: str, sub: str) -> list:
 class DictScorer:
     """Per-chunk sparse grid scorer over a Vocab."""
 
-    def __init__(self, vocab: Vocab, max_length: int = 512):
+    def __init__(self, vocab: Vocab, max_length: int = MAX_LENGTH):
         self.vocab = vocab
         self.max_length = max_length
         self.ner_label2id = {l: i for i, l in enumerate(vocab.ner_labels())}
@@ -110,14 +119,14 @@ class DictScorer:
         # surfaces are matched against space-masked text; masking the vocab
         # side keeps surfaces containing spaces matchable (P3 invariant)
         self._masked_entities = [
-            (surf.replace(" ", "-"), lbl) for surf, lbl in vocab.entity_vocab
+            (mask_spaces(surf), lbl) for surf, lbl in vocab.entity_vocab
         ]
         self._masked_relations = [
-            (s.replace(" ", "-"), p, o.replace(" ", "-"))
+            (mask_spaces(s), p, mask_spaces(o))
             for s, p, o in vocab.relation_vocab
         ]
         self._masked_events = [
-            (etype, [(role, arg.replace(" ", "-")) for role, arg in args])
+            (etype, [(role, mask_spaces(arg)) for role, arg in args])
             for etype, args in vocab.event_vocab
         ]
         # one Aho-Corasick automaton over every surface any view needs; a
@@ -203,23 +212,15 @@ class DictScorer:
         self._occ_map(text)
         return self._present_memo
 
-    def _occ(self, text: str, surface: str) -> list:
-        """Token spans (s_tok, e_tok) of surface in text, truncation-aware —
-        same contract as _occurrences, served from the shared AC pass."""
-        trunc = min(len(text), self.max_length - 2)
-        L = len(surface)
-        return [
-            (s + 1, s + L)
-            for s in self._occ_map(text).get(surface, ())
-            if s + L <= trunc
-        ]
-
     # ---- M1: GlobalPointer NER grid --------------------------------------
     def ner_cells(self, masked_text: str) -> set:
         """{(label_id, s_tok, e_tok)} with logit POS; fill NEG elsewhere."""
+        return self._ner_grid(self._present(masked_text))
+
+    def _ner_grid(self, present: dict) -> set:
         cells = set()
         ent = self._ent_lids
-        for surf, spans in self._present(masked_text).items():
+        for surf, spans in present.items():
             lids = ent.get(surf)
             if not lids:
                 continue
@@ -296,8 +297,10 @@ class DictScorer:
     # ---- M8: GPLinker RE grids -------------------------------------------
     def re_cells(self, masked_text: str):
         """(entity_cells {(r,h,t)}, head_cells {(p,sh,oh)}, tail_cells {(p,st,ot)})."""
+        return self._re_grid(self._present(masked_text))
+
+    def _re_grid(self, present: dict):
         ent, head, tail = set(), set(), set()
-        present = self._present(masked_text)
         # entity cells fire for EVERY present subject/object surface, even
         # when its relation partner is absent from the chunk — the reference
         # model's entity grid is independent of the head/tail grids, and a
@@ -328,8 +331,10 @@ class DictScorer:
     def event_cells(self, masked_text: str):
         """(argu_cells {(label_id,h,t)}, head_links {(h_min,h_max)},
         tail_links {(t_min,t_max)})."""
+        return self._event_grid(self._present(masked_text))
+
+    def _event_grid(self, present: dict):
         argu, head, tail = set(), set(), set()
-        present = self._present(masked_text)
         # only instances with >= 1 present argument can contribute cells;
         # the inverted index makes the scan proportional to the (small)
         # present-surface set, not the event vocabulary. Set-valued
@@ -396,9 +401,10 @@ class DictScorer:
         First write wins on conflicts (deterministic argmax tie-break)."""
         l = min(len(masked_text), self.max_length - 2) + 2
         starts, ends = [0] * l, [0] * l
+        present = self._present(masked_text)
         for surf, lbl in sorted(self._masked_entities):
             lid = self.ner_label2id[lbl] + 1
-            for s_tok, e_tok in self._occ(masked_text, surf):
+            for s_tok, e_tok in present.get(surf, ()):
                 if starts[s_tok] == 0:
                     starts[s_tok] = lid
                 if ends[e_tok] == 0:
@@ -417,9 +423,10 @@ class DictScorer:
         em = np.zeros((l, 1 + 2 * n), dtype=np.float32)
         em[:, 0] = 0.5
         taken = [False] * l
+        present = self._present(masked_text)
         for surf, lbl in sorted(self._masked_entities):
             lid = self.ner_label2id[lbl]
-            for s_tok, e_tok in self._occ(masked_text, surf):
+            for s_tok, e_tok in present.get(surf, ()):
                 if any(taken[s_tok : e_tok + 1]):
                     continue
                 em[s_tok, 1 + lid] = 1.0
@@ -438,8 +445,9 @@ class DictScorer:
         em = np.zeros((l, 3), dtype=np.float32)
         em[:, 0] = 0.5
         taken = [False] * l
+        present = self._present(masked_text)
         for surf, _ in sorted(self._masked_entities):
-            for s_tok, e_tok in self._occ(masked_text, surf):
+            for s_tok, e_tok in present.get(surf, ()):
                 if any(taken[s_tok : e_tok + 1]):
                     continue
                 em[s_tok, 1] = 1.0
@@ -484,13 +492,11 @@ class DictScorer:
         L = min(len(masked_text), self.max_length - 2)
         C = len(self.ner_label2id)
         g = np.zeros((max(L, 1), max(L, 1), C), dtype=np.float32)
-        occ = self._occ_map(masked_text)
+        present = self._present(masked_text)
         for surf, lbl in self._masked_entities:
             lid = self.ner_label2id[lbl]
-            for s in occ.get(surf, ()):
-                e = s + len(surf)
-                if e > L:
-                    continue
+            for s_tok, e in present.get(surf, ()):
+                s = s_tok - 1
                 g[s, e - 1, lid] = 1.0
                 g[e - 1, s, lid] = 1.0
         return g, L
@@ -498,8 +504,9 @@ class DictScorer:
     # ---- M9: CasRel conditional views --------------------------------------
     def casrel_subjects(self, masked_text: str):
         starts, ends = set(), set()
+        present = self._present(masked_text)
         for subj, _, _ in self._masked_relations:
-            for sh, st in self._occ(masked_text, subj):
+            for sh, st in present.get(subj, ()):
                 starts.add(sh)
                 ends.add(st)
         return sorted(starts), sorted(ends)
@@ -508,6 +515,7 @@ class DictScorer:
         """Returns fn(subject_token_span) -> (starts, ends) of (pos, pred_id)
         — the conditional-LayerNorm second pass, dictionary-simulated by
         resolving the subject surface from the span."""
+        present = self._present(masked_text)
 
         def fn(span):
             sh, st = span
@@ -517,7 +525,7 @@ class DictScorer:
                 if subj != surf:
                     continue
                 p = self.pred2id[pred]
-                for oh, ot in self._occ(masked_text, obj):
+                for oh, ot in present.get(obj, ()):
                     starts.append((oh, p))
                     ends.append((ot, p))
             return starts, ends
@@ -534,9 +542,10 @@ class DictScorer:
     def tplinker_re_spots(self, masked_text: str) -> list:
         label2id = {v: k for k, v in self.tplinker_re_labels().items()}
         spots = set()
+        present = self._present(masked_text)
         for subj, pred, obj in self._masked_relations:
-            so = self._occ(masked_text, subj)
-            oo = self._occ(masked_text, obj)
+            so = present.get(subj, ())
+            oo = present.get(obj, ())
             for sh, st in so:
                 spots.add((sh, st, label2id["ENT=EH2ET"]))
             for oh, ot in oo:
@@ -556,10 +565,11 @@ class DictScorer:
     # ---- M11: GRTE tag cells ------------------------------------------------
     def grte_cells(self, masked_text: str) -> dict:
         cells: dict = {}
+        present = self._present(masked_text)
         for subj, pred, obj in sorted(self._masked_relations):
             r = self.pred2id[pred]
-            so = self._occ(masked_text, subj)
-            oo = self._occ(masked_text, obj)
+            so = present.get(subj, ())
+            oo = present.get(obj, ())
             for (sh, st) in so:
                 for (oh, ot) in oo:
                     subj_multi, obj_multi = st > sh, ot > oh
@@ -579,10 +589,11 @@ class DictScorer:
     # ---- M12: OneRel tag cells ----------------------------------------------
     def onerel_cells(self, masked_text: str) -> dict:
         cells: dict = {}
+        present = self._present(masked_text)
         for subj, pred, obj in sorted(self._masked_relations):
             p = self.pred2id[pred]
-            so = self._occ(masked_text, subj)
-            oo = self._occ(masked_text, obj)
+            so = present.get(subj, ())
+            oo = present.get(obj, ())
             for (sh, st) in so:
                 for (oh, ot) in oo:
                     cells.setdefault((p, sh, oh), 1)  # HB-TB
@@ -598,14 +609,11 @@ class DictScorer:
         (labels are prepended with ["NONE","NNW"], modeling_w2ner.py:114-117).
         First write wins (deterministic argmax tie-break)."""
         grid: dict = {}
-        trunc = min(len(text), self.max_length - 2)
-        occ = self._occ_map(text)
+        present = self._present(text)
         for surf, lbl in sorted(self._masked_entities):
             lid = self.ner_label2id[lbl] + 2
-            for s in occ.get(surf, ()):
-                e = s + len(surf)  # exclusive char end
-                if e > trunc:
-                    continue
+            for s_tok, e in present.get(surf, ()):
+                s = s_tok - 1  # e_tok is the exclusive char end
                 for i in range(s, e - 1):
                     grid.setdefault((i, i + 1), 1)
                 grid.setdefault((e - 1, s), lid)
@@ -642,72 +650,24 @@ def ner_cells_mapped(scorer: DictScorer, masked_text: str, mapping) -> set:
     (label_id, s_tok, e_tok) iff its char span aligns to token boundaries;
     an occurrence split inside a subword token cannot be represented in a
     token-square grid, which is exactly a real span model's constraint.
-    With the char tokenizer's mapping this reduces bit-for-bit to
-    DictScorer.ner_cells (parity pytest-gated)."""
-    present = _mapped_spans(scorer, masked_text, mapping)
-    cells = set()
-    for surf, lids in scorer._ent_lids.items():
-        for s_tok, e_tok in present.get(surf, ()):
-            for lid in lids:
-                cells.add((lid, s_tok, e_tok))
-    return cells
+    The grid body is DictScorer.ner_cells' own, read over the mapped spans,
+    so the char tokenizer's mapping gives ner_cells exactly (pytest-gated)."""
+    return scorer._ner_grid(_mapped_spans(scorer, masked_text, mapping))
 
 
 def re_cells_mapped(scorer: DictScorer, masked_text: str, mapping):
     """M8 GPLinker grids under an ARBITRARY offset_mapping — the RE side of
-    the tokenizer seam. Same contract as DictScorer.re_cells (entity cells
-    fire for every present subject/object surface; head/tail cells per
-    relation with both sides present), with char occurrences converted to
-    token coordinates through the mapping; occurrences that don't align to
-    token boundaries are unrepresentable (a real span model's constraint).
-    Reduces bit-for-bit to re_cells on the char tokenizer's mapping."""
-    present = _mapped_spans(scorer, masked_text, mapping)
-    ent, head, tail = set(), set(), set()
-    for surf, spans in present.items():
-        if surf in scorer._subj_surfaces:
-            for sh, st in spans:
-                ent.add((0, sh, st))
-        if surf in scorer._obj_surfaces:
-            for oh, ot in spans:
-                ent.add((1, oh, ot))
-    for subj, subj_occ in present.items():
-        rels = scorer._rel_by_subj.get(subj)
-        if not rels:
-            continue
-        for p, obj in rels:
-            obj_occ = present.get(obj)
-            if not obj_occ:
-                continue
-            for sh, st in subj_occ:
-                for oh, ot in obj_occ:
-                    head.add((p, sh, oh))
-                    tail.add((p, st, ot))
-    return ent, head, tail
+    the tokenizer seam: DictScorer.re_cells' grid body over the spans that
+    align to token boundaries (occurrences that don't are unrepresentable,
+    a real span model's constraint). Equals re_cells on the char
+    tokenizer's mapping (pytest-gated)."""
+    return scorer._re_grid(_mapped_spans(scorer, masked_text, mapping))
 
 
 def event_cells_mapped(scorer: DictScorer, masked_text: str, mapping):
     """M14 event grids under an ARBITRARY offset_mapping — the event side of
-    the tokenizer seam (completes NER/RE: ner_cells_mapped/re_cells_mapped).
-    Same contract as DictScorer.event_cells: argu cells for every present
-    role argument, head/tail link cells pairing the FIRST representable
-    occurrence per argument; char occurrences that don't align to token
-    boundaries are unrepresentable (a real span model's constraint).
-    Reduces bit-for-bit to event_cells on the char tokenizer's mapping
-    (parity pytest-gated)."""
-    present = _mapped_spans(scorer, masked_text, mapping)
-    argu, head, tail = set(), set(), set()
-    for etype, args in scorer._masked_events:
-        occ_first = []
-        for role, arg in args:
-            lid = scorer.event_label2id[f"{etype}@{role}"]
-            spans = present.get(arg, ())
-            for h, t in spans:
-                argu.add((lid, h, t))
-            if spans:
-                occ_first.append(spans[0])  # link via first occurrence
-        for i in range(len(occ_first)):
-            for j in range(i + 1, len(occ_first)):
-                (h1, t1), (h2, t2) = occ_first[i], occ_first[j]
-                head.add((min(h1, h2), max(h1, h2)))
-                tail.add((min(t1, t2), max(t1, t2)))
-    return argu, head, tail
+    the tokenizer seam: DictScorer.event_cells' grid body over the aligned
+    spans, so head/tail links pair the FIRST representable occurrence per
+    argument. Equals event_cells on the char tokenizer's mapping
+    (pytest-gated)."""
+    return scorer._event_grid(_mapped_spans(scorer, masked_text, mapping))

@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 
 from .api import TASKS, run_ie
 from .scorer import Vocab
+from .tokenizer import MAX_LENGTH
 
 
 _PLAYGROUND_HTML = """<!doctype html>
@@ -117,7 +118,7 @@ def create_server(
                 # a 400 here, not a TypeError inside run_ie/Spark (which
                 # would drop the connection with an unhandled exception)
                 batch_size = int(req.get("batch_size", 16))
-                max_length = int(req.get("max_length", 512))
+                max_length = int(req.get("max_length", MAX_LENGTH))
             except (json.JSONDecodeError, KeyError, ValueError,
                     TypeError, AttributeError) as ex:
                 # TypeError/AttributeError: valid-JSON bodies of the wrong

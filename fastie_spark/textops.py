@@ -21,10 +21,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .derive import TOKEN_RE
 from .linking import _FW_DST, _FW_SRC, _sign_band
+from .tokenizer import MAX_LENGTH
 
-CHUNK = 510  # max_length - 2, the reference chunk width
-_TOKEN_RE = r"[\p{L}\p{N}]+"
+CHUNK = MAX_LENGTH - 2  # the reference chunk width
 _PUNCT_RE = r"[\.,;:!\?。，；：！？]"
 _ASCII_RE = r"[^\x20-\x7E]"
 _SALTS = ["s0", "s1", "s2", "s3"]
@@ -393,7 +394,7 @@ def token_stats(spark, sf_dir):
     regexp, whole-stage codegen, no UDF."""
     return _docs(spark, sf_dir).select(
         "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0))
         .cast("long")
         .alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_obs"),
@@ -402,7 +403,7 @@ def token_stats(spark, sf_dir):
 
 TOKEN_STATS_SQL = rf"""
 SELECT doc_id,
-       cast(length(regexp_extract_all(text, '{_TOKEN_RE}')) AS BIGINT) AS n_tokens,
+       cast(length(regexp_extract_all(text, '{TOKEN_RE}')) AS BIGINT) AS n_tokens,
        cast(length(text) AS BIGINT) AS n_chars_obs
 FROM documents
 """
@@ -920,7 +921,7 @@ def simhash16(spark, sf_dir):
     per-(doc,bit) vote sum -> per-doc bit pack; all map-side combinable."""
     toks = _scan_parallel(_docs(spark, sf_dir).select("doc_id", "text")).select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)).alias("tok"),
+        F.explode(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0)).alias("tok"),
     )
     bits = toks.select(
         "doc_id", F.md5("tok").alias("h"),
@@ -946,7 +947,7 @@ def simhash16(spark, sf_dir):
 
 SIMHASH_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '{_TOKEN_RE}')) AS tok
+  SELECT doc_id, unnest(regexp_extract_all(text, '{TOKEN_RE}')) AS tok
   FROM documents
 ),
 bits AS (

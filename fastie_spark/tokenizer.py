@@ -17,6 +17,7 @@ chars ``[i-1, i)``. No torch/transformers dependency.
 
 from __future__ import annotations
 
+MAX_LENGTH = 512  # reference default (decode_utils.py:124)
 CLS_ID = 1
 SEP_ID = 2
 UNK_ID = 3
@@ -28,7 +29,7 @@ def char_to_id(ch: str) -> int:
     return ord(ch) + _VOCAB_OFFSET
 
 
-def encode(text: str, max_length: int = 512) -> dict:
+def encode(text: str, max_length: int = MAX_LENGTH) -> dict:
     """Tokenize one (already space-masked) chunk.
 
     Returns dict with:
@@ -45,7 +46,7 @@ def encode(text: str, max_length: int = 512) -> dict:
 _OFFSETS_CACHE: dict = {}
 
 
-def encode_meta(text: str, max_length: int = 512) -> dict:
+def encode_meta(text: str, max_length: int = MAX_LENGTH) -> dict:
     """Hot-path variant of encode(): the decoders consume only seq_len and
     offset_mapping (input_ids feed no grid in the dictionary scorer), and
     the offset mapping depends only on the truncated LENGTH — served from a
@@ -69,7 +70,7 @@ def char_span_to_token_span(start: int, end: int) -> tuple[int, int]:
     return start + 1, end
 
 
-def subword_encode_meta(text: str, max_length: int = 512) -> dict:
+def subword_encode_meta(text: str, max_length: int = MAX_LENGTH) -> dict:
     """Deterministic MULTI-char-token tokenizer with the same offset
     contract as encode_meta — the drop-in seam double for a real wordpiece
     tokenizer (tokenization.py:100-129 in the reference's global_pointer

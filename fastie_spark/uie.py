@@ -27,9 +27,9 @@ from .decoders import dbc2sbc, get_span
 from .linking import _FW_DST, _FW_SRC
 from .scorer import Vocab, find_all
 from .session import arrow_map_fn
+from .tokenizer import MAX_LENGTH
 
 POSITION_PROB = 0.5  # reference default, decode_utils.py:198
-MAX_LENGTH = 512
 
 
 # --------------------------------------------------------------------------

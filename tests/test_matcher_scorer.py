@@ -3,9 +3,12 @@ find_all, encode_meta vs encode, and the re_cells orphan-cell regression
 (subjects/objects whose relation partner is absent must still fill the
 entity grid — decode can pair them across relations)."""
 
+import random
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from fastie_spark.chunking import mask_spaces
 from fastie_spark.decoders import gplinker_decode_cells
 from fastie_spark.matcher import MultiPatternMatcher
 from fastie_spark.scorer import DictScorer, Vocab, find_all
@@ -82,6 +85,45 @@ def test_re_cells_matches_bruteforce_reference():
         assert (ent, head, tail) == (bent, bhead, btail), text
 
 
+def _seeded_cases(seed: int, n_vocabs: int = 30, n_texts: int = 3):
+    """Seeded (scorer, masked_text) pairs for the shared occurrence view:
+    surfaces with spaces and with prefix/suffix collisions (so the vocab is
+    never affix-free), NER/RE vocabularies built as in
+    test_fast_decode_paths._mk_scorer plus an event vocabulary, and texts
+    longer than 600 chars so occurrences straddle the 510-char truncation.
+    Each pair is first checked against a find_all reference of _present."""
+    rng = random.Random(seed)
+    alpha = "abcd汉字 "
+    for _ in range(n_vocabs):
+        base = {"".join(rng.choice(alpha) for _ in range(rng.randint(2, 4)))
+                for _ in range(rng.randint(2, 6))}
+        surfs = sorted(base | {b + rng.choice(alpha) for b in base}
+                       | {rng.choice(alpha) + b for b in base})
+        ents = [(s, rng.choice(["A", "B"])) for s in surfs]
+        rels = sorted({(a, rng.choice(["p", "q"]), b) for a in surfs
+                       for b in surfs if a != b and rng.random() < 0.3})
+        evs = [(rng.choice(["E1", "E2"]),
+                [(role, rng.choice(surfs)) for role in
+                 ["触发词"] + rng.sample(["r1", "r2", "x@y"], rng.randint(0, 3))])
+               for _ in range(rng.randint(1, 5))]
+        sc = DictScorer(Vocab(entity_vocab=ents, relation_vocab=rels,
+                              event_vocab=evs))
+        masked_surfs = {mask_spaces(s) for s in surfs}
+        for _ in range(n_texts):
+            text, n_chars = "", rng.randint(601, 900)
+            while len(text) < n_chars:
+                text += (rng.choice(surfs) if rng.random() < 0.4 else
+                         "".join(rng.choice(alpha + "xyz")
+                                 for _ in range(rng.randint(1, 6))))
+            t = mask_spaces(text)
+            trunc = min(len(t), 510)
+            ref = {m: spans for m in masked_surfs
+                   if (spans := [(i + 1, i + len(m)) for i in find_all(t, m)
+                                 if i + len(m) <= trunc])}
+            assert sc._present(t) == ref, t
+            yield sc, t
+
+
 class TestTokenizerSeam:
     """Decode offsets must survive a tokenizer whose tokens cover more than
     one char (VERDICT round-1 gap #3: the real-checkpoint swap guard)."""
@@ -130,6 +172,10 @@ class TestTokenizerSeam:
         enc = encode_meta(text)
         assert ner_cells_mapped(scorer, text, enc["offset_mapping"]) == \
             scorer.ner_cells(text)
+        for scorer, t in _seeded_cases(1401):
+            mapping = encode_meta(t)["offset_mapping"]
+            assert ner_cells_mapped(scorer, t, mapping) == \
+                scorer.ner_cells(t), t
 
     def test_misaligned_occurrence_is_unrepresentable(self):
         """A surface embedded INSIDE an ASCII run does not align to subword
@@ -191,6 +237,10 @@ class TestTokenizerSeamRE:
         enc = encode_meta(text)
         assert re_cells_mapped(scorer, text, enc["offset_mapping"]) == \
             scorer.re_cells(text)
+        for scorer, t in _seeded_cases(1402):
+            mapping = encode_meta(t)["offset_mapping"]
+            assert re_cells_mapped(scorer, t, mapping) == \
+                scorer.re_cells(t), t
 
 
 class TestTokenizerSeamEvent:
@@ -247,3 +297,7 @@ class TestTokenizerSeamEvent:
         enc = encode_meta(text)
         assert event_cells_mapped(scorer, text, enc["offset_mapping"]) == \
             scorer.event_cells(text)
+        for scorer, t in _seeded_cases(1403):
+            mapping = encode_meta(t)["offset_mapping"]
+            assert event_cells_mapped(scorer, t, mapping) == \
+                scorer.event_cells(t), t
