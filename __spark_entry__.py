@@ -29,10 +29,15 @@ from fastie_spark.derive import (
 )
 from fastie_spark.fixtures import NER_LABELS, PREDICATES
 from fastie_spark.kg_job import link_and_canonicalize
-from fastie_spark.linking import _FW_DST, _FW_SRC, link_triples
+from fastie_spark.linking import (
+    EMB_BAND_BITS, EMB_DIMS, _sign_band_sql, _top_k_sql, dbc2sbc_sql,
+    link_triples,
+)
 from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
 from fastie_spark.textops import REGISTRY, track_cache
+
+_LINK_K = 1  # link_embedding keeps each surface's nearest alias
 
 # ---------------------------------------------------------------------------
 # memoized derived-vocab KG pipeline per sf_dir (the driver calls each query
@@ -327,7 +332,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         queries_df = local_df(
             s, [{"surface": v} for v in variants], "surface string"
         )
-        out = link_by_embedding(queries_df, aliases, k=1, prefilter=prefilter)
+        out = link_by_embedding(queries_df, aliases, k=_LINK_K,
+                                prefilter=prefilter)
         return out.select(
             "surface", "alias", "canonical_id",
             F.round("cos", 6).alias("cos"),
@@ -548,8 +554,6 @@ FROM c
 # whole relation vocab (the scorer's by_subj probe), one output row per
 # (level-1 occurrence row) x (object occurrence). No-overlap property of the
 # derived vocab (asserted in tests) makes the start/end pairing exact.
-_UIE_FW_DST = _FW_DST.replace("'", "''")  # SQL-escaped shared table
-
 _UIE_SQL = (
     "WITH " + _VOCAB_CTE + r""",
 occ_all AS (
@@ -584,15 +588,12 @@ span_objs AS (
   SELECT DISTINCT s.span, r2.obj
   FROM (SELECT DISTINCT span FROM lv1_lbl) s, r0
   JOIN rel r2
-    ON translate(s.span || '的' || r0.pred, '""" + _FW_SRC + r"""',
-                 '""" + _UIE_FW_DST + r"""')
+    ON """ + dbc2sbc_sql("s.span || '的' || r0.pred") + r"""
        = r2.subj || '的' || r2.pred
 ),
 w2 AS (
-  SELECT 509 - length(max(translate(span || '的' || r0.pred,
-                                    '""" + _FW_SRC + r"""',
-                                    '""" + _UIE_FW_DST + r"""')))
-         AS w
+  SELECT 509 - length(max(
+           """ + dbc2sbc_sql("span || '的' || r0.pred") + r""")) AS w
   FROM lv1_lbl, r0
 ),
 lv2 AS (
@@ -837,42 +838,34 @@ scored AS (
   WHERE nq.n2 > 0 AND na.n2 > 0
 )
 SELECT surface, alias, canonical_id, round(cos, 6) AS cos
-FROM (SELECT *, row_number() OVER (PARTITION BY surface
-                                   ORDER BY cos DESC, alias) AS rnk
-      FROM scored)
-WHERE rnk = 1
-"""
+FROM """ + _top_k_sql("scored", "surface", "cos", "alias", _LINK_K)
 )
 
 
-def _link_embedding_banded_sql(dims: int = 16, n_bits: int = 8) -> str:
-    """Banded-mode oracle, generated from the SAME (dims, n_bits) constants
-    the Spark path uses (linking.EMB_DIMS, default n_bits = dims/2) so the
-    two cannot silently diverge. Mirrors linking._link_by_embedding_banded:
-    densify emb to v0..v{dims-1}, sign-bit bands b1 = dims [0, n_bits) /
-    b2 = [n_bits, 2*n_bits), candidates agree on b1 OR b2, integer-exact
-    cosine + rank on candidates only."""
-    vcols = ",\n         ".join(
-        f"cast(coalesce(sum(CASE WHEN dim = {i} THEN v END), 0) AS BIGINT)"
-        f" AS v{i}" for i in range(dims)
+def _link_embedding_banded_sql() -> str:
+    """Banded-mode oracle, generated from the Spark path's own constants
+    (linking.EMB_DIMS, EMB_BAND_BITS) and its band and top-k rules
+    (_sign_band_sql, _top_k_sql), so the two cannot silently diverge.
+    Mirrors linking._link_by_embedding_banded: densify emb to a BIGINT list
+    v, sign-bit bands b1 = dims [0, bits) / b2 = [bits, 2 * bits),
+    candidates agree on b1 OR b2, integer-exact cosine + rank on
+    candidates only."""
+    dims, bits = range(1, EMB_DIMS + 1), EMB_BAND_BITS
+    vlist = ",\n          ".join(
+        f"cast(coalesce(sum(CASE WHEN dim = {i - 1} THEN v END), 0) AS BIGINT)"
+        for i in dims
     )
-    n2 = " + ".join(f"v{i} * v{i}" for i in range(dims))
-    b1 = " || ".join(
-        f"cast(cast(v{i} > 0 AS INT) AS VARCHAR)" for i in range(n_bits)
-    )
-    b2 = " || ".join(
-        f"cast(cast(v{i} > 0 AS INT) AS VARCHAR)"
-        for i in range(n_bits, 2 * n_bits)
-    )
-    dot = " + ".join(f"q.v{i} * a.v{i}" for i in range(dims))
+    n2 = " + ".join(f"v[{i}] * v[{i}]" for i in dims)
+    dot = " + ".join(f"q.v[{i}] * a.v[{i}]" for i in dims)
     return (
         "WITH " + _VOCAB_CTE + "," + _EMB_COMMON_CTE + f""",
 dense AS (
-  SELECT s, {vcols}
+  SELECT s, [{vlist}] AS v
   FROM emb GROUP BY s
 ),
 feat AS (
-  SELECT *, {n2} AS n2, {b1} AS b1, {b2} AS b2
+  SELECT *, {n2} AS n2, {_sign_band_sql(0, bits)} AS b1,
+         {_sign_band_sql(bits, bits)} AS b2
   FROM dense
 ),
 bcand AS (
@@ -888,22 +881,12 @@ scored AS (
   FROM bcand c JOIN al ON al.s = c.als
 )
 SELECT surface, alias, canonical_id, round(cos, 6) AS cos
-FROM (SELECT *, row_number() OVER (PARTITION BY surface
-                                   ORDER BY cos DESC, alias) AS rnk
-      FROM scored)
-WHERE rnk = 1
+FROM {_top_k_sql("scored", "surface", "cos", "alias", _LINK_K)}
 """
     )
 
 
-# generated from the Spark path's OWN constants (not literals), so a
-# future EMB_DIMS change flows into the oracle instead of silently
-# diverging from it
-from fastie_spark.linking import EMB_DIMS as _EMB_DIMS  # noqa: E402
-
-_LINK_EMBEDDING_BANDED_SQL = _link_embedding_banded_sql(
-    dims=_EMB_DIMS, n_bits=_EMB_DIMS // 2
-)
+_LINK_EMBEDDING_BANDED_SQL = _link_embedding_banded_sql()
 
 
 # image_stats / audio_stats: the BinaryType oracles parse the REAL container

@@ -61,12 +61,11 @@ def _driver_union_find(spark, pairs, node_type: str = "string") -> DataFrame:
     )
 
 
+_MAX_ITER = 25  # label-propagation rounds before the distributed loop stops
+
+
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    broadcast_threshold: int = 200_000,
+    edges: DataFrame, broadcast_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
@@ -79,8 +78,8 @@ def connected_components(
     contend with result collection."""
     if broadcast_threshold:
         small = edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v")
-        ).filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+            F.col("src").alias("u"), F.col("dst").alias("v")
+        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         # ONE bounded job doubles as the size probe AND the edge fetch: pull
         # at most threshold+1 rows through Arrow — if everything fit, those
         # rows ARE the edge set (the old limit().count() probe + collect()
@@ -89,7 +88,7 @@ def connected_components(
         head = small.limit(broadcast_threshold + 1).toPandas()
         if len(head) <= broadcast_threshold:
             pairs = list(zip(head["u"].tolist(), head["v"].tolist()))
-            node_type = edges.schema[src].dataType.simpleString()
+            node_type = edges.schema["src"].dataType.simpleString()
             if not pairs:
                 # a legitimate empty alias table must yield an empty result,
                 # not an IndexError from a column-less pandas frame
@@ -98,8 +97,8 @@ def connected_components(
                 )
             return _driver_union_find(edges.sparkSession, pairs, node_type)
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .dropDuplicates(["u", "v"])
         .persist()
@@ -112,7 +111,7 @@ def connected_components(
     )
 
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # neighbor-min step
         msgs = sym.join(labels, sym["u"] == labels["node"]).select(
             F.col("v").alias("node"), F.col("comp")

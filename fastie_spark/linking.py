@@ -20,19 +20,30 @@ SURVEY.md §0); semantics specified by SURVEY.md §7.1 step 7:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _FW_SRC = "".join(chr(c + 0xFEE0) for c in range(0x21, 0x7F))
 _FW_DST = "".join(chr(c) for c in range(0x21, 0x7F))
 
 
+def dbc2sbc_col(col) -> Column:
+    """decoders.dbc2sbc as a codegen ``translate`` over the 94-char
+    full-width block 0xFF01-0xFF5E. Matches decode_utils.py:118-130
+    including its quirk: U+3000 (ideographic space) stays UNMAPPED."""
+    return F.translate(col, _FW_SRC, _FW_DST)
+
+
+def dbc2sbc_sql(expr: str) -> str:
+    """DuckDB twin of dbc2sbc_col over the SQL expression ``expr``."""
+    dst = _FW_DST.replace("'", "''")
+    return f"translate({expr}, '{_FW_SRC}', '{dst}')"
+
+
 def normalize_surface(col: Column) -> Column:
-    """dbc2sbc + lower, as a codegen-friendly expression. Exactly matches
-    decoders.dbc2sbc (decode_utils.py:118-130) including its quirk: U+3000
-    (ideographic space) stays UNMAPPED, so a linker surface and a decode
-    surface normalize identically."""
-    return F.lower(F.translate(col, _FW_SRC, _FW_DST))
+    """dbc2sbc + lower, so a linker surface and a decode surface normalize
+    identically."""
+    return F.lower(dbc2sbc_col(col))
 
 
 def prepare_linker_dict(linker: DataFrame, normalize: bool = True) -> DataFrame:
@@ -113,6 +124,7 @@ def link_surfaces(
 # nearest alias by n-gram feature-hash embedding cosine.
 # ---------------------------------------------------------------------------
 EMB_DIMS = 16
+EMB_BAND_BITS = EMB_DIMS // 2  # link_by_embedding's default band width
 
 
 def surface_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
@@ -161,21 +173,52 @@ def dense_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
 def _sign_band(start: int, n_bits: int) -> Column:
     """Sign-bit band over embedding dims [start, start+n_bits) of column
     ``v`` — the axis-aligned analogue of a random-hyperplane LSH band,
-    shared by link_by_embedding and textops.emb_near_dup. Missing/NULL
-    dims map to a sentinel bit so short vectors band identically in Spark
-    (concat_ws would skip NULLs) and DuckDB (|| would propagate NULL);
-    dense vectors have no NULL dims and never hit it."""
+    shared by link_by_embedding, textops.emb_near_dup and textops.knn_ivf.
+    One character per dim: '1' if v[dim] > 0, '0' if not, '9' if the dim
+    is NULL or past the end of the array (or ``v`` itself is NULL).
+    ANSI-safe: ``try_element_at`` reads a short vector as NULL dims
+    instead of raising INVALID_ARRAY_INDEX_IN_ELEMENT_AT, so Spark gives
+    the same string as its DuckDB twin _sign_band_sql (where a missing
+    index is NULL too), e.g. '1099' for [0.3, -0.1] over 4 bits."""
     return F.concat_ws("", *[
         F.coalesce(
-            (F.element_at("v", start + i + 1) > 0).cast("int"), F.lit(9)
+            (F.try_element_at("v", F.lit(start + i + 1)) > 0).cast("int"),
+            F.lit(9),
         ).cast("string")
         for i in range(n_bits)
     ])
 
 
+def _sign_band_sql(start: int, n_bits: int) -> str:
+    """DuckDB twin of _sign_band over a list column ``v``."""
+    return " || ".join(
+        f"coalesce(cast(v[{i}] > 0 AS INT), 9)"
+        for i in range(start + 1, start + n_bits + 1)
+    )
+
+
+def _top_k(df: DataFrame, part: str, score: str, tie: str,
+           k: int) -> DataFrame:
+    """The k best rows per ``part`` by (score DESC, tie ASC), numbered
+    1..k in a long ``rnk`` column — the one ranking rule every nearest-
+    neighbour operator uses, twinned by _top_k_sql."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return (
+        df.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+    )
+
+
+def _top_k_sql(src: str, part: str, score: str, tie: str, k: int) -> str:
+    """DuckDB twin of _top_k: a subquery over relation ``src``."""
+    return f"""(SELECT *, cast(row_number() OVER (PARTITION BY {part}
+                 ORDER BY {score} DESC, {tie}) AS BIGINT) AS rnk
+      FROM {src} QUALIFY rnk <= {k})"""
+
+
 def link_by_embedding(queries: DataFrame, aliases: DataFrame,
                       k: int = 1, prefilter: str = "exact",
-                      n_bits: int = EMB_DIMS // 2) -> DataFrame:
+                      n_bits: int = EMB_BAND_BITS) -> DataFrame:
     """queries(surface) x aliases(alias, canonical_id) -> top-k nearest
     aliases per surface by embedding cosine:
     (surface, alias, canonical_id, cos, rnk).
@@ -236,13 +279,7 @@ def link_by_embedding(queries: DataFrame, aliases: DataFrame,
              / F.sqrt(F.col("n2q") * F.col("n2a"))).alias("cos"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("surface").orderBy(F.desc("cos"), F.asc("alias"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(pairs, "surface", "cos", "alias", k)
 
 
 def _link_by_embedding_banded(q: DataFrame, a: DataFrame, k: int,
@@ -294,13 +331,7 @@ def _link_by_embedding_banded(q: DataFrame, a: DataFrame, k: int,
             (dot / F.sqrt(F.col("n2q") * F.col("n2a"))).alias("cos"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("surface").orderBy(F.desc("cos"), F.asc("alias"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _top_k(scored, "surface", "cos", "alias", k)
 
 
 def link_mentions(mentions: DataFrame, linker: DataFrame,

@@ -18,11 +18,12 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .derive import TOKEN_RE
-from .linking import _FW_DST, _FW_SRC, _sign_band
+from .linking import (_sign_band, _sign_band_sql, _top_k, _top_k_sql,
+                      dbc2sbc_col, dbc2sbc_sql)
 from .tokenizer import MAX_LENGTH
 
 CHUNK = MAX_LENGTH - 2  # the reference chunk width
@@ -92,7 +93,34 @@ def _scan_parallel(df: DataFrame) -> DataFrame:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    """(vec_id, v: array<double>) — the embedding table cast once to
+    double, so every cosine is computed in double on both engines."""
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+
+
+_EMB_SQL = """SELECT vec_id, list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
+  FROM embeddings"""
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Cosine of two array<double> columns: sequential double sums from
+    0.0, so the value is bit-identical to _cosine_sql in DuckDB."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    na, nb = (F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
+              for c in (a, b))
+    return dot / (na * nb)
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of _cosine over list columns ``a`` and ``b``."""
+    na, nb = (f"sqrt(list_sum(list_transform({c}, x -> x * x)))"
+              for c in (a, b))
+    return (f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
+            f" / ({na} * {nb})")
 
 
 # ---------------------------------------------------------------- P6 chunking
@@ -475,6 +503,13 @@ def _shingle_col():
     )
 
 
+# DuckDB twin of _shingle_col: one (doc_id, shingle) row per shingle
+# occurrence over lower(text); consumers reduce it with min() or DISTINCT
+_SHINGLES_SQL = """SELECT doc_id, substring(norm, cast(p AS INT), 8) AS shingle
+  FROM (SELECT doc_id, lower(text) AS norm FROM documents) d,
+       unnest(generate_series(1, cast(greatest(length(norm) - 7, 1) AS INT), 4)) AS t(p)"""
+
+
 def _minhash_cols() -> list:
     """The 4 salted MinHash signature columns as PURE PROJECTIONS over a
     ``shingles`` array column (_shingle_col): per-doc min over the shingle
@@ -512,18 +547,11 @@ def minhash_signature(spark, sf_dir):
     )
 
 
-MINHASH_SIGNATURE_SQL = """
-WITH d AS (SELECT doc_id, lower(text) AS norm FROM documents),
-s AS (
-  SELECT doc_id,
-         substring(norm, cast(p AS INT), 8) AS shingle
-  FROM d, unnest(generate_series(1, cast(greatest(length(norm) - 7, 1) AS INT), 4)) AS t(p)
-)
+MINHASH_SIGNATURE_SQL = f"""
+WITH s AS ({_SHINGLES_SQL})
 SELECT doc_id,
-       min(md5(shingle || 's0')) AS mh0,
-       min(md5(shingle || 's1')) AS mh1,
-       min(md5(shingle || 's2')) AS mh2,
-       min(md5(shingle || 's3')) AS mh3
+       {", ".join(f"min(md5(shingle || '{s_}')) AS mh{i}"
+                  for i, s_ in enumerate(_SALTS))}
 FROM s GROUP BY doc_id
 """
 
@@ -731,53 +759,50 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 
 
 # ---------------------------------------------------------------- similarity
-def knn_cosine(spark, sf_dir, n_queries: int = 5, k: int = 3):
+# knn_cosine / knn_ivf defaults: the first KNN_QUERIES vectors query their
+# KNN_K nearest neighbours
+KNN_QUERIES = 5
+KNN_K = 3
+
+
+def _knn_top(scored: DataFrame, k: int) -> DataFrame:
+    """(q_vec_id, vec_id, cos) -> the k nearest (q_vec_id, nn_vec_id, rnk)."""
+    return _top_k(scored, "q_vec_id", "cos", "vec_id", k).select(
+        "q_vec_id", F.col("vec_id").alias("nn_vec_id"), "rnk"
+    )
+
+
+def _knn_top_sql(k: int) -> str:
+    """DuckDB twin of _knn_top over a ``scored`` CTE."""
+    return (f"SELECT q_vec_id, vec_id AS nn_vec_id, rnk\n"
+            f"FROM {_top_k_sql('scored', 'q_vec_id', 'cos', 'vec_id', k)}")
+
+
+def knn_cosine(spark, sf_dir, n_queries: int = KNN_QUERIES, k: int = KNN_K):
     """Brute-force cosine top-k: broadcast the tiny query side against the
-    full embedding table; rank by cosine (computed in double, sequential
+    full embedding table; rank by _cosine (computed in double, sequential
     sum — bit-identical to the DuckDB formulation). IDs+rank output only,
     so float rounding can't flip the value hash."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv")
     )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, x: acc + x * x))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_vec_id"))
-        .select("q_vec_id", "vec_id", (dot / (nq * nv)).alias("cos"))
+        .select("q_vec_id", "vec_id", _cosine("qv", "v").alias("cos"))
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_vec_id", F.col("vec_id").alias("nn_vec_id"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _knn_top(scored, k)
 
 
-KNN_COSINE_SQL = """
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-q AS (SELECT vec_id AS q_vec_id, v AS qv FROM e WHERE vec_id < 5),
+KNN_COSINE_SQL = f"""
+WITH e AS ({_EMB_SQL}),
+q AS (SELECT vec_id AS q_vec_id, v AS qv FROM e WHERE vec_id < {KNN_QUERIES}),
 scored AS (
-  SELECT q.q_vec_id, e.vec_id,
-         list_sum(list_transform(list_zip(q.qv, e.v), p -> p[1] * p[2]))
-           / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))
-              * sqrt(list_sum(list_transform(e.v, x -> x * x)))) AS cos
+  SELECT q.q_vec_id, e.vec_id, {_cosine_sql("q.qv", "e.v")} AS cos
   FROM e CROSS JOIN q WHERE e.vec_id <> q.q_vec_id
 )
-SELECT q_vec_id, vec_id AS nn_vec_id, cast(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, vec_id) AS rnk
-      FROM scored)
-WHERE rnk <= 3
+{_knn_top_sql(KNN_K)}
 """
 
 
@@ -871,14 +896,12 @@ def dbc2sbc_norm(spark, sf_dir):
     ideographic-space quirk keeps U+3000 unmapped — see decoders.dbc2sbc)."""
     return _docs(spark, sf_dir).select(
         "doc_id",
-        F.substring(F.translate(F.col("text"), _FW_SRC, _FW_DST), 1, 80).alias("norm80"),
+        F.substring(dbc2sbc_col(F.col("text")), 1, 80).alias("norm80"),
     )
 
 
 DBC2SBC_SQL = f"""
-SELECT doc_id,
-       substring(translate(text, '{_FW_SRC}', '{_FW_DST.replace("'", "''")}'),
-                 1, 80) AS norm80
+SELECT doc_id, substring({dbc2sbc_sql("text")}, 1, 80) AS norm80
 FROM documents
 """
 
@@ -964,14 +987,19 @@ FROM votes GROUP BY doc_id
 """
 
 
-def emb_near_dup(spark, sf_dir, threshold: float = 0.95, n_bits: int = 6,
+EMB_NEAR_DUP_BITS = 6
+EMB_NEAR_DUP_MIN_COS = 0.95
+
+
+def emb_near_dup(spark, sf_dir, threshold: float = EMB_NEAR_DUP_MIN_COS,
                  exhaustive: bool = False):
     """Embedding-cosine near-duplicate pairs, candidates->verify (the
-    100 TB shape): candidate pairs share a sign-bit band over dims 1-6 OR
-    dims 7-12 (two redundant bands — near-identical vectors agree on almost
-    every coordinate sign, so OR-ing bands keeps recall high); exact cosine
-    runs on band-colliding pairs only. Bucketed self-joins, no crossJoin;
-    skewed buckets are AQE-handled like near_dup_pairs.
+    100 TB shape): candidate pairs share a _sign_band over the first
+    EMB_NEAR_DUP_BITS dims OR the next EMB_NEAR_DUP_BITS (two redundant
+    bands — near-identical vectors agree on almost every coordinate sign,
+    so OR-ing bands keeps recall high); _cosine runs on band-colliding
+    pairs only and keeps those above ``threshold``. Bucketed self-joins,
+    no crossJoin; skewed buckets are AQE-handled like near_dup_pairs.
 
     Recall contract: approximate. A true near-duplicate pair whose vectors
     straddle zero in BOTH band windows is not generated (standard LSH
@@ -980,11 +1008,10 @@ def emb_near_dup(spark, sf_dir, threshold: float = 0.95, n_bits: int = 6,
     vec_a < vec_b pair set (a deliberate O(n^2) cross join — correct, and
     only viable on small/pre-filtered inputs; the default banded path is the
     100 TB shape and is the one plan-gated against cartesian products)."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    eb = e.withColumn("b1", _sign_band(0, n_bits)).withColumn(
-        "b2", _sign_band(n_bits, n_bits)
+    e = _emb(spark, sf_dir)
+    bits = EMB_NEAR_DUP_BITS
+    eb = e.withColumn("b1", _sign_band(0, bits)).withColumn(
+        "b2", _sign_band(bits, bits)
     )
 
     def band_pairs(col):
@@ -1004,31 +1031,22 @@ def emb_near_dup(spark, sf_dir, threshold: float = 0.95, n_bits: int = 6,
         cand = band_pairs("b1").unionByName(band_pairs("b2")).dropDuplicates(
             ["vec_a", "vec_b"]
         )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(F.aggregate("va", F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate("vb", F.lit(0.0), lambda acc, x: acc + x * x))
     return (
-        cand.select("vec_a", "vec_b", (dot / (na * nb)).alias("cos"))
+        cand.select("vec_a", "vec_b", _cosine("va", "vb").alias("cos"))
         .filter(F.col("cos") > threshold)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
     )
 
 
-EMB_NEAR_DUP_SQL = """
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+def emb_near_dup_sql(threshold: float = EMB_NEAR_DUP_MIN_COS) -> str:
+    """Oracle SQL for the banded emb_near_dup at ``threshold``, generated
+    from the same band width and rules."""
+    bits = EMB_NEAR_DUP_BITS
+    return f"""
+WITH e AS ({_EMB_SQL}),
 eb AS (
-  SELECT vec_id, v,
-         coalesce(cast(v[1] > 0 AS INT), 9) || coalesce(cast(v[2] > 0 AS INT), 9)
-         || coalesce(cast(v[3] > 0 AS INT), 9) || coalesce(cast(v[4] > 0 AS INT), 9)
-         || coalesce(cast(v[5] > 0 AS INT), 9) || coalesce(cast(v[6] > 0 AS INT), 9) AS b1,
-         coalesce(cast(v[7] > 0 AS INT), 9) || coalesce(cast(v[8] > 0 AS INT), 9)
-         || coalesce(cast(v[9] > 0 AS INT), 9) || coalesce(cast(v[10] > 0 AS INT), 9)
-         || coalesce(cast(v[11] > 0 AS INT), 9) || coalesce(cast(v[12] > 0 AS INT), 9) AS b2
+  SELECT vec_id, v, {_sign_band_sql(0, bits)} AS b1,
+         {_sign_band_sql(bits, bits)} AS b2
   FROM e
 ),
 cand AS (
@@ -1037,22 +1055,23 @@ cand AS (
   UNION
   SELECT a.vec_id, b.vec_id, a.v, b.v
   FROM eb a JOIN eb b ON a.b2 = b.b2 AND a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b,
-       round(list_sum(list_transform(list_zip(va, vb), p -> p[1] * p[2]))
-             / (sqrt(list_sum(list_transform(va, x -> x * x)))
-                * sqrt(list_sum(list_transform(vb, x -> x * x)))), 6) AS cos
-FROM cand
-WHERE list_sum(list_transform(list_zip(va, vb), p -> p[1] * p[2]))
-      / (sqrt(list_sum(list_transform(va, x -> x * x)))
-         * sqrt(list_sum(list_transform(vb, x -> x * x)))) > 0.95
+),
+scored AS (SELECT vec_a, vec_b, {_cosine_sql("va", "vb")} AS cos FROM cand)
+SELECT vec_a, vec_b, round(cos, 6) AS cos FROM scored WHERE cos > {threshold}
 """
 
 
+EMB_NEAR_DUP_SQL = emb_near_dup_sql()
+
+
 # ------------------------------------------------- ngram-jaccard verify stage
-def ngram_jaccard_pairs(spark, sf_dir, min_jaccard: float = 0.3):
+NGRAM_MIN_JACCARD = 0.3
+
+
+def ngram_jaccard_pairs(spark, sf_dir):
     """Candidate pairs from the MinHash bands (near_dup_pairs), verified by
-    exact Jaccard over distinct 8-gram (stride-4) shingles. The two-stage
+    exact Jaccard over distinct 8-gram (stride-4) shingles (_shingle_col);
+    pairs with Jaccard >= NGRAM_MIN_JACCARD are kept. The two-stage
     candidates->verify shape is the 100 TB pattern: the exact-intersection
     join runs only on band-colliding pairs, never all-pairs."""
     cand = near_dup_pairs(spark, sf_dir)
@@ -1068,13 +1087,7 @@ def ngram_jaccard_pairs(spark, sf_dir, min_jaccard: float = 0.3):
         _scan_parallel(_docs(spark, sf_dir).select("doc_id", "text"))
         .select("doc_id", F.lower(F.col("text")).alias("norm"))
         .join(cand_docs, "doc_id", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr("transform(sequence(1, greatest(length(norm) - 7, 1), 4),"
-                       " p -> substring(norm, p, 8))")
-            ).alias("shingle"),
-        )
+        .select("doc_id", F.explode(_shingle_col()).alias("shingle"))
         .distinct()
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -1095,17 +1108,13 @@ def ngram_jaccard_pairs(spark, sf_dir, min_jaccard: float = 0.3):
                 F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
+        .filter(F.col("jaccard") >= NGRAM_MIN_JACCARD)
     )
 
 
 NGRAM_JACCARD_SQL = f"""
 WITH cand AS ({NEAR_DUP_PAIRS_SQL}),
-sh AS (
-  SELECT DISTINCT doc_id, substring(norm, cast(p AS INT), 8) AS shingle
-  FROM (SELECT doc_id, lower(text) AS norm FROM documents) d,
-       unnest(generate_series(1, cast(greatest(length(norm) - 7, 1) AS INT), 4)) AS t(p)
-),
+sh AS (SELECT DISTINCT * FROM ({_SHINGLES_SQL})),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
 inter AS (
   SELECT c.doc_a, c.doc_b, count(*) AS inter
@@ -1119,27 +1128,30 @@ SELECT i.doc_a, i.doc_b,
 FROM inter i
 JOIN sizes sa ON sa.doc_id = i.doc_a
 JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE i.inter / cast(sa.n + sb.n - i.inter AS DOUBLE) >= 0.3
+WHERE i.inter / cast(sa.n + sb.n - i.inter AS DOUBLE) >= {NGRAM_MIN_JACCARD}
 """
 
 
 # ------------------------------------------------- IVF/LSH-bucketed ANN
-def _mask_bits(mask: int, n_bits: int) -> list[int]:
+IVF_BITS = 6
+
+
+def _mask_bits(mask: int) -> list[int]:
     """Ascending bit positions set in mask — the oracle SQL's probe-score
     summation order. knn_ivf sums |qv[p]| in the same ascending order from
     0.0, so the margin sums are bit-identical IEEE doubles."""
-    return [p for p in range(n_bits) if mask >> p & 1]
+    return [p for p in range(IVF_BITS) if mask >> p & 1]
 
 
-def knn_ivf(spark, sf_dir, n_queries: int = 5, k: int = 3, n_bits: int = 6,
+def knn_ivf(spark, sf_dir, n_queries: int = KNN_QUERIES, k: int = KNN_K,
             n_probes: int = 32):
-    """Scale-path ANN: sign-bit bucketing (axis-aligned LSH) over the first
-    n_bits dims -> exact cosine only within the probed buckets.
+    """Scale-path ANN: sign-bit bucketing (axis-aligned LSH, _sign_band)
+    over the first IVF_BITS dims -> _cosine only within the probed buckets.
 
     MARGIN-ORDERED MULTI-PROBE (the query-adaptive schedule of Lv et al.,
     "Multi-Probe LSH", VLDB'07): a near neighbor most likely lands in a
     bucket that differs from the query's in the bits whose coordinates sit
-    CLOSEST to the hyperplane, so each query ranks all 2^n_bits flip masks
+    CLOSEST to the hyperplane, so each query ranks all 2^IVF_BITS flip masks
     by margin score = sum of |qv[bit]| over flipped bits (own bucket scores
     0 and is always probed first) and probes its n_probes best. The mask
     ranking happens entirely on the broadcast (tiny) query side; the big
@@ -1157,34 +1169,24 @@ def knn_ivf(spark, sf_dir, n_queries: int = 5, k: int = 3, n_bits: int = 6,
     is what >= 0.8 recall costs on structureless vectors; on real
     clustered embeddings the same schedule reaches it with far fewer
     probes — n_probes is the explicit quality/cost knob."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    bucket = F.concat_ws(
-        "", *[
-            (F.element_at("v", i + 1) > 0).cast("int").cast("string")
-            for i in range(n_bits)
-        ]
-    )
-    eb = e.withColumn("bucket", bucket)
+    eb = _emb(spark, sf_dir).withColumn("bucket", _sign_band(0, IVF_BITS))
     q = eb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv"),
         F.col("bucket").alias("qb"),
     )
 
-    # one row per flip mask m in 0 .. 2^n_bits - 1: its margin score (see
+    # one row per flip mask m in 0 .. 2^IVF_BITS - 1: its margin score (see
     # _mask_bits) and pb = qb with the bits of m flipped. One higher-order
-    # expression, not 2^n_bits struct columns: those outgrew Janino's 64 KB
-    # method limit and fell back to interpreted evaluation
+    # expression, not 2^IVF_BITS struct columns: those outgrew Janino's
+    # 64 KB method limit and fell back to interpreted evaluation
     bit = "shiftright(m, p) & 1 = 1"
     probes = q.select(
         "q_vec_id", "qv",
         F.explode(F.expr(
-            f"transform(sequence(0, {(1 << n_bits) - 1}), m -> named_struct("
-            f"'score', aggregate(sequence(0, {n_bits - 1}), 0D, (acc, p) -> "
+            f"transform(sequence(0, {(1 << IVF_BITS) - 1}), m -> named_struct("
+            f"'score', aggregate(sequence(0, {IVF_BITS - 1}), 0D, (acc, p) -> "
             f"acc + IF({bit}, abs(qv[p]), 0D)), "
-            f"'pb', concat_ws('', transform(sequence(0, {n_bits - 1}), p -> "
+            f"'pb', concat_ws('', transform(sequence(0, {IVF_BITS - 1}), p -> "
             f"IF({bit}, IF(substring(qb, p + 1, 1) = '1', '0', '1'), "
             f"substring(qb, p + 1, 1))))))"
         )).alias("pr"),
@@ -1196,41 +1198,27 @@ def knn_ivf(spark, sf_dir, n_queries: int = 5, k: int = 3, n_bits: int = 6,
         .filter(F.col("prnk") <= n_probes)
         .select("q_vec_id", "qv", "pb")
     )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, x: acc + x * x))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
     scored = (
         eb.join(F.broadcast(qp), eb["bucket"] == qp["pb"])
         .filter(F.col("vec_id") != F.col("q_vec_id"))
-        .select("q_vec_id", "vec_id", (dot / (nq * nv)).alias("cos"))
+        .select("q_vec_id", "vec_id", _cosine("qv", "v").alias("cos"))
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_vec_id", F.col("vec_id").alias("nn_vec_id"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _knn_top(scored, k)
 
 
-def knn_ivf_sql(n_queries: int = 5, k: int = 3, n_bits: int = 6,
+def knn_ivf_sql(n_queries: int = KNN_QUERIES, k: int = KNN_K,
                 n_probes: int = 32) -> str:
-    """Oracle SQL GENERATED from the same parameters (and the same
-    _mask_bits margin-summation order) as knn_ivf — changing a default
+    """Oracle SQL GENERATED from the same parameters, constants (and the
+    same _mask_bits margin-summation order) as knn_ivf — changing a default
     changes both sides, so they cannot silently diverge. The two unnest()
     lists in the probes CTE are zipped positionally by DuckDB, mirroring
     the Spark struct array."""
-    bucket = " || ".join(
-        f"cast(v[{i + 1}] > 0 AS INT)" for i in range(n_bits)
-    )
 
     def flipped(mask: int) -> str:
         if mask == 0:
             return "qb"
         parts = []
-        for p in range(n_bits):
+        for p in range(IVF_BITS):
             c = f"substr(qb, {p + 1}, 1)"
             if mask >> p & 1:
                 c = f"(CASE WHEN {c} = '1' THEN '0' ELSE '1' END)"
@@ -1238,20 +1226,17 @@ def knn_ivf_sql(n_queries: int = 5, k: int = 3, n_bits: int = 6,
         return " || ".join(parts)
 
     def margin(mask: int) -> str:
-        bits = _mask_bits(mask, n_bits)
+        bits = _mask_bits(mask)
         if not bits:
             return "cast(0 AS DOUBLE)"
         return " + ".join(f"abs(qv[{p + 1}])" for p in bits)
 
-    pb_list = ",\n           ".join(flipped(m) for m in range(1 << n_bits))
-    score_list = ",\n           ".join(margin(m) for m in range(1 << n_bits))
+    pb_list = ",\n           ".join(flipped(m) for m in range(1 << IVF_BITS))
+    score_list = ",\n           ".join(margin(m) for m in range(1 << IVF_BITS))
     return f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+WITH e AS ({_EMB_SQL}),
 eb AS (
-  SELECT vec_id, v, {bucket} AS bucket
+  SELECT vec_id, v, {_sign_band_sql(0, IVF_BITS)} AS bucket
   FROM e
 ),
 q AS (SELECT vec_id AS q_vec_id, v AS qv, bucket AS qb FROM eb
@@ -1270,18 +1255,11 @@ probes AS (
   WHERE prnk <= {n_probes}
 ),
 scored AS (
-  SELECT p.q_vec_id, eb.vec_id,
-         list_sum(list_transform(list_zip(p.qv, eb.v), z -> z[1] * z[2]))
-           / (sqrt(list_sum(list_transform(p.qv, x -> x * x)))
-              * sqrt(list_sum(list_transform(eb.v, x -> x * x)))) AS cos
+  SELECT p.q_vec_id, eb.vec_id, {_cosine_sql("p.qv", "eb.v")} AS cos
   FROM eb JOIN probes p ON eb.bucket = p.pb
   WHERE eb.vec_id <> p.q_vec_id
 )
-SELECT q_vec_id, vec_id AS nn_vec_id, cast(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (PARTITION BY q_vec_id
-                                   ORDER BY cos DESC, vec_id) AS rnk
-      FROM scored)
-WHERE rnk <= {k}
+{_knn_top_sql(k)}
 """
 
 

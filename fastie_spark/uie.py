@@ -24,7 +24,7 @@ import re
 
 from .chunking import auto_splitter
 from .decoders import dbc2sbc, get_span
-from .linking import _FW_DST, _FW_SRC
+from .linking import dbc2sbc_col
 from .scorer import Vocab, find_all
 from .session import arrow_map_fn
 from .tokenizer import MAX_LENGTH
@@ -325,16 +325,6 @@ def _uie_level_fn(vocab: Vocab, maxp_by_path: dict, max_length: int,
                         UIE_ROW_SCHEMA, process, setup)
 
 
-def _dbc2sbc_col(col):
-    """dbc2sbc as a codegen translate over the 0xFF01-0xFF5E block (U+3000
-    deliberately unmapped — decoders.dbc2sbc quirk). Applied to the WHOLE
-    composed prompt, exactly as the reference dbc2sbc(prompt) call
-    (decode_utils.py:266), so a full-width parent span normalizes too."""
-    from pyspark.sql import functions as F
-
-    return F.translate(col, _FW_SRC, _FW_DST)
-
-
 def run_uie_spark(spark, pages, vocab: Vocab, schema,
                   max_length: int = MAX_LENGTH, split_sentence: bool = False,
                   position_prob: float = POSITION_PROB,
@@ -397,8 +387,9 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
 
     def compose_child_prompt(child_name: str):
         """Column expr for the composed child prompt from F.col('span'),
-        normalized as a whole (reference applies dbc2sbc to the full
-        composed prompt, parent span included)."""
+        normalized as a whole by dbc2sbc_col, exactly as the reference
+        dbc2sbc(prompt) call (decode_utils.py:266), so a full-width parent
+        span normalizes too."""
         if is_english:
             m = _CLS_RE.search(child_name)
             if m:
@@ -409,7 +400,7 @@ def run_uie_spark(spark, pages, vocab: Vocab, schema,
                 raw = F.concat(F.lit(child_name + " of "), F.col("span"))
         else:
             raw = F.concat(F.col("span"), F.lit("的" + child_name))
-        return _dbc2sbc_col(raw)
+        return dbc2sbc_col(raw)
 
     level_dirs: list = []
     # level state: node_by_path for subtree bookkeeping; root prompts are

@@ -38,6 +38,27 @@ def test_normalize_surface(spark):
     assert out == ["abc　x", "mixed"]
 
 
+def test_sign_band_matches_duckdb_on_short_and_null_vectors(spark):
+    """_sign_band and its DuckDB twin _sign_band_sql give the same string
+    for a NULL dim, a vector shorter than the band and a NULL vector: the
+    Spark side must read past-the-end dims as NULL (ANSI mode raises on
+    element_at) and map them to the '9' sentinel like DuckDB does."""
+    import duckdb
+
+    from fastie_spark.linking import _sign_band, _sign_band_sql
+
+    rows = [(0, [0.5, -0.2, None, 0.1]), (1, [0.3, -0.1]), (2, None)]
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    spark_bands = {r["id"]: r["b"] for r in
+                   df.select("id", _sign_band(0, 4).alias("b")).collect()}
+    duck_bands = dict(duckdb.sql(
+        f"SELECT id, {_sign_band_sql(0, 4)} AS b FROM (VALUES "
+        "(0, [0.5, -0.2, NULL, 0.1]::DOUBLE[]), (1, [0.3, -0.1]::DOUBLE[]),"
+        " (2, NULL::DOUBLE[])) t(id, v)"
+    ).fetchall())
+    assert spark_bands == duck_bands == {0: "1091", 1: "1099", 2: "9999"}
+
+
 def test_linking_exact_and_variant(spark, vocab, linker_df, pages_df):
     """Every mention whose surface is a vocab entity links to that entity's
     canonical id (the fixture dictionary covers all vocab surfaces)."""

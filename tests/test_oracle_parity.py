@@ -105,13 +105,12 @@ def test_knn_ivf_multiprobe_recall(spark):
 def test_emb_near_dup_nonempty_at_low_threshold(spark, duck):
     """At threshold 0.95 the sf tables yield 0 pairs, which would hide a
     broken verify stage — re-run the banded candidates->verify at a low
-    threshold and compare against the same SQL with the threshold swapped."""
-    from fastie_spark.textops import EMB_NEAR_DUP_SQL, emb_near_dup
+    threshold and compare against the oracle generated at that threshold."""
+    from fastie_spark.textops import emb_near_dup, emb_near_dup_sql
 
     sdf = emb_near_dup(spark, SF_DIR, threshold=0.2)
     srows = [r.asDict() for r in sdf.collect()]
-    sql = EMB_NEAR_DUP_SQL.replace("0.95", "0.2")
-    ddf = duck.sql(sql)
+    ddf = duck.sql(emb_near_dup_sql(threshold=0.2))
     drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
     assert len(srows) == len(drows) and len(srows) > 0
     cols = sorted(sdf.columns)
