@@ -30,14 +30,12 @@ from fastie_spark.derive import (
 from fastie_spark.fixtures import NER_LABELS, PREDICATES
 from fastie_spark.kg_job import link_and_canonicalize
 from fastie_spark.linking import (
-    EMB_BAND_BITS, EMB_DIMS, _sign_band_sql, _top_k_sql, dbc2sbc_sql,
-    link_triples,
+    EMB_BAND_BITS, EMB_DIMS, EMB_LINK_K, _int_cosine_sql, _top_k_sql,
+    _two_band_join_sql, dbc2sbc_sql, link_triples,
 )
 from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
 from fastie_spark.textops import REGISTRY, track_cache
-
-_LINK_K = 1  # link_embedding keeps each surface's nearest alias
 
 # ---------------------------------------------------------------------------
 # memoized derived-vocab KG pipeline per sf_dir (the driver calls each query
@@ -332,8 +330,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         queries_df = local_df(
             s, [{"surface": v} for v in variants], "surface string"
         )
-        out = link_by_embedding(queries_df, aliases, k=_LINK_K,
-                                prefilter=prefilter)
+        out = link_by_embedding(queries_df, aliases, prefilter=prefilter)
         return out.select(
             "surface", "alias", "canonical_id",
             F.round("cos", 6).alias("cos"),
@@ -789,13 +786,14 @@ JOIN pred_ids p ON p.pred = r.pred
 )
 
 
-# link_embedding: embedding-linking oracle — mirrors
-# linking.surface_embeddings 1:1 (3-gram md5 feature hash into 16 dims,
-# +/-1 contributions), integer dot/norms, cos = dot / sqrt(n2q * n2a) as
-# the identical IEEE double, rank by (cos DESC, alias ASC).
-# _EMB_COMMON_CTE is shared by the exact and banded oracles so the two
-# cannot drift: al = derived aliases, vr = 2nd-char-dropped variants,
-# emb = the sparse integer embeddings.
+# link_embedding / link_embedding_banded: the oracle of
+# linking.link_by_embedding. _EMB_COMMON_CTE mirrors its inputs 1:1:
+# al = derived aliases, vr = 2nd-char-dropped variants, emb =
+# surface_embeddings (3-gram md5 feature hash into EMB_DIMS dims, +/-1
+# contributions). _link_embedding_sql densifies emb once (dense =
+# dense_embeddings: BIGINT lists, zero-norm surfaces dropped) and scores
+# both prefilters through one candidates -> _int_cosine_sql -> re-attach
+# -> top-k body.
 _EMB_COMMON_CTE = r"""
 al AS (SELECT tok AS s, printf('Q%05d', i) AS canonical_id FROM ent),
 vr AS (
@@ -818,75 +816,33 @@ emb AS (
   FROM grams GROUP BY 1, 2
 )"""
 
-_LINK_EMBEDDING_SQL = (
-    "WITH " + _VOCAB_CTE + "," + _EMB_COMMON_CTE + r""",
-n2 AS (SELECT s, cast(sum(v * v) AS BIGINT) AS n2 FROM emb GROUP BY 1),
-dots AS (
-  SELECT eq.s AS qs, ea.s AS als, cast(sum(eq.v * ea.v) AS BIGINT) AS dot
-  FROM emb eq JOIN emb ea ON ea.dim = eq.dim
-  WHERE eq.s IN (SELECT s FROM vr) AND ea.s IN (SELECT s FROM al)
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT v.s AS surface, a.s AS alias, a.canonical_id,
-         coalesce(d.dot, 0) / sqrt(nq.n2 * na.n2) AS cos
-  FROM vr v
-  CROSS JOIN al a
-  LEFT JOIN dots d ON d.qs = v.s AND d.als = a.s
-  JOIN n2 nq ON nq.s = v.s
-  JOIN n2 na ON na.s = a.s
-  WHERE nq.n2 > 0 AND na.n2 > 0
-)
-SELECT surface, alias, canonical_id, round(cos, 6) AS cos
-FROM """ + _top_k_sql("scored", "surface", "cos", "alias", _LINK_K)
-)
 
-
-def _link_embedding_banded_sql() -> str:
-    """Banded-mode oracle, generated from the Spark path's own constants
-    (linking.EMB_DIMS, EMB_BAND_BITS) and its band and top-k rules
-    (_sign_band_sql, _top_k_sql), so the two cannot silently diverge.
-    Mirrors linking._link_by_embedding_banded: densify emb to a BIGINT list
-    v, sign-bit bands b1 = dims [0, bits) / b2 = [bits, 2 * bits),
-    candidates agree on b1 OR b2, integer-exact cosine + rank on
-    candidates only."""
-    dims, bits = range(1, EMB_DIMS + 1), EMB_BAND_BITS
-    vlist = ",\n          ".join(
-        f"cast(coalesce(sum(CASE WHEN dim = {i - 1} THEN v END), 0) AS BIGINT)"
-        for i in dims
-    )
-    n2 = " + ".join(f"v[{i}] * v[{i}]" for i in dims)
-    dot = " + ".join(f"q.v[{i}] * a.v[{i}]" for i in dims)
-    return (
-        "WITH " + _VOCAB_CTE + "," + _EMB_COMMON_CTE + f""",
+def _link_embedding_sql(prefilter: str) -> str:
+    """Oracle SQL for link_embedding(prefilter), generated from linking's
+    constants (EMB_BAND_BITS, EMB_LINK_K) and rule twins
+    (_two_band_join_sql, _int_cosine_sql, _top_k_sql): "exact" pairs every
+    variant with every alias, "band" pairs those agreeing on a sign band."""
+    vec = ",\n         ".join(
+        f"cast(coalesce(sum(CASE WHEN dim = {i} THEN emb.v END), 0) AS BIGINT)"
+        for i in range(EMB_DIMS))
+    cand = (_two_band_join_sql("dq", "da", EMB_BAND_BITS)
+            if prefilter == "band" else "dq l CROSS JOIN da r")
+    return "WITH " + _VOCAB_CTE + "," + _EMB_COMMON_CTE + f""",
 dense AS (
-  SELECT s, [{vlist}] AS v
-  FROM emb GROUP BY s
+  SELECT s, [{vec}] AS v
+  FROM emb GROUP BY s HAVING bool_or(emb.v <> 0)
 ),
-feat AS (
-  SELECT *, {n2} AS n2, {_sign_band_sql(0, bits)} AS b1,
-         {_sign_band_sql(bits, bits)} AS b2
-  FROM dense
-),
-bcand AS (
-  SELECT q.s AS surface, a.s AS als,
-         cast({dot} AS BIGINT) AS dot, q.n2 AS n2q, a.n2 AS n2a
-  FROM feat q JOIN feat a ON (q.b1 = a.b1 OR q.b2 = a.b2)
-  WHERE q.s IN (SELECT s FROM vr) AND a.s IN (SELECT s FROM al)
-    AND q.n2 > 0 AND a.n2 > 0
-),
+dq AS (SELECT s AS surface, v FROM dense WHERE s IN (SELECT s FROM vr)),
+da AS (SELECT s AS alias, v FROM dense WHERE s IN (SELECT s FROM al)),
 scored AS (
-  SELECT c.surface, c.als AS alias, al.canonical_id,
-         c.dot / sqrt(c.n2q * c.n2a) AS cos
-  FROM bcand c JOIN al ON al.s = c.als
+  SELECT l.surface, r.alias, al.canonical_id,
+         {_int_cosine_sql("l.v", "r.v")} AS cos
+  FROM {cand}
+  JOIN al ON al.s = r.alias
 )
 SELECT surface, alias, canonical_id, round(cos, 6) AS cos
-FROM {_top_k_sql("scored", "surface", "cos", "alias", _LINK_K)}
+FROM {_top_k_sql("scored", "surface", "cos", "alias", EMB_LINK_K)}
 """
-    )
-
-
-_LINK_EMBEDDING_BANDED_SQL = _link_embedding_banded_sql()
 
 
 # image_stats / audio_stats: the BinaryType oracles parse the REAL container
@@ -1025,6 +981,6 @@ def oracle_sql() -> dict[str, str]:
     o["event_prf"] = _EVENT_PRF_SQL
     o["image_stats"] = _image_stats_sql()
     o["audio_stats"] = _audio_stats_sql()
-    o["link_embedding"] = _LINK_EMBEDDING_SQL
-    o["link_embedding_banded"] = _LINK_EMBEDDING_BANDED_SQL
+    o["link_embedding"] = _link_embedding_sql("exact")
+    o["link_embedding_banded"] = _link_embedding_sql("band")
     return o

@@ -2,8 +2,8 @@
 ``POST /v1/ie`` endpoint (/root/reference/fastie/api/app.py:65-81,
 request/response shapes from fastie/api/protocol.py:25-78).
 
-``run_ie(spark, texts, task, ...)`` accepts the IECreateParams fields
-(texts, ie_schema, batch_size, max_length) and returns the response dict
+``run_ie(spark, texts, task, ...)`` takes the IECreateParams fields
+(texts, ie_schema, max_length) and returns the response dict
 {id, object, created, model, labels} with the task-prefixed id family of
 protocol.py (ner-/rel-/event-/uie-/cls-) and per-task ``labels`` in the
 reference ``model.predict`` output shapes:
@@ -24,8 +24,9 @@ sorting (the reference iterates Python sets, so its order is
 process-dependent). Inference runs through the same Spark stages as the
 batch job (fused extraction / UIE BFS), so the façade is a capability
 match, not a parallel implementation; for ad-hoc few-text calls the Arrow
-batch is the batching unit (the reference's LitServe batch_size is accepted
-but superseded by Arrow batching, fastie/api/server.py:22-75).
+batch is the batching unit, so the reference's LitServe batch_size
+(fastie/api/server.py:22-75) has no parameter here; the HTTP binding still
+validates the request field.
 """
 
 from __future__ import annotations
@@ -116,7 +117,6 @@ def run_ie(
     task: str = "uie",
     vocab: Vocab | None = None,
     ie_schema=None,
-    batch_size: int = 16,
     max_length: int = MAX_LENGTH,
     is_english: bool = False,
 ) -> dict:

@@ -124,7 +124,8 @@ def link_surfaces(
 # nearest alias by n-gram feature-hash embedding cosine.
 # ---------------------------------------------------------------------------
 EMB_DIMS = 16
-EMB_BAND_BITS = EMB_DIMS // 2  # link_by_embedding's default band width
+EMB_BAND_BITS = EMB_DIMS // 2  # link_by_embedding's band width
+EMB_LINK_K = 1  # link_by_embedding keeps each surface's nearest alias
 
 
 def surface_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
@@ -154,11 +155,17 @@ def surface_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
     )
 
 
+def _n2(v) -> Column:
+    """Integer squared norm of an array<long> column."""
+    return F.aggregate(v, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
+
+
 def dense_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
-    """(s, v: array<long>[EMB_DIMS]) dense vectors from the sparse
+    """(surface_col, v: array<long>[EMB_DIMS]) dense vectors from the sparse
     ``surface_embeddings`` output — absent dims densify to 0, so the
     integers are identical to the sparse formulation and any dot/norm
-    computed from them is bit-exact across engines."""
+    computed from them is bit-exact across engines. Zero-norm surfaces
+    (every dim's gram signs cancel) have no direction and are dropped."""
     sp = surface_embeddings(df, surface_col)
     m = sp.groupBy("s").agg(
         F.map_from_entries(F.collect_list(F.struct("dim", "v"))).alias("m")
@@ -167,13 +174,30 @@ def dense_embeddings(df: DataFrame, surface_col: str) -> DataFrame:
         F.coalesce(F.element_at("m", F.lit(i)), F.lit(0).cast("long"))
         for i in range(EMB_DIMS)
     ])
-    return m.select("s", vec.alias("v"))
+    return m.select(F.col("s").alias(surface_col), vec.alias("v")).filter(
+        _n2("v") > 0)
+
+
+def _int_cosine(a: str, b: str) -> Column:
+    """dot / sqrt(n2_a * n2_b) over two array<long> columns: the dot and
+    both squared norms are INTEGER sums, so the quotient is the same IEEE
+    double in every engine. Twinned by _int_cosine_sql."""
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                      F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return dot / F.sqrt(_n2(a) * _n2(b))
+
+
+def _int_cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of _int_cosine over BIGINT list columns."""
+    n2a, n2b = (f"list_sum(list_transform({c}, x -> x * x))" for c in (a, b))
+    return (f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
+            f" / sqrt({n2a} * {n2b})")
 
 
 def _sign_band(start: int, n_bits: int) -> Column:
     """Sign-bit band over embedding dims [start, start+n_bits) of column
     ``v`` — the axis-aligned analogue of a random-hyperplane LSH band,
-    shared by link_by_embedding, textops.emb_near_dup and textops.knn_ivf.
+    shared by _two_band_join and textops.knn_ivf.
     One character per dim: '1' if v[dim] > 0, '0' if not, '9' if the dim
     is NULL or past the end of the array (or ``v`` itself is NULL).
     ANSI-safe: ``try_element_at`` reads a short vector as NULL dims
@@ -197,6 +221,50 @@ def _sign_band_sql(start: int, n_bits: int) -> str:
     )
 
 
+def _two_band_join(left: DataFrame, right: DataFrame, n_bits: int,
+                   vecs: tuple[str, str]) -> DataFrame:
+    """Sign-band LSH candidates: the pairs of ``left`` x ``right`` rows
+    whose vectors ``v`` agree on band [0, n_bits) OR on band
+    [n_bits, 2*n_bits) (_sign_band), each pair once. Each side is a key
+    column plus ``v`` (the two key names differ); the output is both keys
+    plus the two vectors renamed to ``vecs``.
+
+    ONE equi-join on (band index, band) over band-exploded sides: the
+    index keeps a band-1 value from meeting the same string in band 2,
+    both bands ride one shuffle hash-partitioned by band (or a broadcast,
+    if one side is small), AQE splits a hot band's partition, and no
+    cross product is planned. Twinned by _two_band_join_sql."""
+    def tagged(df: DataFrame, vec: str) -> DataFrame:
+        key = [c for c in df.columns if c != "v"]
+        bands = F.explode(F.array(*[
+            F.struct(F.lit(i + 1).alias("bi"),
+                     _sign_band(i * n_bits, n_bits).alias("band"))
+            for i in range(2)
+        ]))
+        return df.select(*key, F.col("v").alias(vec), bands.alias("bb")).select(
+            *key, vec, F.col("bb.bi").alias("bi"), F.col("bb.band").alias("band")
+        )
+
+    keys = [c for c in left.columns + right.columns if c != "v"]
+    return (
+        tagged(left, vecs[0]).join(tagged(right, vecs[1]), ["bi", "band"])
+        .drop("bi", "band")
+        .dropDuplicates(keys)
+    )
+
+
+def _two_band_join_sql(left: str, right: str, n_bits: int) -> str:
+    """DuckDB twin of _two_band_join: a FROM-clause fragment joining
+    relations ``left`` (aliased l) and ``right`` (aliased r), each with a
+    list column ``v``, on band [0, n_bits) OR band [n_bits, 2*n_bits).
+    One join with an OR condition yields each agreeing pair once."""
+    bands = (f"{_sign_band_sql(0, n_bits)} AS b1, "
+             f"{_sign_band_sql(n_bits, n_bits)} AS b2")
+    return (f"(SELECT *, {bands} FROM {left}) l\n"
+            f"  JOIN (SELECT *, {bands} FROM {right}) r\n"
+            f"    ON (l.b1 = r.b1 OR l.b2 = r.b2)")
+
+
 def _top_k(df: DataFrame, part: str, score: str, tie: str,
            k: int) -> DataFrame:
     """The k best rows per ``part`` by (score DESC, tie ASC), numbered
@@ -217,121 +285,43 @@ def _top_k_sql(src: str, part: str, score: str, tie: str, k: int) -> str:
 
 
 def link_by_embedding(queries: DataFrame, aliases: DataFrame,
-                      k: int = 1, prefilter: str = "exact",
-                      n_bits: int = EMB_BAND_BITS) -> DataFrame:
-    """queries(surface) x aliases(alias, canonical_id) -> top-k nearest
-    aliases per surface by embedding cosine:
+                      prefilter: str = "exact") -> DataFrame:
+    """queries(surface) x aliases(alias, canonical_id) -> the EMB_LINK_K
+    nearest aliases per surface by embedding cosine:
     (surface, alias, canonical_id, cos, rnk).
 
-    Exactness: dot and squared norms are INTEGER sums, so cos =
-    dot / sqrt(n2_q * n2_a) is the same IEEE double in every engine —
-    ordering (cos DESC, alias ASC) is deterministic and oracle-identical.
-    Zero-norm surfaces (gram signs cancel) are unlinkable and dropped.
+    One pipeline for both modes: dense_embeddings of each side (zero-norm
+    surfaces are unlinkable and dropped), candidate pairs, _int_cosine,
+    canonical_id re-attached by alias (1:n-safe), then _top_k by
+    (cos DESC, alias ASC) — deterministic and oracle-identical, because
+    the cosine is bit-exact. ``prefilter`` only picks the candidates:
 
-    Two candidate-generation modes:
-
-    - ``prefilter="exact"``: enumerate every surface x alias pair with a
-      broadcast of the alias side. Exact top-k; cost is
-      |surfaces| x |aliases| — the small-dictionary mode.
-    - ``prefilter="band"``: the 100 TB shape. Candidates are pairs agreeing
-      on a sign-bit LSH band over dense dims [0, n_bits) OR
-      [n_bits, 2*n_bits) (two redundant bands, the textops.emb_near_dup
-      pattern); the integer-exact cosine + top-k runs on colliding pairs
-      only. Both joins are plain equi-joins on the band key, so Catalyst
-      shuffles (or broadcasts, if one side is small) hash-partitioned by
-      band and AQE splits skewed buckets — no cross product anywhere, and
-      a 10^8-alias dictionary never needs to broadcast. Recall contract:
-      approximate — a true nearest alias whose sign pattern differs from
-      the surface in BOTH band windows is not considered (standard LSH
-      trade-off; near-identical n-gram profiles agree on almost every
-      coordinate sign, so top-1 agreement with exact mode stays high —
-      pytest-gated in tests/test_linking_graph.py)."""
+    - ``"exact"``: every surface x alias pair, the alias side broadcast.
+      Exact top-k; cost is |surfaces| x |aliases| — the small-dictionary
+      mode.
+    - ``"band"``: the 100 TB shape. Candidates are the _two_band_join
+      pairs over EMB_BAND_BITS-dim sign bands — plain equi-joins, so a
+      10^8-alias dictionary never needs to broadcast and no cross product
+      is planned. Recall contract: approximate — a true nearest alias
+      whose sign pattern differs from the surface in BOTH band windows is
+      not considered (standard LSH trade-off; near-identical n-gram
+      profiles agree on almost every coordinate sign, so top-1 agreement
+      with exact mode stays high — pytest-gated in
+      tests/test_linking_graph.py)."""
     if prefilter not in ("exact", "band"):
         raise ValueError(f"unknown prefilter: {prefilter!r}")
-    q = queries.select(F.col("surface")).distinct()
-    a = aliases.select("alias", "canonical_id").distinct()
+    dq = dense_embeddings(queries.select("surface").distinct(), "surface")
+    da = dense_embeddings(aliases.select("alias").distinct(), "alias")
     if prefilter == "band":
-        return _link_by_embedding_banded(q, a, k, n_bits)
-    eq = surface_embeddings(q, "surface")
-    ea = surface_embeddings(a, "alias")
-    n2q = eq.groupBy("s").agg(F.sum(F.col("v") * F.col("v")).alias("n2q"))
-    n2a = ea.groupBy("s").agg(F.sum(F.col("v") * F.col("v")).alias("n2a"))
-    dots = (
-        eq.alias("q")
-        .join(F.broadcast(ea.alias("a")), F.col("q.dim") == F.col("a.dim"))
-        .groupBy(F.col("q.s").alias("qs"), F.col("a.s").alias("as_"))
-        .agg(F.sum(F.col("q.v") * F.col("a.v")).cast("long").alias("dot"))
+        cand = _two_band_join(dq, da, EMB_BAND_BITS, ("vq", "va"))
+    else:
+        cand = dq.withColumnRenamed("v", "vq").crossJoin(
+            F.broadcast(da.withColumnRenamed("v", "va")))
+    a = aliases.select("alias", "canonical_id").distinct()
+    scored = cand.join(a, "alias").select(
+        "surface", "alias", "canonical_id", _int_cosine("vq", "va").alias("cos")
     )
-    pairs = (
-        q.select(F.col("surface"))
-        .crossJoin(F.broadcast(a))
-        .join(
-            dots,
-            (F.col("surface") == F.col("qs")) & (F.col("alias") == F.col("as_")),
-            "left",
-        )
-        .join(n2q.select(F.col("s").alias("surface"), "n2q"), "surface")
-        .join(F.broadcast(n2a.select(F.col("s").alias("alias"), "n2a")), "alias")
-        .filter((F.col("n2q") > 0) & (F.col("n2a") > 0))
-        .select(
-            "surface", "alias", "canonical_id",
-            (F.coalesce(F.col("dot"), F.lit(0))
-             / F.sqrt(F.col("n2q") * F.col("n2a"))).alias("cos"),
-        )
-    )
-    return _top_k(pairs, "surface", "cos", "alias", k)
-
-
-def _link_by_embedding_banded(q: DataFrame, a: DataFrame, k: int,
-                              n_bits: int) -> DataFrame:
-    """Banded candidates -> integer-exact verify. See link_by_embedding."""
-    n2 = F.aggregate("v", F.lit(0).cast("long"), lambda acc, x: acc + x * x)
-    dq = (
-        dense_embeddings(q, "surface")
-        .select(F.col("s").alias("surface"), F.col("v").alias("vq"),
-                n2.alias("n2q"), _sign_band(0, n_bits).alias("b1"),
-                _sign_band(n_bits, n_bits).alias("b2"))
-        .filter(F.col("n2q") > 0)
-    )
-    da = (
-        dense_embeddings(a.select("alias"), "alias")
-        .select(F.col("s").alias("alias"), F.col("v").alias("va"),
-                n2.alias("n2a"), _sign_band(0, n_bits).alias("b1"),
-                _sign_band(n_bits, n_bits).alias("b2"))
-        .filter(F.col("n2a") > 0)
-    )
-
-    # ONE equi-join on (band_index, band) over band-exploded sides — the
-    # dense-embedding aggregations feed a single join branch instead of
-    # being re-evaluated per band (code-review fix), and the join key
-    # includes the band index so b1 values never collide with b2 values
-    def explode_bands(df: DataFrame, keep: list) -> DataFrame:
-        bands = F.explode(F.array(
-            F.struct(F.lit(1).alias("bi"), F.col("b1").alias("band")),
-            F.struct(F.lit(2).alias("bi"), F.col("b2").alias("band")),
-        ))
-        return df.select(*keep, bands.alias("bb")).select(
-            *keep, F.col("bb.bi").alias("bi"), F.col("bb.band").alias("band")
-        )
-
-    cand = (
-        explode_bands(dq, ["surface", "vq", "n2q"])
-        .join(explode_bands(da, ["alias", "va", "n2a"]), ["bi", "band"])
-        .drop("bi", "band")
-        .dropDuplicates(["surface", "alias"])
-    )
-    dot = F.aggregate(
-        F.zip_with("vq", "va", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(a, "alias")  # re-attach canonical_id (1:n-safe, like exact)
-        .select(
-            "surface", "alias", "canonical_id",
-            (dot / F.sqrt(F.col("n2q") * F.col("n2a"))).alias("cos"),
-        )
-    )
-    return _top_k(scored, "surface", "cos", "alias", k)
+    return _top_k(scored, "surface", "cos", "alias", EMB_LINK_K)
 
 
 def link_mentions(mentions: DataFrame, linker: DataFrame,

@@ -53,11 +53,9 @@ TRIPLE_COLS = ["url", "subj", "pred", "obj"]
 EVENT_COLS = ["url", "event_type", "trigger", "role", "argument", "event_key"]
 
 
-def repartition_by_url(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
     """Explicit partitioning by xxhash64(url) (input_hint)."""
-    if num_partitions:
-        return df.repartition(num_partitions, F.xxhash64("url"))
-    return df.repartition(F.xxhash64("url"))
+    return df.repartition(num_partitions, F.xxhash64("url"))
 
 
 def _event_key(url: str, etype: str, trigger: str, args: list) -> str:

@@ -116,8 +116,10 @@ def create_server(
                     raise ValueError("texts must be a string or list of strings")
                 # wrong-typed numeric fields ({"max_length": "512"}) must be
                 # a 400 here, not a TypeError inside run_ie/Spark (which
-                # would drop the connection with an unhandled exception)
-                batch_size = int(req.get("batch_size", 16))
+                # would drop the connection with an unhandled exception);
+                # batch_size is validated only: Arrow batches are the
+                # batching unit (api.py)
+                int(req.get("batch_size", 16))
                 max_length = int(req.get("max_length", MAX_LENGTH))
             except (json.JSONDecodeError, KeyError, ValueError,
                     TypeError, AttributeError) as ex:
@@ -133,7 +135,6 @@ def create_server(
                     task=task,
                     vocab=vocab,
                     ie_schema=req.get("ie_schema", default_schema),
-                    batch_size=batch_size,
                     max_length=max_length,
                     is_english=is_english,
                 )

@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from .derive import TOKEN_RE
 from .linking import (_sign_band, _sign_band_sql, _top_k, _top_k_sql,
-                      dbc2sbc_col, dbc2sbc_sql)
+                      _two_band_join, _two_band_join_sql, dbc2sbc_col,
+                      dbc2sbc_sql)
 from .tokenizer import MAX_LENGTH
 
 CHUNK = MAX_LENGTH - 2  # the reference chunk width
@@ -106,13 +107,20 @@ _EMB_SQL = """SELECT vec_id, list_transform(embedding, x -> cast(x AS DOUBLE)) A
 
 def _cosine(a: str, b: str) -> Column:
     """Cosine of two array<double> columns: sequential double sums from
-    0.0, so the value is bit-identical to _cosine_sql in DuckDB."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na, nb = (F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
-              for c in (a, b))
-    return dot / (na * nb)
+    0.0, so the value is bit-identical to _cosine_sql in DuckDB.
+    Degenerate vectors follow DuckDB's rule: each sum is SQL ``sum`` (a
+    NULL term — a NULL element, or the tail of the longer vector that
+    zip_with pads with NULL — adds nothing; no non-NULL term gives NULL),
+    and a zero norm scores NULL through try_divide instead of raising
+    DIVIDE_BY_ZERO under ANSI. Both engines rank NULL last under DESC."""
+    def total(arr: Column) -> Column:
+        return F.aggregate(
+            arr, F.lit(None).cast("double"),
+            lambda acc, x: F.coalesce(F.coalesce(acc, F.lit(0.0)) + x, acc),
+        )
+    dot = total(F.zip_with(a, b, lambda x, y: x * y))
+    na, nb = (F.sqrt(total(F.transform(c, lambda x: x * x))) for c in (a, b))
+    return F.try_divide(dot, na * nb)
 
 
 def _cosine_sql(a: str, b: str) -> str:
@@ -994,12 +1002,13 @@ EMB_NEAR_DUP_MIN_COS = 0.95
 def emb_near_dup(spark, sf_dir, threshold: float = EMB_NEAR_DUP_MIN_COS,
                  exhaustive: bool = False):
     """Embedding-cosine near-duplicate pairs, candidates->verify (the
-    100 TB shape): candidate pairs share a _sign_band over the first
-    EMB_NEAR_DUP_BITS dims OR the next EMB_NEAR_DUP_BITS (two redundant
-    bands — near-identical vectors agree on almost every coordinate sign,
-    so OR-ing bands keeps recall high); _cosine runs on band-colliding
-    pairs only and keeps those above ``threshold``. Bucketed self-joins,
-    no crossJoin; skewed buckets are AQE-handled like near_dup_pairs.
+    100 TB shape): the candidates are linking._two_band_join's pairs,
+    vectors sharing a _sign_band over the first EMB_NEAR_DUP_BITS dims OR
+    the next EMB_NEAR_DUP_BITS (two redundant bands — near-identical
+    vectors agree on almost every coordinate sign, so OR-ing bands keeps
+    recall high); _cosine runs on band-colliding pairs only and keeps
+    those above ``threshold``. One band-bucketed self-join, no crossJoin;
+    skewed buckets are AQE-handled like near_dup_pairs.
 
     Recall contract: approximate. A true near-duplicate pair whose vectors
     straddle zero in BOTH band windows is not generated (standard LSH
@@ -1009,30 +1018,16 @@ def emb_near_dup(spark, sf_dir, threshold: float = EMB_NEAR_DUP_MIN_COS,
     only viable on small/pre-filtered inputs; the default banded path is the
     100 TB shape and is the one plan-gated against cartesian products)."""
     e = _emb(spark, sf_dir)
-    bits = EMB_NEAR_DUP_BITS
-    eb = e.withColumn("b1", _sign_band(0, bits)).withColumn(
-        "b2", _sign_band(bits, bits)
-    )
-
-    def band_pairs(col):
-        a = eb.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-                      F.col(col).alias("band"))
-        b = eb.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-                      F.col(col).alias("band"))
-        return a.join(b, ["band"]).filter(
-            F.col("vec_a") < F.col("vec_b")
-        ).select("vec_a", "vec_b", "va", "vb")
-
+    a = e.withColumnRenamed("vec_id", "vec_a")
+    b = e.withColumnRenamed("vec_id", "vec_b")
     if exhaustive:
-        a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-        b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-        cand = a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b"))
+        cand = a.withColumnRenamed("v", "va").crossJoin(
+            b.withColumnRenamed("v", "vb"))
     else:
-        cand = band_pairs("b1").unionByName(band_pairs("b2")).dropDuplicates(
-            ["vec_a", "vec_b"]
-        )
+        cand = _two_band_join(a, b, EMB_NEAR_DUP_BITS, ("va", "vb"))
     return (
-        cand.select("vec_a", "vec_b", _cosine("va", "vb").alias("cos"))
+        cand.filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", _cosine("va", "vb").alias("cos"))
         .filter(F.col("cos") > threshold)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
     )
@@ -1040,21 +1035,13 @@ def emb_near_dup(spark, sf_dir, threshold: float = EMB_NEAR_DUP_MIN_COS,
 
 def emb_near_dup_sql(threshold: float = EMB_NEAR_DUP_MIN_COS) -> str:
     """Oracle SQL for the banded emb_near_dup at ``threshold``, generated
-    from the same band width and rules."""
-    bits = EMB_NEAR_DUP_BITS
+    from the same band width and rules (_two_band_join_sql, _cosine_sql)."""
     return f"""
 WITH e AS ({_EMB_SQL}),
-eb AS (
-  SELECT vec_id, v, {_sign_band_sql(0, bits)} AS b1,
-         {_sign_band_sql(bits, bits)} AS b2
-  FROM e
-),
 cand AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.v AS va, b.v AS vb
-  FROM eb a JOIN eb b ON a.b1 = b.b1 AND a.vec_id < b.vec_id
-  UNION
-  SELECT a.vec_id, b.vec_id, a.v, b.v
-  FROM eb a JOIN eb b ON a.b2 = b.b2 AND a.vec_id < b.vec_id
+  SELECT l.vec_id AS vec_a, r.vec_id AS vec_b, l.v AS va, r.v AS vb
+  FROM {_two_band_join_sql("e", "e", EMB_NEAR_DUP_BITS)}
+  WHERE l.vec_id < r.vec_id
 ),
 scored AS (SELECT vec_a, vec_b, {_cosine_sql("va", "vb")} AS cos FROM cand)
 SELECT vec_a, vec_b, round(cos, 6) AS cos FROM scored WHERE cos > {threshold}
@@ -1071,7 +1058,8 @@ NGRAM_MIN_JACCARD = 0.3
 def ngram_jaccard_pairs(spark, sf_dir):
     """Candidate pairs from the MinHash bands (near_dup_pairs), verified by
     exact Jaccard over distinct 8-gram (stride-4) shingles (_shingle_col);
-    pairs with Jaccard >= NGRAM_MIN_JACCARD are kept. The two-stage
+    pairs whose unrounded Jaccard is >= NGRAM_MIN_JACCARD are kept (as in
+    NGRAM_JACCARD_SQL; only the output is rounded to 6 places). The two-stage
     candidates->verify shape is the 100 TB pattern: the exact-intersection
     join runs only on band-colliding pairs, never all-pairs."""
     cand = near_dup_pairs(spark, sf_dir)
@@ -1100,15 +1088,11 @@ def ngram_jaccard_pairs(spark, sf_dir):
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jaccard = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     return (
         inter.join(na, "doc_a").join(nb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= NGRAM_MIN_JACCARD)
+        .filter(jaccard >= NGRAM_MIN_JACCARD)
+        .select("doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard"))
     )
 
 

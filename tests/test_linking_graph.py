@@ -243,9 +243,9 @@ def test_link_embedding_banded_recall(spark):
     queries = local_df(spark, [{"surface": v} for v in variants],
                        "surface string")
     exact = {r["surface"]: r["alias"]
-             for r in link_by_embedding(queries, aliases, k=1).collect()}
+             for r in link_by_embedding(queries, aliases).collect()}
     band = {r["surface"]: r["alias"]
-            for r in link_by_embedding(queries, aliases, k=1,
+            for r in link_by_embedding(queries, aliases,
                                        prefilter="band").collect()}
     agree = sum(1 for s in exact if band.get(s) == exact[s])
     assert agree / len(exact) >= 0.8, (agree, len(exact))

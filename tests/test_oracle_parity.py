@@ -5,6 +5,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from fastie_spark.textops import REGISTRY
 from tools_oracle_check import norm
@@ -231,3 +232,41 @@ def test_curate_corpus_null_text_parity(spark, tmp_path):
     # the two NULL docs must not be merged into one near-dup cluster
     by_id = {r["doc_id"]: r for r in srows}
     assert by_id[4]["cluster_id"] != by_id[5]["cluster_id"]
+
+
+
+def test_cosine_degenerate_vectors_match_duckdb(spark, tmp_path):
+    """_cosine follows _cosine_sql on degenerate embeddings: a NULL
+    element and the tail of a longer vector add nothing, and a zero norm
+    scores NULL (ranked last) instead of raising DIVIDE_BY_ZERO. Checked
+    per pair and through knn_cosine against its oracle."""
+    from fastie_spark.session import local_df
+    from fastie_spark.textops import (_EMB_SQL, KNN_COSINE_SQL, _cosine,
+                                      _cosine_sql, _emb, knn_cosine)
+
+    vecs = [[0.0, 0.0, 0.0], [1.0, None, 2.0], [1.0, 2.0], [1.0, 1.0, 1.0],
+            [0.5, -1.0, 0.25], [2.0, 1.0, -1.0], [-1.0, 0.5, 1.5]]
+    d = str(tmp_path)
+    local_df(spark, list(enumerate(vecs)),
+             "vec_id long, embedding array<float>").write.parquet(
+        f"{d}/embeddings.parquet")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * "
+            f"FROM read_parquet('{d}/embeddings.parquet/*.parquet')")
+
+    e = _emb(spark, d)
+    pairs = e.select(F.col("vec_id").alias("a"), F.col("v").alias("va")).crossJoin(
+        e.select(F.col("vec_id").alias("b"), F.col("v").alias("vb")))
+    spark_cos = {(r["a"], r["b"]): r["cos"] for r in
+                 pairs.select("a", "b", _cosine("va", "vb").alias("cos")).collect()}
+    duck_cos = {(a, b): c for a, b, c in con.sql(
+        f"WITH e AS ({_EMB_SQL}) SELECT x.vec_id, y.vec_id, "
+        f"{_cosine_sql('x.v', 'y.v')} FROM e x, e y").fetchall()}
+    assert spark_cos == duck_cos
+    assert spark_cos[(0, 3)] is None and spark_cos[(1, 3)] is not None
+
+    sdf = knn_cosine(spark, d)
+    ddf = con.sql(KNN_COSINE_SQL)
+    cols = sorted(sdf.columns)
+    assert norm([r.asDict() for r in sdf.collect()], cols) == norm(
+        [dict(zip(ddf.columns, r)) for r in ddf.fetchall()], cols)

@@ -85,7 +85,7 @@ def test_banded_linker_aqe_skew_split_engages(spark, skew_confs):
           "canonical_id": f"Q{j}"} for j in range(60)],
         "alias string, canonical_id string",
     )
-    df = link_by_embedding(q, a, k=1, prefilter="band")
+    df = link_by_embedding(q, a, prefilter="band")
     skew_rows = sorted(
         (r["surface"], r["alias"], r["canonical_id"], r["rnk"])
         for r in df.collect()
@@ -102,7 +102,7 @@ def test_banded_linker_aqe_skew_split_engages(spark, skew_confs):
         spark.conf.unset(k)
     plain = sorted(
         (r["surface"], r["alias"], r["canonical_id"], r["rnk"])
-        for r in link_by_embedding(q, a, k=1, prefilter="band").collect()
+        for r in link_by_embedding(q, a, prefilter="band").collect()
     )
     assert skew_rows == plain
 
